@@ -1,7 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.data.Page
 
@@ -16,6 +19,11 @@ import graft.data.Page
   *   <dir>/docstats/shard=<s>/                        (doc_id, url, doclen)
   *   <dir>/corpus/shard=<s>/                          (n_docs, sum_dl) per shard
   *   <dir>/manifest/                                  (append-only commit log)
+  *   <dir>/params/                                    (layout BuildParams)
+  *
+  * Manifest, params and corpus are read in one place, [[snapshot]], with
+  * their declared schemas; builds, segment appends and query handles all
+  * start from its committed view.
   *
   * Resumability (north rule): the shard is the unit of work; a shard is
   * done iff the manifest holds a committed row for it. `build` skips
@@ -43,14 +51,74 @@ object InvertedIndex {
   private def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
-  /** Shards already committed according to the manifest. (Hadoop FS API —
-    * works on HDFS/object stores, not just file://.) */
-  def committedShards(spark: SparkSession, dir: String): Set[Int] = {
-    import spark.implicits._
-    if (!exists(spark, manifestPath(dir))) Set.empty
-    else spark.read.parquet(manifestPath(dir))
-      .filter($"committed").select($"partition_id").as[Int].collect().toSet
+  /** Declared read schemas of the tables the engine writes itself. Reading
+    * with them skips Parquet schema inference, which is a Spark job per read
+    * (a footer scan). Partition columns (`shard`, `bucket`) are typed by the
+    * declared schema too. */
+  private val postingsSchema: StructType =
+    Encoders.product[PostingBlock].schema.add("bucket", IntegerType)
+  private val docStatSchema: StructType = Encoders.product[DocStat].schema
+
+  /** Every row of a small engine-written table (manifest, params, corpus),
+    * read with its row type's declared schema: one Spark job, no schema
+    * inference. A table that does not exist yet has no rows. (Hadoop
+    * FS API — works on HDFS/object stores, not just file://.) */
+  private def readTable[T <: Product: TypeTag](spark: SparkSession,
+                                               path: String): Seq[T] =
+    if (!exists(spark, path)) Seq.empty
+    else {
+      val enc = Encoders.product[T]
+      spark.read.schema(enc.schema).parquet(path).as(enc).collect().toSeq
+    }
+
+  private def committedIn(manifest: Seq[ManifestRow]): Set[Int] =
+    manifest.filter(_.committed).map(_.partition_id).toSet
+
+  /** The committed state of an index directory: the committed shard set
+    * (build shards and streaming segments), the persisted layout params,
+    * and the corpus rows of the committed shards only — leftovers of a torn
+    * wave or a crashed segment are dropped. */
+  case class Snapshot(committed: Set[Int], params: Option[BuildParams],
+                      corpus: Seq[CorpusShard]) {
+    def nDocs: Long = corpus.map(_.n_docs).sum
+    def sumDl: Long = corpus.map(_.sum_dl).sum
+
+    /** Reconcile caller-passed params with the persisted layout: a
+      * resume/append invoked with a different `nTermBuckets` than the index
+      * was created with would write postings under bucket directories the
+      * reader (which trusts <dir>/params) never probes — terms silently
+      * dropped. Layout fields are ADOPTED from disk (with a warning);
+      * non-layout knobs (salting, block size, shards) stay the caller's. */
+    def adoptLayout(dir: String, p: BuildParams): BuildParams = params match {
+      case Some(d) if d.nTermBuckets != p.nTermBuckets =>
+        System.err.println(s"[build] $dir was created with nTermBuckets=" +
+          s"${d.nTermBuckets}; adopting it over the caller's ${p.nTermBuckets}")
+        p.copy(nTermBuckets = d.nTermBuckets)
+      case _ => p
+    }
   }
+
+  /** The one reader of an index's metadata, shared by [[build]],
+    * `StreamingIndex.appendSegment` and `Bm25.open`. Manifest, params and
+    * corpus are read with their declared schemas (no schema-inference job)
+    * and CONCURRENTLY: each is a one-job read of a few rows whose wall time
+    * is per-job latency, so the three overlap into one. */
+  def snapshot(spark: SparkSession, dir: String): Snapshot = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val manifestF = Future(readTable[ManifestRow](spark, manifestPath(dir)))
+    val paramsF = Future(readTable[BuildParams](spark, s"$dir/params"))
+    val corpusF = Future(readTable[CorpusShard](spark, s"$dir/corpus"))
+    val committed = committedIn(Await.result(manifestF, Duration.Inf))
+    Snapshot(committed, Await.result(paramsF, Duration.Inf).headOption,
+      Await.result(corpusF, Duration.Inf).filter(c => committed(c.shard)))
+  }
+
+  /** Shards already committed according to the manifest (the manifest
+    * read of [[snapshot]] alone). */
+  def committedShards(spark: SparkSession, dir: String): Set[Int] =
+    committedIn(readTable[ManifestRow](spark, manifestPath(dir)))
 
   /** Layout-affecting build params are persisted with the index (a one-row
     * parquet at <dir>/params) so readers never have to guess nTermBuckets
@@ -62,27 +130,15 @@ object InvertedIndex {
       Seq(p).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
   }
 
-  def readParams(spark: SparkSession, dir: String): Option[BuildParams] = {
-    import spark.implicits._
-    if (!exists(spark, s"$dir/params")) None
-    else Some(spark.read.parquet(s"$dir/params").as[BuildParams].head())
+  /** A shard's manifest `bytes`: the on-disk size of `postings/shard=<s>`
+    * from the file system (a shard's directory holds exactly its own
+    * wave's or segment's files). Free — no Spark job — and one definition
+    * for build shards and streaming segments alike. */
+  private[graft] def shardBytes(spark: SparkSession, dir: String, shard: Int): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/postings/shard=$shard")
+    val f = fs(spark, path.toString)
+    if (f.exists(path)) f.getContentSummary(path).getLength else 0L
   }
-
-  /** Reconcile caller-passed params with the persisted layout: a
-    * resume/append invoked with a different `nTermBuckets` than the index
-    * was created with would write postings under bucket directories the
-    * reader (which trusts <dir>/params) never probes — terms silently
-    * dropped. Layout fields are ADOPTED from disk (with a warning);
-    * non-layout knobs (salting, block size, shards) stay the caller's. */
-  private[graft] def adoptLayout(spark: SparkSession, dir: String,
-                                 p: BuildParams): BuildParams =
-    readParams(spark, dir) match {
-      case Some(d) if d.nTermBuckets != p.nTermBuckets =>
-        System.err.println(s"[build] $dir was created with nTermBuckets=" +
-          s"${d.nTermBuckets}; adopting it over the caller's ${p.nTermBuckets}")
-        p.copy(nTermBuckets = d.nTermBuckets)
-      case _ => p
-    }
 
   /** Fraction-denominator of the deterministic hot-term sample: docs with
     * xxhash64(doc_id) ≡ 0 (mod SampleMod) — a 1/SampleMod sample that is a
@@ -129,8 +185,9 @@ object InvertedIndex {
     // A resume/append must write under the layout the index was CREATED
     // with: readers trust <dir>/params, so postings bucketed by a different
     // caller-passed nTermBuckets would be silently invisible to every query.
-    val p = adoptLayout(spark, dir, params)
-    val done = committedShards(spark, dir)
+    val snap = snapshot(spark, dir)
+    val p = snap.adoptLayout(dir, params)
+    val done = snap.committed
     val todo = (0 until p.numShards).filterNot(done)
     if (todo.isEmpty) return 0
 
@@ -201,13 +258,8 @@ object InvertedIndex {
       comb.collect { case (0, sh, n, sd) => (sh.toInt, n, sd) }
     val hotDf: Map[String, Long] =
       comb.collect { case (1, t, n, _) => t -> n }.toMap
-    val doneStats: Array[(Int, Long, Long)] =
-      if (done.isEmpty) Array.empty
-      else spark.read.parquet(s"$dir/corpus")
-        .filter($"shard".isin(done.toSeq: _*))
-        .select($"shard", $"n_docs", $"sum_dl").as[(Int, Long, Long)].collect()
-    val nDocs = todoStats.map(_._2).sum + doneStats.map(_._2).sum
-    val avgdl = (todoStats.map(_._3).sum + doneStats.map(_._3).sum).toDouble /
+    val nDocs = todoStats.map(_._2).sum + snap.nDocs
+    val avgdl = (todoStats.map(_._3).sum + snap.sumDl).toDouble /
       math.max(nDocs, 1L)
 
     // Per-doc pre-merged (term, tf) postings — one shuffle row per DISTINCT
@@ -326,26 +378,21 @@ object InvertedIndex {
       // disjoint, so Σ n_docs = df) with the same bucket-dir + term min-max
       // pruning the block scan uses — one less corpus-sized table to write,
       // store, and keep transactionally consistent.
-      val postings = spark.read.parquet(s"$dir/postings")
+      val postings = postingsTable(spark, dir)
         .filter($"shard".isin(wave: _*))
 
       // exact rows/blocks from a scan of the two small metadata columns
       // only (shard, n_docs — the agg used to reference length(<binary>)
       // and so re-read every encoded payload byte just written, the
-      // whole table); `bytes` is the shard's on-disk postings size from
-      // the file system (a shard's dir holds exactly its own wave's
-      // files), which is the operationally meaningful size and free.
+      // whole table); `bytes` is the shard's on-disk postings size
+      // (shardBytes).
       val statsF = Future(phaseTimed("manifest-stats") {
-        val agg = postings.groupBy($"shard").agg(
+        postings.groupBy($"shard").agg(
           sum($"n_docs").as("rows"), count(lit(1)).as("blocks")).collect()
-        val f = fs(spark, s"$dir/postings")
-        agg.map { r =>
-          val sh = r.getInt(0)
-          val shPath = new org.apache.hadoop.fs.Path(s"$dir/postings/shard=$sh")
-          val bytes =
-            if (f.exists(shPath)) f.getContentSummary(shPath).getLength else 0L
-          (sh, r.getLong(1), r.getLong(2), bytes)
-        }
+          .map { r =>
+            val sh = r.getInt(0)
+            (sh, r.getLong(1), r.getLong(2), shardBytes(spark, dir, sh))
+          }
       })
 
       Await.result(paramsF, Duration.Inf)
@@ -382,15 +429,17 @@ object InvertedIndex {
 
   // ------------------------------ read side ------------------------------
 
+  /** The postings table with its partition column `bucket`. Creating the
+    * DataFrame lists the files once; later appends are not in it. */
+  def postingsTable(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(postingsSchema).parquet(s"$dir/postings")
+
   def postings(spark: SparkSession, dir: String): Dataset[PostingBlock] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/postings")
-      .select($"shard".cast("int").as("shard"), $"term", $"salt", $"block_id",
-        $"first_doc", $"last_doc", $"n_docs", $"max_tf", $"max_tfsat",
-        $"doc_gaps_vb", $"tfs_vb", $"dls_vb")
-      .as[PostingBlock]
+    postingsTable(spark, dir).drop("bucket").as[PostingBlock]
   }
 
+  /** The docstats table, listed once like [[postingsTable]]. */
   def docStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/docstats")
+    spark.read.schema(docStatSchema).parquet(s"$dir/docstats")
 }

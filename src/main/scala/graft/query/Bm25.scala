@@ -123,51 +123,42 @@ object Bm25 {
     (((h % nTermBuckets) + nTermBuckets) % nTermBuckets).toInt
   }
 
-  /** Open an index directory. ONE manifest read + ONE corpus read give the
-    * committed-shard set, the corpus scalars, the per-shard avgdl-drift
-    * factors, and the layout params (persisted at build, <dir>/params) —
-    * everything else a query needs is a pruned scan of the cached postings
-    * DataFrame (its file listing is computed once here, not per query).
-    * There is no termstats table at all: per-term (df, max_tfsat) comes from
+  /** Open an index directory. One [[InvertedIndex.snapshot]] (manifest,
+    * params and corpus, read concurrently with declared schemas — no
+    * schema-inference job) gives the committed-shard set, the corpus
+    * scalars, the per-shard avgdl-drift factors, and the layout params
+    * (persisted at build, <dir>/params). Everything else a query needs is a
+    * pruned scan of the postings DataFrame, or for URLs of the docstats
+    * DataFrame; both are listed once here, not per query. There is no
+    * termstats table at all: per-term (df, max_tfsat) comes from
     * posting-block metadata columns under the same pruning (blocks of a term
     * are doc-range disjoint, so Σ n_docs = df). Uncommitted shards (a torn
-    * build wave) are invisible. */
+    * build wave, a segment mid-append) are invisible. */
   def open(spark: SparkSession, dir: String, nTermBuckets: Int = 16): IndexHandle = {
     import spark.implicits._
-    // three independent small metadata jobs (params, manifest, corpus) —
-    // their wall-clock is per-job latency, not compute; overlap them
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val pF = Future(InvertedIndex.readParams(spark, dir)
-      .getOrElse(graft.index.BuildParams(nTermBuckets = nTermBuckets)))
-    val committedF = Future(InvertedIndex.committedShards(spark, dir))
-    val corpusAllF = Future(spark.read.parquet(s"$dir/corpus")
-      .select($"shard", $"n_docs", $"sum_dl", $"avgdl_build")
-      .as[(Int, Long, Long, Double)].collect())
-    val p = Await.result(pF, Duration.Inf)
-    val committed = Await.result(committedF, Duration.Inf)
-    val corpus = Await.result(corpusAllF, Duration.Inf)
-      .filter(r => committed.contains(r._1))
-    val n = corpus.map(_._2).sum
-    val avgdl = corpus.map(_._3).sum.toDouble / math.max(n, 1L)
-    val factors = corpus.map { case (sh, _, _, ab) =>
-      sh -> math.max(1.0, avgdl / ab)
-    }.toMap
-    IndexHandle(spark, dir, n, avgdl, p.nTermBuckets, committed, factors,
-      spark.read.parquet(s"$dir/postings"))
+    val snap = InvertedIndex.snapshot(spark, dir)
+    val p = snap.params.getOrElse(graft.index.BuildParams(nTermBuckets = nTermBuckets))
+    val avgdl = snap.sumDl.toDouble / math.max(snap.nDocs, 1L)
+    val factors = snap.corpus.map(c => c.shard -> math.max(1.0, avgdl / c.avgdl_build)).toMap
+    IndexHandle(spark, dir, snap.nDocs, avgdl, p.nTermBuckets, snap.committed, factors,
+      InvertedIndex.postingsTable(spark, dir),
+      InvertedIndex.docStats(spark, dir)
+        .filter($"shard".isin(snap.committed.toSeq: _*))
+        .select($"doc_id", $"url", $"doclen"))
   }
 
   /** A handle is a SNAPSHOT of the index at [[Bm25.open]] time: the
-    * committed-shard set, the postings file listing, the corpus scalars,
-    * and the per-term stats cache are all frozen then. Segments appended
-    * later (StreamingIndex, resume waves) are invisible to this handle —
-    * call [[IndexHandle.reopen]] to pick them up. That is the intended
+    * committed-shard set, the postings and docstats file listings, the
+    * corpus scalars, and the per-term stats cache are all frozen then.
+    * Segments appended later (StreamingIndex, resume waves) are invisible to
+    * this handle — call [[IndexHandle.reopen]] to pick them up. That is the intended
     * serving semantics: a query set runs against one consistent snapshot. */
   case class IndexHandle(spark: SparkSession, dir: String, nDocs: Long,
                          avgdl: Double, nTermBuckets: Int,
                          committed: Set[Int], factors: Map[Int, Double],
                          postingsDF: DataFrame,
+                         /** (doc_id, url, doclen) of the committed shards. */
+                         docStatsDF: DataFrame,
                          /** Exhaustive-path cutoff in INDEX DOCUMENTS: below
                            * it a query runs as one driver-blocking action
                            * (see singlePassTopk) — result-identical, lower
@@ -184,9 +175,9 @@ object Bm25 {
       * 16 shuffle partitions → 0.29 s with neither). Opt-in because it
       * mutates session conf; call it on a session dedicated to serving. */
     /** Fresh snapshot of the same index directory: re-reads the manifest,
-      * corpus scalars, params, and the postings file listing, and starts an
-      * empty term-stats cache. Use after StreamingIndex appends (or another
-      * build wave) to make new segments visible. Serving knobs customized
+      * corpus scalars, params, and the postings and docstats file listings,
+      * and starts an empty term-stats cache. Use after StreamingIndex
+      * appends (or another build wave) to make new segments visible. Serving knobs customized
       * on THIS handle (wandCutoff) carry over — reopening refreshes the
       * snapshot, it must not silently reset tuning. */
     def reopen(): IndexHandle =
@@ -470,10 +461,12 @@ object Bm25 {
       * right outer join" and silently drops the hint, leaving a
       * corpus-sized docstats shuffle at scale — and every result doc_id
       * exists in docstats by construction (both come from the same
-      * committed-shard snapshot), so the join types agree row-for-row. */
+      * committed-shard snapshot), so the join types agree row-for-row.
+      * The docstats side is this handle's: listed at open and pruned to its
+      * committed shards, so a segment appended (or mid-append) since then
+      * can neither add rows for a re-added URL nor cost a listing here. */
     def withUrls(results: DataFrame): DataFrame =
-      InvertedIndex.docStats(spark, dir)
-        .select($"doc_id", $"url", $"doclen")
+      docStatsDF
         .join(broadcast(results), Seq("doc_id"))
         .select(results.columns.map(col) :+ $"url" :+ $"doclen": _*)
   }

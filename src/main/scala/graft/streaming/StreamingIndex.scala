@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -37,80 +37,107 @@ object StreamingIndex {
     StructField("lang", StringType, nullable = true)))
 
   /** Append one micro-batch of pages as segment (SegmentBase + batchId).
-    * Public so batch jobs can append segments too (idempotent by id). */
+    * Public so batch jobs can append segments too (idempotent by id).
+    *
+    * Spark jobs, in order (9 for a non-empty batch on an existing index):
+    *   1. [[InvertedIndex.snapshot]]: manifest, params and corpus reads, 3
+    *      jobs run concurrently — the committed check, the persisted layout
+    *      and the previous corpus totals (summed on the driver from the
+    *      committed corpus rows: O(shards), never a docstats scan). A new
+    *      index also writes its params here (1 more job).
+    *   2. docstats write (1 job). It fills the tokenized cache, and an
+    *      observation on it yields the segment's (n_docs, sum_dl), hence
+    *      the avgdl the segment's blocks are encoded with.
+    *   3. postings write (3 jobs with AQE: the run shuffle and the bucket
+    *      shuffle as map stages, then the result stage that writes); an
+    *      observation on it yields the manifest's (rows, blocks).
+    *      CONCURRENTLY, the segment's corpus row write (1 job).
+    *   4. the manifest commit row (1 job), strictly LAST, after every other
+    *      write has landed: a crash anywhere before it leaves the segment
+    *      invisible to readers (which filter by committed shards), and the
+    *      replayed batch rewrites it. `bytes` is the segment's on-disk
+    *      postings size ([[InvertedIndex.shardBytes]]), as for build shards.
+    *
+    * Both observe nodes sit after their write's last exchange, in the
+    * result stage. Observed metrics are accumulators: result-task updates
+    * are applied once per partition, but a retried shuffle-map stage would
+    * apply its tasks' updates again and double-count n_docs / sum_dl —
+    * hence avgdl — or rows / blocks. */
   def appendSegment(spark: SparkSession, batch: Dataset[Page], dir: String,
                     batchId: Long, params: BuildParams): Unit = {
     import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     val seg = SegmentBase + batchId.toInt
-    val committed = InvertedIndex.committedShards(spark, dir)
-    if (committed.contains(seg)) return
+    val snap = InvertedIndex.snapshot(spark, dir)
+    if (snap.committed.contains(seg)) return
     // appends must keep the CREATING build's bucket layout (readers trust
     // <dir>/params) — a restarted stream configured differently would
     // otherwise write terms into buckets no query ever probes
-    val p = InvertedIndex.adoptLayout(spark, dir, params)
-    InvertedIndex.writeParamsIfAbsent(spark, dir, p)
+    val p = snap.adoptLayout(dir, params)
+    if (snap.params.isEmpty) InvertedIndex.writeParamsIfAbsent(spark, dir, p)
 
     // every doc in this segment lands in this segment's shard id
     val tokenized = IndexBuild.tokenize(batch, p.copy(numShards = 1))
       .withColumn("shard", lit(seg))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
+    // coalesce: an empty segment (all docs in the batch tokenize to
+    // nothing) must observe zeros, not the NULL sum of an empty aggregate
+    val segObs = Observation("segment")
     tokenized.select($"doc_id", $"url", $"dl".as("doclen"), $"shard")
+      .observe(segObs, count(lit(1)).as("n_docs"),
+        coalesce(sum($"doclen"), lit(0L)).as("sum_dl"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard").parquet(s"$dir/docstats")
+    val segStats = observed(segObs)
 
-    // avgdl over everything indexed so far INCLUDING this segment — but
-    // never counting leftovers of a crashed, uncommitted segment. Totals
-    // come from the committed CORPUS rows (each shard's n_docs/sum_dl are
-    // exact at commit) plus this segment's own aggregate: O(shards) + O(this
-    // batch) — NEVER a scan of all docstats, which is O(total docs indexed)
-    // metadata per micro-batch (a per-batch corpus-sized read at the
-    // 10^12-doc design point).
-    val segRow = tokenized.agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
-    val (segN, segDl) = (segRow.getLong(0), segRow.getLong(1))
-    val (prevN, prevDl) =
-      if (committed.isEmpty) (0L, 0L)
-      else {
-        val r = spark.read.parquet(s"$dir/corpus")
-          .filter($"shard".isin(committed.toSeq: _*))
-          .agg(coalesce(sum($"n_docs"), lit(0L)),
-            coalesce(sum($"sum_dl"), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-    val avgdl = (prevDl + segDl).toDouble / math.max(prevN + segN, 1L)
-    Seq(InvertedIndex.CorpusShard(seg, segN, segDl, avgdl))
+    // avgdl over everything committed so far plus this segment — never
+    // counting leftovers of a crashed, uncommitted segment (the snapshot's
+    // corpus rows are the committed shards' only)
+    val (segN, segDl) = (segStats("n_docs"), segStats("sum_dl"))
+    val avgdl = (snap.sumDl + segDl).toDouble / math.max(snap.nDocs + segN, 1L)
+    val corpusF = Future(Seq(InvertedIndex.CorpusShard(seg, segN, segDl, avgdl))
       .toDS().write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(s"$dir/corpus")
+      .partitionBy("shard").parquet(s"$dir/corpus"))
 
     // per-doc map-side pre-merge (same feed as the batch build): one row
     // per distinct term per doc, NO (term, doc) aggregation exchange — the
     // streaming append previously paid a full groupBy shuffle per
     // micro-batch for tf that run-length/pre-merge semantics give for free
-    val tf = IndexBuild.docTermFreqs(tokenized)
-    val postings = IndexBuild.buildShardPostings(tf, Map.empty, p, avgdl)
+    val postingsObs = Observation("postings")
+    try IndexBuild.buildShardPostings(IndexBuild.docTermFreqs(tokenized), Map.empty, p, avgdl)
       .withColumn("bucket", pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    postings.repartition(col("bucket")).sortWithinPartitions($"term", $"salt", $"block_id")
+      .repartition(col("bucket")).sortWithinPartitions($"term", $"salt", $"block_id")
+      .observe(postingsObs, coalesce(sum($"n_docs"), lit(0L)).as("rows"),
+        count(lit(1)).as("blocks"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard", "bucket")
       .parquet(s"$dir/postings")
+    finally tokenized.unpersist()
+    Await.result(corpusF, Duration.Inf)
+    val stats = observed(postingsObs)
 
-    // coalesce: an empty segment (all docs in the batch tokenize to
-    // nothing) must commit a zero-row manifest marker, not NPE on the
-    // NULL sums of an empty aggregation
-    val stats = postings.agg(coalesce(sum($"n_docs"), lit(0L)), count(lit(1)),
-      coalesce(sum(length($"doc_gaps_vb") + length($"tfs_vb") + length($"dls_vb")),
-        lit(0L))).head()
-    postings.unpersist(); tokenized.unpersist()
-    Seq(ManifestRow(seg, stats.getLong(0), stats.getLong(1), stats.getLong(2),
-        committed = true,
+    Seq(ManifestRow(seg, stats("rows"), stats("blocks"),
+        InvertedIndex.shardBytes(spark, dir, seg), committed = true,
         s"segment=$seg batchId=$batchId avgdl=$avgdl params=$p"))
       .toDS().write.mode(SaveMode.Append)
       .parquet(InvertedIndex.manifestPath(dir))
+  }
+
+  /** An observation's (Long) metrics. They arrive through the listener bus
+    * once the observed write has finished — normally within milliseconds;
+    * the bound turns a lost event into a failed (uncommitted, replayable)
+    * append instead of a hung one. */
+  private def observed(obs: Observation): Map[String, Long] = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val r = Await.result(obs.future, 5.minutes)
+    r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap
   }
 
   /** Start a streaming index build over a directory of page parquet files.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.data.Synth
-import graft.index.{BuildParams, InvertedIndex}
+import graft.index.{BuildParams, InvertedIndex, ManifestRow}
 import graft.query.Bm25
 import graft.streaming.StreamingIndex
 
@@ -112,5 +112,87 @@ class StreamingIndexSpec extends SparkSpec {
       val b = hc.topk(q, 10).as[(Long, Double)].collect().toSeq.map(_._1)
       assert(a == b, s"top-k diverged for '$q': $a vs $b")
     }
+  }
+
+  /** A 2-shard base build plus three appends: two 100-doc segments and
+    * one whose only doc tokenizes to nothing (a zero-row segment). */
+  private lazy val appended: String = {
+    val dir = tmpDir("bookkeeping-idx")
+    val p = BuildParams(numShards = 2, blockSize = 16)
+    val all = Synth.pages(spark, 400, Seed, 4).collect()
+    InvertedIndex.build(spark, all.take(200).toSeq.toDS(), dir, p)
+    StreamingIndex.appendSegment(spark, all.slice(200, 300).toSeq.toDS(), dir, 0L, p)
+    StreamingIndex.appendSegment(spark, Seq(graft.data.Page("e://2",
+      new java.sql.Timestamp(0L), Array.empty[Byte], "", "en")).toDS(), dir, 1L, p)
+    StreamingIndex.appendSegment(spark, all.drop(300).toSeq.toDS(), dir, 2L, p)
+    dir
+  }
+
+  private def manifestRows(dir: String): Seq[ManifestRow] =
+    spark.read.parquet(s"$dir/manifest").as[ManifestRow].collect().toSeq
+      .filter(_.committed)
+
+  test("append bookkeeping: manifest and corpus rows equal the written tables") {
+    val dir = appended
+    val segs = StreamingIndex.SegmentBase + 0 to StreamingIndex.SegmentBase + 2
+    val manifest = manifestRows(dir).map(r => r.partition_id -> r).toMap
+    assert(segs.forall(manifest.contains), s"segments missing: ${manifest.keys}")
+    val postings = spark.read.parquet(s"$dir/postings")
+      .groupBy($"shard").agg(sum($"n_docs"), count(lit(1)))
+      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val docstats = spark.read.parquet(s"$dir/docstats")
+      .groupBy($"shard").agg(count(lit(1)), sum($"doclen"))
+      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val corpus = spark.read.parquet(s"$dir/corpus").as[InvertedIndex.CorpusShard]
+      .collect().map(c => c.shard -> c).toMap
+
+    // the zero-row segment commits zeros and writes no postings or docs
+    assert(postings.get(segs(1)).isEmpty && docstats.get(segs(1)).isEmpty)
+    for (s <- segs) {
+      val m = manifest(s)
+      assert((m.rows, m.blocks) == postings.getOrElse(s, (0L, 0L)), s"manifest of $s")
+      val c = corpus(s)
+      assert((c.n_docs, c.sum_dl) == docstats.getOrElse(s, (0L, 0L)), s"corpus of $s")
+    }
+    // each segment is encoded with the running corpus avgdl: every shard
+    // committed before it plus itself
+    var (n, dl) = (0L, 0L)
+    for (s <- 0 until 2) { n += corpus(s).n_docs; dl += corpus(s).sum_dl }
+    for (s <- segs) {
+      n += corpus(s).n_docs; dl += corpus(s).sum_dl
+      assert(math.abs(corpus(s).avgdl_build - dl.toDouble / n) < 1e-12,
+        s"avgdl_build of $s: ${corpus(s).avgdl_build} vs ${dl.toDouble / n}")
+    }
+  }
+
+  test("manifest bytes is the on-disk postings size, for build shards and segments") {
+    val dir = appended
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val rows = manifestRows(dir)
+    assert(rows.map(_.partition_id).toSet.size == 5)
+    for (r <- rows) {
+      val path = new org.apache.hadoop.fs.Path(s"$dir/postings/shard=${r.partition_id}")
+      val onDisk = if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+      assert(r.bytes == onDisk, s"shard ${r.partition_id}: ${r.bytes} vs $onDisk on disk")
+      assert((r.bytes > 0) == (r.rows > 0))
+    }
+  }
+
+  test("withUrls answers from the handle's snapshot, not later segments") {
+    val dir = tmpDir("urls-idx")
+    val p = BuildParams(numShards = 1, blockSize = 16)
+    val base = Synth.pages(spark, 200, Seed, 4).collect()
+    InvertedIndex.build(spark, base.toSeq.toDS(), dir, p)
+    val h0 = Bm25.open(spark, dir)
+    val q = "w1 w3 the0"
+    val top = h0.topk(q, 10).as[(Long, Double)].collect().map(_._1).toSet
+    // a segment that re-adds the URLs of h0's top hits (same doc_ids)
+    val readded = base.filter(pg => top(graft.index.IndexBuild.docId(pg.url)))
+    assert(readded.length == top.size)
+    StreamingIndex.appendSegment(spark, readded.toSeq.toDS(), dir, 0L, p)
+
+    val ids = h0.withUrls(h0.topk(q, 10)).select($"doc_id").as[Long].collect().toSeq
+    assert(ids.sorted == top.toSeq.sorted, s"withUrls rows: $ids")
   }
 }
