@@ -110,11 +110,9 @@ object Main {
       val q = qw.mkString(" ")
       val t0 = System.nanoTime()
       val res = if (verb == "wand") h.topkWand(q, k.toInt) else h.topk(q, k.toInt)
-      // withUrls is a broadcast join — its output order is the probe side's,
-      // so re-impose the top-k contract (score desc, doc_id asc) on the ≤k
-      // collected rows before printing
+      // withUrls keeps the result rows' order: the top-k contract's
+      // (score desc, doc_id asc)
       val rows = h.withUrls(res).collect()
-        .sortBy(r => (-r.getAs[Double]("score"), r.getAs[Long]("doc_id")))
       val sec = (System.nanoTime() - t0) / 1e9
       println(s"query: \"$q\"  (n_docs=${h.nDocs}, avgdl=${h.avgdl})")
       rows.foreach(r => println(f"  ${r.getAs[Double]("score")}%12.6f  " +

@@ -76,10 +76,12 @@ object InvertedIndex {
 
   /** The committed state of an index directory: the committed shard set
     * (build shards and streaming segments), the persisted layout params,
-    * and the corpus rows of the committed shards only — leftovers of a torn
-    * wave or a crashed segment are dropped. */
+    * the corpus rows of the committed shards only — leftovers of a torn
+    * wave or a crashed segment are dropped — and `postings`, the committed
+    * posting total (Σ manifest `rows` of the committed shards; a torn
+    * segment's files have no committed row, so they do not count). */
   case class Snapshot(committed: Set[Int], params: Option[BuildParams],
-                      corpus: Seq[CorpusShard]) {
+                      corpus: Seq[CorpusShard], postings: Long) {
     def nDocs: Long = corpus.map(_.n_docs).sum
     def sumDl: Long = corpus.map(_.sum_dl).sum
 
@@ -110,9 +112,11 @@ object InvertedIndex {
     val manifestF = Future(readTable[ManifestRow](spark, manifestPath(dir)))
     val paramsF = Future(readTable[BuildParams](spark, s"$dir/params"))
     val corpusF = Future(readTable[CorpusShard](spark, s"$dir/corpus"))
-    val committed = committedIn(Await.result(manifestF, Duration.Inf))
+    val manifest = Await.result(manifestF, Duration.Inf)
+    val committed = committedIn(manifest)
     Snapshot(committed, Await.result(paramsF, Duration.Inf).headOption,
-      Await.result(corpusF, Duration.Inf).filter(c => committed(c.shard)))
+      Await.result(corpusF, Duration.Inf).filter(c => committed(c.shard)),
+      manifest.filter(_.committed).map(_.rows).sum)
   }
 
   /** Shards already committed according to the manifest (the manifest
@@ -360,7 +364,11 @@ object InvertedIndex {
           .withColumn("bucket",
             pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
           .repartition(col("shard"), col("bucket"))
-          .sortWithinPartitions($"term", $"salt", $"block_id")
+          // the partitioned write requires its input ordered by (shard,
+          // bucket) and adds that sort itself unless the existing ordering
+          // starts with it — a (term, …)-only sort would be replaced and
+          // the files left unsorted by term, defeating min-max pruning
+          .sortWithinPartitions($"shard", $"bucket", $"term", $"salt", $"block_id")
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("shard", "bucket")

@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.TextExtract
 import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
@@ -17,8 +20,24 @@ import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
   * The probe is the Spark-native form of the reference's bucket probe +
   * re-rank (reference: index/index_new.py:65-72): query terms → pruned
   * posting-block scan (bucket directory pruning + Parquet min-max on term)
-  * → decode → codegen'd score arithmetic → groupBy(doc_id) sum →
-  * TakeOrderedAndProject (partial per-partition top-k, merged on driver).
+  * → decode → score → per-doc sum → top-k. Two scorers run that pipeline
+  * after the scan, with the same per-posting arithmetic ([[tfSatCol]]'s
+  * association):
+  *   - the DRIVER scorer ([[IndexHandle]]'s `localTopk`): one `collect` of
+  *     the pruned blocks, then decode, score, sum into a primitive
+  *     doc_id → score table and a bounded top-k heap in driver code. At
+  *     small sizes a query's time is per-Spark-job latency, not posting
+  *     work, so one job beats a plan of several.
+  *   - the SPARK plans: decode → codegen'd score → groupBy(doc_id) sum →
+  *     TakeOrderedAndProject (partial per-partition top-k, merged on the
+  *     driver). They scale past what one driver should hold.
+  * A query takes the driver scorer when a bound on its postings fits the
+  * budget [[LocalPostings]] (a handle's `localPostings`). The gate needs no
+  * Spark job: the exhaustive path reads the snapshot's committed posting
+  * total, a bound on any query's postings
+  * ([[graft.index.InvertedIndex.Snapshot]]`.postings`, known at open); the
+  * block-max path reads Σ df of the query terms from the termInfos it
+  * needs anyway.
   *
   * [[IndexHandle.topkWand]] adds block-max pruning (Ding & Suel, SIGIR 2011
   * "Faster top-k document retrieval using block-max indexes"): a block of
@@ -30,7 +49,8 @@ import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
   * by its true score, so none is pruned and its final score is exact; a doc
   * that loses contributions to pruning had total upper bound < θ ≤ k-th
   * best, so it cannot displace a top-k member. Property-tested in
-  * IndexSpec (WAND-vs-exhaustive identity).
+  * IndexSpec (WAND-vs-exhaustive identity) and Bm25ScorerSpec (driver ≡
+  * Spark ≡ brute force).
   */
 object Bm25 {
 
@@ -54,6 +74,71 @@ object Bm25 {
     * Spark jobs. [[IndexHandle.wandStats]] ignores the bail (telemetry
     * must measure the bound itself). */
   final val WandAllHotFrac = 0.15
+
+  /** Posting budget of the driver scorer: a query whose gate input fits it
+    * is scored by one block `collect` and driver code instead of a Spark
+    * plan. At 10^6 postings the driver holds a 2^21-slot score table
+    * (32 MB) plus the collected blocks' payloads.
+    *
+    * Measured at local[4] on a 4-vCPU host (Synth indexes of 2k–512k docs,
+    * ~81 postings a doc, medians of 5, queries of 3 to 7.4·10^6 postings):
+    * the driver scorer was faster in 69 of 72 (query, path) pairs. The
+    * Spark plans won 3, all forced block-max and 0.7% to 16% apart, at
+    * 3.9·10^3, 1.2·10^6 and 4.9·10^6 query postings (Σ df). No speed
+    * crossover showed in that range, so 10^6 is a driver-memory bound
+    * with margin, not a measured crossover. More cores would favour the
+    * Spark plans' parallel decode; that is unmeasured.
+    *
+    * The exhaustive path gates on the WHOLE index's posting total, so on
+    * an index above 10^6 postings (~12k Synth docs) every query takes the
+    * Spark plans, even a one-rare-term query the driver scores faster. */
+  final val LocalPostings = 1000000L
+
+  /** doc_id → summed score over primitive arrays, open addressing with
+    * linear probing (no boxing per posting). Sized once for `maxDocs`
+    * distinct docs at load ≤ 1/2, so it never grows. Doc ids are ≥ 0
+    * (63-bit masked hashes), so −1 marks an empty slot. */
+  private final class DocScores(maxDocs: Int) {
+    private val cap = {
+      var c = 2
+      while (c < 2L * maxDocs) c <<= 1
+      c
+    }
+    private val keys = Array.fill(cap)(-1L)
+    private val vals = new Array[Double](cap)
+
+    def add(doc: Long, s: Double): Unit = {
+      var i = ((doc * 0x9E3779B97F4A7C15L) >>> 33).toInt & (cap - 1)
+      while (keys(i) != doc && keys(i) != -1L) i = (i + 1) & (cap - 1)
+      keys(i) = doc
+      vals(i) += s
+    }
+
+    /** The k best (doc_id, score), ordered (score desc, doc_id asc), via a
+      * k-bounded heap whose head is the weakest kept doc. */
+    def top(k: Int): Seq[(Long, Double)] = {
+      if (k <= 0) return Nil
+      val heap = new java.util.PriorityQueue[(Long, Double)](k,
+        (a: (Long, Double), b: (Long, Double)) => {
+          val c = java.lang.Double.compare(a._2, b._2)
+          if (c != 0) c else java.lang.Long.compare(b._1, a._1)
+        })
+      var i = 0
+      while (i < cap) {
+        val d = keys(i)
+        val s = vals(i)
+        if (d != -1L) {
+          if (heap.size < k) heap.add((d, s))
+          else {
+            val w = heap.peek()
+            if (s > w._2 || (s == w._2 && d < w._1)) { heap.poll(); heap.add((d, s)) }
+          }
+        }
+        i += 1
+      }
+      heap.asScala.toSeq.sortBy { case (d, s) => (-s, d) }
+    }
+  }
 
   case class QueryTerm(term: String, qtf: Int)
   case class TermInfo(term: String, qtf: Int, df: Long, idf: Double, gmax: Double)
@@ -144,7 +229,8 @@ object Bm25 {
       InvertedIndex.postingsTable(spark, dir),
       InvertedIndex.docStats(spark, dir)
         .filter($"shard".isin(snap.committed.toSeq: _*))
-        .select($"doc_id", $"url", $"doclen"))
+        .select($"doc_id", $"url", $"doclen"),
+      nPostings = snap.postings)
   }
 
   /** A handle is a SNAPSHOT of the index at [[Bm25.open]] time: the
@@ -165,8 +251,29 @@ object Bm25 {
                            * latency. Above it, block-max WAND's extra
                            * round-trips pay for themselves. Tests set 0 to
                            * force the pruning path. */
-                         wandCutoff: Long = 2000000L) {
+                         wandCutoff: Long = 2000000L,
+                         /** Driver-scorer budget in POSTINGS (see
+                           * [[Bm25.LocalPostings]]): a query whose gate
+                           * input fits it is scored on the driver —
+                           * result-identical up to summation order, fewer
+                           * jobs. Tests set 0 to force the Spark plans. */
+                         localPostings: Long = Bm25.LocalPostings,
+                         /** Committed posting total of the snapshot
+                           * (Snapshot.postings, set by [[Bm25.open]]): the
+                           * exhaustive path's gate input. */
+                         nPostings: Long = 0L) {
     import spark.implicits._
+
+    /** Fresh snapshot of the same index directory: re-reads the manifest,
+      * corpus scalars, params, and the postings and docstats file listings,
+      * and starts an empty term-stats cache. Use after StreamingIndex
+      * appends (or another build wave) to make new segments visible. Serving
+      * knobs customized on THIS handle (wandCutoff, localPostings) carry
+      * over — reopening refreshes the snapshot, it must not silently reset
+      * tuning. */
+    def reopen(): IndexHandle =
+      Bm25.open(spark, dir, nTermBuckets)
+        .copy(wandCutoff = wandCutoff, localPostings = localPostings)
 
     /** Tune the session for point-query latency: AQE's per-exchange
       * re-planning rounds and wide shuffles are throughput features — for a
@@ -174,15 +281,6 @@ object Bm25 {
       * stage latency (measured on a 300k-doc index: 0.91 s avg with AQE +
       * 16 shuffle partitions → 0.29 s with neither). Opt-in because it
       * mutates session conf; call it on a session dedicated to serving. */
-    /** Fresh snapshot of the same index directory: re-reads the manifest,
-      * corpus scalars, params, and the postings and docstats file listings,
-      * and starts an empty term-stats cache. Use after StreamingIndex
-      * appends (or another build wave) to make new segments visible. Serving knobs customized
-      * on THIS handle (wandCutoff) carry over — reopening refreshes the
-      * snapshot, it must not silently reset tuning. */
-    def reopen(): IndexHandle =
-      Bm25.open(spark, dir, nTermBuckets).copy(wandCutoff = wandCutoff)
-
     def tuneForPointQueries(): IndexHandle = {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -267,13 +365,12 @@ object Bm25 {
       loadBlockMeta(queryTerms(q).map(_.term)).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
-    /** Decode + score + aggregate + top-k. Scoring weights enter as a
-      * literal map so the whole per-posting path after decode is codegen. */
+    /** The Spark scorer of block-max survivors: decode + score + aggregate
+      * + top-k. Scoring weights (term → qtf·idf) enter as a literal map so
+      * the whole per-posting path after decode is codegen. */
     private def scoreBlocks(blocks: Dataset[PostingBlock],
-                            infos: Seq[TermInfo], k: Int): DataFrame = {
-      val wPairs = infos.flatMap(ti =>
-        Seq(lit(ti.term), lit(ti.qtf * ti.idf)))
-      val wMap = map(wPairs: _*)
+                            weights: Map[String, Double], k: Int): DataFrame = {
+      val wMap = map(weights.toSeq.flatMap { case (t, w) => Seq(lit(t), lit(w)) }: _*)
       blocks
         .flatMap(IndexBuild.decodeBlock _)
         .toDF()
@@ -311,11 +408,49 @@ object Bm25 {
         .limit(k)
     }
 
-    /** Exhaustive scoring: always correct; WAND must equal it. */
+    /** The driver scorer: decode `blocks`, score each posting with the
+      * arithmetic of [[tfSatCol]], sum per doc into a primitive table and
+      * keep the top k by (score desc, doc_id asc). Returns a local
+      * DataFrame (doc_id, score) — collecting it runs no job.
+      *
+      * Blocks are visited in the canonical order (term, shard, salt,
+      * block_id), so every doc's terms are summed in one fixed order. A
+      * block-max survivor set is a subset of the exhaustive block set that
+      * keeps every block of every top-k doc, so both paths sum each top-k
+      * doc's score exactly alike: driver [[topk]] ≡ driver [[topkWand]]
+      * bit for bit, not just up to summation order. */
+    private def localTopk(blocks: Array[PostingBlock],
+                          weights: Map[String, Double], k: Int): DataFrame = {
+      import IndexBuild.{BM25_B, BM25_K1}
+      val (c1, c0, cb) = (BM25_K1 + 1.0, 1.0 - BM25_B, BM25_B / avgdl)
+      val scores = new DocScores(blocks.iterator.map(_.n_docs).sum)
+      for (b <- blocks.sortBy(b => (b.term, b.shard, b.salt, b.block_id))) {
+        val w = weights(b.term)
+        IndexBuild.decodeBlock(b).foreach { p =>
+          val tf = p.tf.toDouble
+          scores.add(p.doc_id, w * (tf * c1 / (tf + BM25_K1 * (c0 + cb * p.dl))))
+        }
+      }
+      scores.top(k).toDF("doc_id", "score")
+    }
+
+    /** Exhaustive scoring: always correct; WAND must equal it.
+      *
+      * When the snapshot's committed posting total (`nPostings`, read at
+      * open — no job) fits `localPostings`, no query can exceed it: the
+      * pruned blocks are collected in ONE job, df per term is Σ n_docs of
+      * the collected blocks, and [[localTopk]] scores them. Otherwise the
+      * one-action Spark plan ([[singlePassTopk]]) runs. */
     def topk(q: String, k: Int): DataFrame = {
       val qts = queryTerms(q)
       if (qts.isEmpty) emptyResult(spark)
-      else singlePassTopk(qts, k)
+      else if (nPostings <= localPostings) {
+        val blocks = loadBlocks(qts.map(_.term)).collect()
+        val df = blocks.groupMapReduce(_.term)(_.n_docs.toLong)(_ + _)
+        localTopk(blocks, qts.collect {
+          case qt if df.contains(qt.term) => qt.term -> qt.qtf * idf(nDocs, df(qt.term))
+        }.toMap, k)
+      } else singlePassTopk(qts, k)
     }
 
     /** Block-max pruned top-k — result-identical to [[topk]].
@@ -323,27 +458,33 @@ object Bm25 {
       * Adaptive: below `wandCutoff` DOCUMENTS in the index, the two extra
       * driver round-trips WAND needs (term stats for bounds, then the
       * theta-bounding scan) cost more wall-clock than block skipping can
-      * save — the pruned block scan is already small — so the query runs
-      * the one-action exhaustive plan (identical results: WAND with
-      * theta = −inf prunes nothing). Above it, block-max pruning pays. */
+      * save — the pruned block scan is already small — so the query IS
+      * [[topk]] (identical results: WAND with theta = −inf prunes nothing).
+      * Above it, block-max pruning pays; the blocks that survive the bound
+      * are scored on the driver ([[localTopk]]) when Σ df of the query
+      * terms (from termInfos, which the bound needs anyway) fits
+      * `localPostings`, else by the Spark plan ([[scoreBlocks]]). */
     def topkWand(q: String, k: Int): DataFrame = {
-      val qts = queryTerms(q)
-      if (qts.isEmpty) return emptyResult(spark)
-      if (nDocs < wandCutoff) return singlePassTopk(qts, k)
+      if (nDocs < wandCutoff) return topk(q, k)
       val infos = termInfos(q)
       if (infos.isEmpty) return emptyResult(spark)
+      val terms = infos.map(_.term)
+      val weights = infos.map(ti => ti.term -> ti.qtf * ti.idf).toMap
+      val local = infos.map(_.df).sum <= localPostings
+      def score(blocks: Dataset[PostingBlock]): DataFrame =
+        if (local) localTopk(blocks.collect(), weights, k)
+        else scoreBlocks(blocks, weights, k)
       // all-hot bail (see WandAllHotFrac): no rare term → the grid bound
-      // provably-by-measurement skips nothing; take the single-action plan
-      // with zero bound jobs instead of two wasted ones
+      // provably-by-measurement skips nothing; score every block with zero
+      // bound jobs instead of two wasted ones
       if (infos.forall(_.df.toDouble > WandAllHotFrac * nDocs))
-        return scoreBlocks(loadBlocks(infos.map(_.term)), infos, k)
-      computeBound(loadBlockMeta(infos.map(_.term)), infos, k) match {
-        case None => scoreBlocks(loadBlocks(infos.map(_.term)), infos, k)
+        return score(loadBlocks(terms))
+      computeBound(loadBlockMeta(terms), infos, k) match {
+        case None => score(loadBlocks(terms))
         case Some(bd) =>
           val bc = spark.sparkContext.broadcast(bd)
-          scoreBlocks(loadBlocks(infos.map(_.term)).filter(b =>
-            bc.value.keeps(b.term, b.first_doc, b.last_doc, b.max_tfsat)),
-            infos, k)
+          score(loadBlocks(terms).filter(b =>
+            bc.value.keeps(b.term, b.first_doc, b.last_doc, b.max_tfsat)))
       }
     }
 
@@ -454,21 +595,30 @@ object Bm25 {
     }
 
     /** Candidate doc metadata lookup (the reference's title-cache probe,
-      * index_new.py:69). The top-k result set is the tiny side — broadcast
-      * IT, never the doc table (docstats is corpus-sized: 10^12 rows at the
-      * design point). INNER join, deliberately: a right-outer cannot
-      * broadcast its preserved (right) side — Spark logs "build right for
-      * right outer join" and silently drops the hint, leaving a
-      * corpus-sized docstats shuffle at scale — and every result doc_id
-      * exists in docstats by construction (both come from the same
-      * committed-shard snapshot), so the join types agree row-for-row.
-      * The docstats side is this handle's: listed at open and pruned to its
-      * committed shards, so a segment appended (or mid-append) since then
-      * can neither add rows for a re-added URL nor cost a listing here. */
-    def withUrls(results: DataFrame): DataFrame =
-      docStatsDF
-        .join(broadcast(results), Seq("doc_id"))
-        .select(results.columns.map(col) :+ $"url" :+ $"doclen": _*)
+      * index_new.py:69): `results` (a top-k, so at most k rows) gains the
+      * columns `url` and `doclen`. The result rows are collected, ONE
+      * `doc_id IN (…)` scan of the docstats side fetches their docs, and
+      * the two are joined on the driver into a local DataFrame, in the
+      * result rows' order — no broadcast join plan. An empty result runs
+      * no docstats job. INNER-join semantics: a doc with two docstats rows
+      * (a URL re-added by a later segment, on a reopened handle) gives two
+      * rows. The docstats side is this handle's: listed at open and pruned
+      * to its committed shards, so a segment appended (or mid-append)
+      * since then can neither add rows for a re-added URL nor cost a
+      * listing here. */
+    def withUrls(results: DataFrame): DataFrame = {
+      val rows = results.collect()
+      val idAt = results.schema.fieldIndex("doc_id")
+      val ids = rows.map(_.getLong(idAt)).distinct
+      val docs =
+        if (ids.isEmpty) Map.empty[Long, Array[Row]]
+        else docStatsDF.filter($"doc_id".isin(ids.toSeq: _*)).collect()
+          .groupBy(_.getAs[Long]("doc_id"))
+      val joined = rows.toSeq.flatMap(r => docs.getOrElse(r.getLong(idAt), Array.empty[Row])
+        .map(d => Row.fromSeq(r.toSeq :+ d.getAs[String]("url") :+ d.getAs[Int]("doclen"))))
+      spark.createDataFrame(joined.asJava, StructType(results.schema.fields ++
+        Seq(docStatsDF.schema("url"), docStatsDF.schema("doclen"))))
+    }
   }
 
   private def emptyResult(spark: SparkSession): DataFrame = {

@@ -54,15 +54,6 @@ class IndexSpec extends SparkSpec {
     scored.sortBy { case (id, s) => (-s, id) }.take(k)
   }
 
-  def assertRankIdentical(got: Seq[(Long, Double)], want: Seq[(Long, Double)],
-                          ctx: String): Unit = {
-    assert(got.map(_._1) == want.map(_._1), s"[$ctx] doc ids differ: got=$got want=$want")
-    got.zip(want).foreach { case ((_, gs), (_, ws)) =>
-      assert(math.abs(gs - ws) <= 1e-9 * math.max(1.0, math.abs(ws)),
-        s"[$ctx] score drift: got=$gs want=$ws")
-    }
-  }
-
   lazy val indexDir: String = {
     val dir = tmpDir("idx")
     val built = InvertedIndex.build(spark, Synth.pages(spark, N, Seed, 4), dir, params)
@@ -102,11 +93,24 @@ class IndexSpec extends SparkSpec {
   }
 
   test("rank-identical top-k vs brute-force oracle on the reference query set") {
-    val h = Bm25.open(spark, indexDir, params.nTermBuckets)
-    for (q <- Synth.refTitles) {
+    val h0 = Bm25.open(spark, indexDir, params.nTermBuckets)
+    // the driver scorer and the Spark plan (localPostings = 0 forces it)
+    for ((h, path) <- Seq(h0 -> "driver", h0.copy(localPostings = 0L) -> "spark");
+         q <- Synth.refTitles) {
       val got = h.topk(q, 10).as[(Long, Double)].collect().toSeq
-      assertRankIdentical(got, oracleTopk(q, 10), s"topk '$q'")
+      assertRankIdentical(got, oracleTopk(q, 10), s"$path topk '$q'")
     }
+  }
+
+  test("build postings files are sorted by term") {
+    // a file's rows come back contiguous and in file order: each file is
+    // one split, read front to back
+    val files = spark.read.parquet(s"$indexDir/postings")
+      .select(input_file_name(), $"term").as[(String, String)].collect()
+      .groupBy(_._1)
+    assert(files.size > 1)
+    for ((f, rows) <- files; Array(a, b) <- rows.map(_._2).sliding(2))
+      assert(a <= b, s"$f: '$a' before '$b'")
   }
 
   test("driver-side term bucket is bit-identical to the Column form") {
@@ -121,14 +125,16 @@ class IndexSpec extends SparkSpec {
 
   test("WAND path is result-identical to exhaustive path") {
     // wandCutoff = 0 forces the theta-pruning path even on this tiny index
-    val h = Bm25.open(spark, indexDir, params.nTermBuckets).copy(wandCutoff = 0L)
+    val h0 = Bm25.open(spark, indexDir, params.nTermBuckets).copy(wandCutoff = 0L)
     val queries = Synth.refTitles.toSeq ++ Seq(
       "w1 w2 w3", "the0 w5 w40", "w1 the0", "w7", "w100 w200 w3000",
       "w1 w1 w2" /* duplicate query term → qtf=2 */)
-    for (q <- queries; k <- Seq(1, 5, 10)) {
+    // the driver scorer and the Spark plans (localPostings = 0 forces them)
+    for ((h, path) <- Seq(h0 -> "driver", h0.copy(localPostings = 0L) -> "spark");
+         q <- queries; k <- Seq(1, 5, 10)) {
       val ex = h.topk(q, k).as[(Long, Double)].collect().toSeq
       val wd = h.topkWand(q, k).as[(Long, Double)].collect().toSeq
-      assertRankIdentical(wd, ex, s"wand '$q' k=$k")
+      assertRankIdentical(wd, ex, s"$path wand '$q' k=$k")
     }
   }
 

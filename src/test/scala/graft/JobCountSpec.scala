@@ -12,8 +12,8 @@ import graft.index.{BuildParams, InvertedIndex}
 import graft.query.Bm25
 import graft.streaming.StreamingIndex
 
-/** Spark-job budgets of the small-write paths, where per-job latency, not
-  * data volume, is the cost: a segment append and an index open. */
+/** Spark-job budgets of the small paths, where per-job latency, not data
+  * volume, is the cost: a segment append, an index open and a served query. */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -80,5 +80,18 @@ class JobCountSpec extends SparkSpec {
     info(s"open: ${openJobs.size} jobs — ${openJobs.mkString("; ")}")
     assert(!openJobs.exists(_.startsWith("parquet at")) && openJobs.size <= 3,
       s"open ran ${openJobs.size} jobs:\n${openJobs.mkString("\n")}")
+  }
+
+  test("a warm served query with URLs runs at most 2 Spark jobs") {
+    val dir = tmpDir("jobs-serve")
+    InvertedIndex.build(spark, Synth.pages(spark, 300, 11L, 4), dir,
+      BuildParams(numShards = 2, blockSize = 16))
+    val h = Bm25.open(spark, dir)
+    val q = "w1 w13"
+    h.withUrls(h.topkWand(q, 10)).collect() // warm-up
+    // one pruned block collect (scored on the driver), one docstats lookup
+    val jobs = jobsOf(h.withUrls(h.topkWand(q, 10)).collect())
+    info(s"served query: ${jobs.size} jobs — ${jobs.mkString("; ")}")
+    assert(jobs.size <= 2, s"served query ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 }

@@ -15,6 +15,16 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Same doc ids in the same order; scores equal up to summation order. */
+  def assertRankIdentical(got: Seq[(Long, Double)], want: Seq[(Long, Double)],
+                          ctx: String): Unit = {
+    assert(got.map(_._1) == want.map(_._1), s"[$ctx] doc ids differ: got=$got want=$want")
+    got.zip(want).foreach { case ((_, gs), (_, ws)) =>
+      assert(math.abs(gs - ws) <= 1e-9 * math.max(1.0, math.abs(ws)),
+        s"[$ctx] score drift: got=$gs want=$ws")
+    }
+  }
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.deleteOnExit()

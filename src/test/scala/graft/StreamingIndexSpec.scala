@@ -45,15 +45,20 @@ class StreamingIndexSpec extends SparkSpec {
     val hb = Bm25.open(spark, batchDir)
     assert(math.abs(h.avgdl - hb.avgdl) < 1e-9)
 
-    for (query <- Synth.refTitles.take(5) ++ Seq("w1 w3 the0", "w7 w20")) {
-      val streamed = h.topk(query, 10).as[(Long, Double)].collect().toSeq
-      val batch = hb.topk(query, 10).as[(Long, Double)].collect().toSeq
-      assert(streamed.map(_._1) == batch.map(_._1), s"'$query': $streamed vs $batch")
+    // both scorers: the driver one, and the Spark plans (localPostings = 0)
+    val scorers = Seq(0L -> "spark", Bm25.LocalPostings -> "driver")
+    for ((budget, path) <- scorers;
+         query <- Synth.refTitles.take(5) ++ Seq("w1 w3 the0", "w7 w20")) {
+      val streamed = h.copy(localPostings = budget)
+        .topk(query, 10).as[(Long, Double)].collect().toSeq
+      val batch = hb.copy(localPostings = budget)
+        .topk(query, 10).as[(Long, Double)].collect().toSeq
+      assert(streamed.map(_._1) == batch.map(_._1), s"$path '$query': $streamed vs $batch")
       // WAND over drifted segments must still equal exhaustive (cutoff 0
       // forces the pruning path on this tiny index)
-      val wand = h.copy(wandCutoff = 0L)
+      val wand = h.copy(wandCutoff = 0L, localPostings = budget)
         .topkWand(query, 10).as[(Long, Double)].collect().toSeq
-      assert(wand == streamed, s"wand drift for '$query'")
+      assert(wand == streamed, s"$path wand drift for '$query'")
     }
 
     // replaying a committed segment id is a no-op (exactly-once)
@@ -75,8 +80,9 @@ class StreamingIndexSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Double)].collect().toSeq
         .map { case (d, s) => (d, math.round(s * 1e6)) }.toSet
-    assert(canon(h2.topk("w1 w3 the0", 10)) ==
-      canon(hb.topk("w1 w3 the0", 10)))
+    for ((budget, _) <- scorers)
+      assert(canon(h2.copy(localPostings = budget).topk("w1 w3 the0", 10)) ==
+        canon(hb.copy(localPostings = budget).topk("w1 w3 the0", 10)))
   }
 
   test("append with mismatched nTermBuckets adopts the persisted layout " +
