@@ -9,7 +9,7 @@ import graft.index.InvertedIndex
 /** Optimization-round instrumentation main (guide §1: measure first) —
   * NOT the driver bench. [[Bench]] stays the frozen measurement harness;
   * this main exists so query-level work can be timed, plan-dumped and
-  * regression-hashed without touching it.
+  * regression-hashed, and build scaling measured, without touching it.
   *
   * Modes (first arg):
   *   time [pattern...]    — per-query wall seconds via the same
@@ -23,8 +23,20 @@ import graft.index.InvertedIndex
   *                          restructured query must keep its hash.
   *   explain <tag> [pat…] — `.explain("formatted")` of each query to
   *                          plans/r06/<query>_<tag>.txt.
+  *   jobs [pattern...]    — duration and call site of every Spark job of
+  *                          each query's warm pass.
+  *   scale <docs> <lo> <hi> [reps]
+  *                        — Bench phase 2 (`timedBuild`) at `lo` and `hi`
+  *                          cores: same per-level session conf, same pages
+  *                          parquet input, same warm build and params; prints
+  *                          the scaling efficiency t_lo / (t_hi · hi/lo).
+  *
+  * The query modes read the tables of env SPARK_GRAFT_SF_DIR at env
+  * SPARK_GRAFT_CPUS cores.
   */
 object BenchExtra {
+
+  private val Shm = "/dev/shm/graft_bextra"
 
   private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -32,24 +44,13 @@ object BenchExtra {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("time")
-    val pats = args.drop(if (mode == "explain") 2 else 1)
-    val tag = if (mode == "explain") args(1) else ""
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-
-    val shm = "/dev/shm/graft_bextra"
-    InvertedIndex.deleteDir(shm)
-    new java.io.File(s"$shm/tmp").mkdirs()
-    sys.props("java.io.tmpdir") = s"$shm/tmp"
-
-    // identical conf to Bench.session(cpus) — the suite's environment
+  /** Bench.session(cores)'s conf — the suite's environment. */
+  private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-benchextra")
-      .config("spark.local.dir", s"$shm/spark_local")
-      .config("spark.sql.shuffle.partitions", 2 * cpus)
+      .master(s"local[$cores]")
+      .appName(s"graft-benchextra-$cores")
+      .config("spark.local.dir", s"$Shm/spark_local")
+      .config("spark.sql.shuffle.partitions", 2 * cores)
       .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.sql.adaptive.enabled", "true")
@@ -58,6 +59,22 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("time")
+    InvertedIndex.deleteDir(Shm)
+    new java.io.File(s"$Shm/tmp").mkdirs()
+    sys.props("java.io.tmpdir") = s"$Shm/tmp"
+    if (mode == "scale") scale(args.drop(1)) else queries(mode, args)
+  }
+
+  private def queries(mode: String, args: Array[String]): Unit = {
+    val pats = args.drop(if (mode == "explain") 2 else 1)
+    val tag = if (mode == "explain") args(1) else ""
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val s = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // per-query job accounting: jobs started while a query is the active
     // one are attributed to it (single-threaded driver loop, so no races)
@@ -145,48 +162,18 @@ object BenchExtra {
     s.stop()
   }
 
-  /** Exact replica of Bench phase 2 (`timedBuild`): same per-level session
-    * conf, same pages parquet input, same warm build, same params — run as
-    * `runMain graft.BenchExtra2 <docs> <coresLow> <coresHigh> [reps]`.
-    * Exists so scaling-efficiency work can be measured without running the
-    * frozen 7-phase ladder. */
-}
-
-object BenchExtra2 {
-  private val ShmBase = "/dev/shm/graft_bx2"
-
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bx2-$cores")
-      .config("spark.local.dir", s"$ShmBase/spark_local")
-      .config("spark.sql.shuffle.partitions", 2 * cores)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  def main(args: Array[String]): Unit = {
+  private def scale(args: Array[String]): Unit = {
     val docs = args.headOption.map(_.toLong).getOrElse(300000L)
     val lo = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val hi = args.drop(2).headOption.map(_.toInt).getOrElse(8)
     val reps = args.drop(3).headOption.map(_.toInt).getOrElse(2)
-    val tmp = s"$ShmBase/tmp"
-    new java.io.File(tmp).mkdirs()
-    sys.props("java.io.tmpdir") = tmp
-    val pagesPath = s"$ShmBase/pages_$docs"
+    val tmp = s"$Shm/tmp"
+    val pagesPath = s"$Shm/pages_$docs"
 
     locally {
       val s = session(hi)
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(pagesPath, "_SUCCESS")))
-        graft.data.Synth.pages(s, docs, 42L, 64)
-          .write.mode("overwrite").parquet(pagesPath)
+      graft.data.Synth.pages(s, docs, 42L, 64)
+        .write.mode("overwrite").parquet(pagesPath)
       s.stop()
     }
 
@@ -195,12 +182,12 @@ object BenchExtra2 {
       import s.implicits._
       val pages = s.read.parquet(pagesPath).as[graft.data.Page]
       if (warm) {
-        val warmDir = s"$tmp/graft_bx2_warm_$cores"
+        val warmDir = s"$tmp/graft_scale_warm_$cores"
         InvertedIndex.deleteDir(warmDir)
         InvertedIndex.build(s, pages.limit(5000), warmDir,
           graft.index.BuildParams(numShards = 1))
       }
-      val idxDir = s"$tmp/graft_bx2_idx_$cores"
+      val idxDir = s"$tmp/graft_scale_idx_$cores"
       InvertedIndex.deleteDir(idxDir)
       val t0 = System.nanoTime()
       InvertedIndex.build(s, pages, idxDir, graft.index.BuildParams(numShards = 4))
@@ -215,7 +202,7 @@ object BenchExtra2 {
       tl += timedBuild(lo, warm = rep == 0)
       th += timedBuild(hi, warm = rep == 0)
       val eff = tl.min / (th.min * (hi.toDouble / lo))
-      println(f"[bx2] rep $rep: t$lo=${tl.last}%.2f t$hi=${th.last}%.2f " +
+      println(f"[scale] rep $rep: t$lo=${tl.last}%.2f t$hi=${th.last}%.2f " +
         f"min t$lo=${tl.min}%.2f t$hi=${th.min}%.2f eff(min)=$eff%.3f " +
         f"eff(pair)=${tl.last / (th.last * (hi.toDouble / lo))}%.3f")
     }

@@ -185,58 +185,8 @@ object IndexBuild {
       }
   }
 
-  private def tfSat(tf: Int, dl: Int, avgdl: Double, k1: Double, b: Double): Double =
+  private[index] def tfSat(tf: Int, dl: Int, avgdl: Double, k1: Double, b: Double): Double =
     tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
-  /** Encode one doc_id-sorted run of [[RunValue]]s into blocks of ≤
-    * blockSize MERGED postings. Consecutive rows with equal doc_id are
-    * merged by summing tf BEFORE a posting is appended (a doc's merged
-    * posting therefore never splits across blocks) — this keeps the
-    * raw-token-instance feed (tf=1 per occurrence) working with no
-    * separate corpus-wide (term, doc_id) aggregation shuffle, and is a
-    * no-op on pre-aggregated input. Blocks are byte-identical to the old
-    * Posting-object pipeline; the rewrite removes one Posting allocation
-    * per shuffled row and the boxed ArrayBuffer[Long] appends (three boxed
-    * longs per posting) from the hottest loop of the build's one big
-    * shuffle. */
-  private def encodeRunValues(shard: Int, term: String, salt: Int,
-                              rvs: Iterator[RunValue], blockSize: Int,
-                              avgdl: Double, k1: Double, b: Double
-                             ): Iterator[PostingBlock] =
-    new Iterator[PostingBlock] {
-      private val buf = rvs.buffered
-      private val docs = new Array[Long](blockSize)
-      private val tfs = new Array[Long](blockSize)
-      private val dls = new Array[Long](blockSize)
-      private var blockId = 0
-      def hasNext: Boolean = buf.hasNext
-      def next(): PostingBlock = {
-        var n = 0
-        var maxTf = 0
-        var maxSat = 0.0
-        while (buf.hasNext && n < blockSize) {
-          val v = buf.next()
-          val docId = v.doc_id
-          var tf = (v.tfdl >>> 32).toInt
-          val dl = v.tfdl.toInt
-          while (buf.hasNext && buf.head.doc_id == docId)
-            tf += (buf.next().tfdl >>> 32).toInt
-          docs(n) = docId; tfs(n) = tf.toLong; dls(n) = dl.toLong
-          if (tf > maxTf) maxTf = tf
-          val s = tfSat(tf, dl, avgdl, k1, b)
-          if (s > maxSat) maxSat = s
-          n += 1
-        }
-        val blk = PostingBlock(
-          shard, term, salt, blockId, docs(0), docs(n - 1), n,
-          maxTf, maxSat,
-          VarByte.encodeDeltas(java.util.Arrays.copyOf(docs, n)),
-          VarByte.encode(java.util.Arrays.copyOf(tfs, n)),
-          VarByte.encode(java.util.Arrays.copyOf(dls, n)))
-        blockId += 1
-        blk
-      }
-    }
 
   /** Decode a block back to postings (sorted by doc_id). */
   def decodeBlock(blk: PostingBlock): Iterator[Posting] = {
@@ -248,7 +198,7 @@ object IndexBuild {
   }
 
   /** Number of range-salt buckets for a term with ~df postings per shard. */
-  private def saltCount(df: Long, targetPerSalt: Long): Int =
+  private[index] def saltCount(df: Long, targetPerSalt: Long): Int =
     math.max(2, math.ceil(df.toDouble / targetPerSalt).toInt)
 
   /** Range salt of a doc_id among n buckets: doc ids are xxhash64-uniform
@@ -263,12 +213,6 @@ object IndexBuild {
     * property instead of a compute stage). */
   def rangeSalt(docId: Long, n: Int): Int =
     if (n <= 1) 0 else (docId / (Long.MaxValue / n + 1)).toInt
-
-  /** The shuffled value of the salted sort: doc_id plus (tf, dl) packed
-    * into one long. Byte discipline for the build's ONE big exchange —
-    * every UnsafeRow field costs a full 8-byte slot regardless of declared
-    * width, so two ints packed into one long halve their wire cost. */
-  private[index] case class RunValue(doc_id: Long, tfdl: Long)
 
   /** One map-side posting run: a doc_id-sorted, within-run-merged slice of
     * one (shard|salt, term) posting list, pre-compressed with the SAME
@@ -431,11 +375,11 @@ object IndexBuild {
 
   /** Reduce side: k-way-merge the doc_id-sorted runs of one (shard|salt,
     * term) group and chunk the merged stream into encoded blocks — the
-    * byte-identical successor of [[encodeRunValues]] (same merge-equal-
-    * doc_ids-then-chunk semantics over the same globally sorted stream;
-    * runs never interleave equal doc_ids unless the caller fed duplicate
-    * (term, doc) rows across partitions, which the merge handles exactly
-    * like the old sorted shuffle did). */
+    * byte-identical successor of the row-per-posting sorted shuffle (same
+    * merge-equal-doc_ids-then-chunk semantics over the same globally sorted
+    * stream; runs never interleave equal doc_ids unless the caller fed
+    * duplicate (term, doc) rows across partitions, which the merge handles
+    * exactly like the old sorted shuffle did). */
   private def mergeRunsEncode(shard: Int, term: String, salt: Int,
                               runs: Array[PostingRun], blockSize: Int,
                               avgdl: Double, k1: Double, b: Double
@@ -567,7 +511,7 @@ object IndexBuild {
     * per-posting sort runs as primitive-array quicksorts inside map tasks.
     * Block output is byte-identical (same per-(term,salt) doc_id-sorted
     * merged stream — asserted by IndexSpec against the old sorted-shuffle
-    * path, which survives as [[saltedRunsSortShuffle]]). */
+    * path, kept in test scope as `ParityRefs.saltedRunsSortShuffle`). */
   def saltedRuns(tf: Dataset[ShardPosting], hotDf: Map[String, Long],
                  p: BuildParams, avgdl: Double): Dataset[PostingBlock] = {
     val spark = tf.sparkSession
@@ -583,31 +527,6 @@ object IndexBuild {
       .flatMapGroups { (key: (Long, String), it: Iterator[PostingRun]) =>
         mergeRunsEncode((key._1 >>> 32).toInt, key._2, key._1.toInt,
           it.toArray, blockSize, avgdl, k1, b)
-      }
-  }
-
-  /** The previous row-per-posting salted sort — kept as the parity
-    * reference for [[saltedRuns]] (IndexSpec asserts byte-identical blocks)
-    * and as the head-to-head baseline in `Main profile`. */
-  private[graft] def saltedRunsSortShuffle(
-      tf: Dataset[ShardPosting], hotDf: Map[String, Long],
-      p: BuildParams, avgdl: Double): Dataset[PostingBlock] = {
-    val spark = tf.sparkSession
-    import spark.implicits._
-    val hotSalts: Map[String, Int] = hotDf.map { case (t, df) =>
-      t -> saltCount(df, p.targetPerSalt)
-    }
-    val bcHot = spark.sparkContext.broadcast(hotSalts)
-    val (k1, b, blockSize) = (p.k1, p.b, p.blockSize)
-    tf
-      .groupByKey { pp =>
-        val n = bcHot.value.getOrElse(pp.term, 1)
-        ((pp.shard.toLong << 32) | (rangeSalt(pp.doc_id, n) & 0xFFFFFFFFL), pp.term)
-      }
-      .mapValues(pp => RunValue(pp.doc_id, (pp.tf.toLong << 32) | pp.dl))
-      .flatMapSortedGroups($"doc_id") { case ((gk, term), it) =>
-        encodeRunValues((gk >>> 32).toInt, term, gk.toInt, it,
-          blockSize, avgdl, k1, b)
       }
   }
 

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash groupBy), MinHash + LSH banding (shingle → minhash → band →
@@ -13,14 +15,21 @@ import org.apache.spark.sql.functions._
   * minima are taken lexicographically on the hex string, and numeric digests
   * are derived from hex digits via base-16 conversion, so no engine-specific
   * hash function leaks into results — which is what gives every operator an
-  * exact DuckDB oracle. [[Xx64]] is the production Spark-only path: codegen'd
-  * xxhash64 (no MessageDigest allocation, an order of magnitude cheaper per
-  * token at 100 TB), rendered as zero-padded two's-complement hex so the
-  * column schema and the min/band mechanics are identical — lexicographic
-  * order on the padded hex IS unsigned-64 numeric order. The two modes give
-  * different (both valid) signatures; oracle queries stay pinned to md5.
+  * exact DuckDB oracle. [[Xx64]] is the production Spark-only path:
+  * xxhash64 (no MessageDigest, an order of magnitude cheaper per token at
+  * 100 TB), rendered as zero-padded two's-complement hex so the column
+  * schema and the min/band mechanics are identical — lexicographic order on
+  * the padded hex IS unsigned-64 numeric order. The two modes give different
+  * (both valid) signatures; oracle queries stay pinned to md5.
   *
-  * Scale notes: everything is groupBy/join on (doc_id | term | shingle |
+  * Every signature op is one map-only typed pass over the doc's own tokens
+  * (a signature never needs a (doc_id) aggregation), built on one per-task
+  * hash [[Kernel]] chosen by the mode; MinHashSearch computes its query
+  * signatures with the same functions on the driver. The Column forms the
+  * DuckDB oracles mirror are the parity references in test scope, except
+  * [[minhashColumnar]], which the frozen bench also times.
+  *
+  * Scale notes: everything else is groupBy/join on (doc_id | shingle |
   * band_hash) keys — shuffle-partitioned by key, no driver materialization;
   * LSH banding is exactly the "bucket join beats all-pairs" trick that makes
   * near-dup detection feasible at 10^12 docs (the all-pairs q_jaccard path
@@ -33,32 +42,94 @@ object Dedup {
   sealed trait HashMode
   /** Hex MD5 (DuckDB-oracle-portable; the default). */
   case object Md5Portable extends HashMode
-  /** Codegen'd xxhash64 as zero-padded hex (production; no SQL twin). */
+  /** xxhash64 as zero-padded hex (production; no SQL twin). */
   case object Xx64 extends HashMode
 
   /** 16-hex-char digest of `c` under `mode`, lexicographically orderable in
     * both modes (md5 prefix / unsigned-64 padded hex). Xx64 renders via
     * lpad(hex(..)) — pure codegen'd string ops; format_string("%016x")
-    * spins up a java.util.Formatter per row and measured SLOWER than md5,
-    * defeating the point of the production path. */
-  private def hashHex(c: Column, mode: HashMode): Column = mode match {
+    * spins up a java.util.Formatter per row and measured SLOWER than md5. */
+  private[graft] def hashHex(c: Column, mode: HashMode): Column = mode match {
     case Md5Portable => substring(md5(c.cast("binary")), 1, 16)
     case Xx64 => lower(lpad(hex(xxhash64(c)), 16, "0"))
   }
 
-  private def md5s(c: Column): Column = md5(c.cast("binary"))
-
-  // ---- typed signature kernel (shared by the fast paths of BOTH modes) ---
-
   private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
 
-  /** First 8 digest bytes as a big-endian long — unsigned order on this
-    * long IS lexicographic order on the digest's lowercase 16-hex-char
-    * prefix, so minima can stay raw longs until the winner is rendered. */
-  private def prefix64(d: Array[Byte]): Long =
-    ((d(0) & 0xFFL) << 56) | ((d(1) & 0xFFL) << 48) | ((d(2) & 0xFFL) << 40) |
-      ((d(3) & 0xFFL) << 32) | ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
-      ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
+  // ---- the hash kernel ---------------------------------------------------
+
+  /** One task's hash state for a [[HashMode]]. Built per partition (and per
+    * call on the driver): `MessageDigest` is neither serializable nor
+    * thread-safe. An abstract class rather than a function value, so the
+    * 64-bit result is never boxed. */
+  private[ops] abstract class Kernel {
+    /** Hash of `prefix ++ tok`, ordered as unsigned: the first 8 md5 bytes
+      * big-endian (≡ the 16-hex-char md5 prefix) or XXH64(seed = 42), the
+      * hash Spark's `xxhash64` computes. */
+    def h64(prefix: Array[Byte], tok: Array[Byte]): Long
+
+    /** The band/prefix hash of `bytes` as hex: the full 32-char md5, or the
+      * 16-char padded xxhash64. */
+    def hexDigest(bytes: Array[Byte]): String
+
+    // "$sd:" and "$sd:$rep:" hash-input prefixes, cached for sd, rep < 64
+    private val seedPre = new Array[Array[Byte]](64)
+    private val repPre = Array.ofDim[Array[Byte]](64, 64)
+
+    final def seedPrefix(sd: Int): Array[Byte] =
+      if (sd >= 64) s"$sd:".getBytes(UTF8)
+      else {
+        if (seedPre(sd) == null) seedPre(sd) = s"$sd:".getBytes(UTF8)
+        seedPre(sd)
+      }
+
+    final def repPrefix(sd: Int, rep: Int): Array[Byte] =
+      if (sd >= 64 || rep >= 64) s"$sd:$rep:".getBytes(UTF8)
+      else {
+        if (repPre(sd)(rep) == null) repPre(sd)(rep) = s"$sd:$rep:".getBytes(UTF8)
+        repPre(sd)(rep)
+      }
+  }
+
+  private final class Md5Kernel extends Kernel {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    private val dig = new Array[Byte](16)
+
+    def h64(prefix: Array[Byte], tok: Array[Byte]): Long = {
+      md.reset(); md.update(prefix); md.update(tok); md.digest(dig, 0, 16)
+      ((dig(0) & 0xFFL) << 56) | ((dig(1) & 0xFFL) << 48) | ((dig(2) & 0xFFL) << 40) |
+        ((dig(3) & 0xFFL) << 32) | ((dig(4) & 0xFFL) << 24) | ((dig(5) & 0xFFL) << 16) |
+        ((dig(6) & 0xFFL) << 8) | (dig(7) & 0xFFL)
+    }
+
+    def hexDigest(bytes: Array[Byte]): String = {
+      md.reset(); md.update(bytes); md.digest(dig, 0, 16)
+      hex32(dig)
+    }
+  }
+
+  private final class Xx64Kernel extends Kernel {
+    private var buf = new Array[Byte](64)
+
+    private def xx(b: Array[Byte], len: Int): Long =
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+
+    def h64(prefix: Array[Byte], tok: Array[Byte]): Long = {
+      val len = prefix.length + tok.length
+      if (buf.length < len) buf = new Array[Byte](len * 2)
+      System.arraycopy(prefix, 0, buf, 0, prefix.length)
+      System.arraycopy(tok, 0, buf, prefix.length, tok.length)
+      xx(buf, len)
+    }
+
+    def hexDigest(bytes: Array[Byte]): String = hex16(xx(bytes, bytes.length))
+  }
+
+  private[ops] def kernel(mode: HashMode): Kernel = mode match {
+    case Md5Portable => new Md5Kernel
+    case Xx64 => new Xx64Kernel
+  }
 
   /** Zero-padded lowercase 16-hex render — the exact bytes the Column forms
     * emit (md5-hex prefix / lpad(hex(xxhash64))). */
@@ -69,8 +140,7 @@ object Dedup {
 
   private val HexDigits = "0123456789abcdef".toCharArray
 
-  /** Full lowercase 32-hex render of a 16-byte digest (the band/prefix
-    * hashes are FULL md5 hex in Md5Portable mode). */
+  /** Lowercase 32-hex render of a 16-byte digest. */
   private def hex32(d: Array[Byte]): String = {
     val out = new Array[Char](32)
     var i = 0
@@ -82,75 +152,130 @@ object Dedup {
     new String(out)
   }
 
-  /** Per-doc md5 seed minima over tokens of `text` (hash input
-    * "$sd:$token"), kept as unsigned 64-bit digest prefixes. Returns null
-    * for docs with no tokens — identical empty-doc semantics to the Column
-    * forms. `md`/`dig` are per-partition scratch (MessageDigest.digest into
-    * a reused 16-byte buffer — no allocation per hash). */
-  private def md5Minima(text: String, prefixes: Array[Array[Byte]],
-                        md: java.security.MessageDigest,
-                        dig: Array[Byte]): Array[Long] = {
-    val nSeeds = prefixes.length
-    val toks = if (text == null) Array.empty[String] else text.split(' ')
-    val mins = Array.fill(nSeeds)(-1L) // unsigned max
-    var any = false
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.nonEmpty) {
-        any = true
-        val tb = t.getBytes(UTF8)
+  // ---- signature functions (doc passes and driver-side queries) ----------
+
+  /** Per-seed minima of h64("$sd:" ++ token) over `toks`, as unsigned
+    * longs (≡ lexicographic minima of their hex renders; min over duplicates
+    * = min over the set). Null when there are no tokens: an empty doc has no
+    * signature. */
+  private[ops] def minima(toks: Array[String], nSeeds: Int, k: Kernel): Array[Long] =
+    if (toks.isEmpty) null
+    else {
+      val mins = Array.fill(nSeeds)(-1L) // unsigned max
+      var i = 0
+      while (i < toks.length) {
+        val tb = toks(i).getBytes(UTF8)
         var sd = 0
         while (sd < nSeeds) {
-          md.reset()
-          md.update(prefixes(sd))
-          md.update(tb)
-          md.digest(dig, 0, 16)
-          val h = prefix64(dig)
+          val h = k.h64(k.seedPrefix(sd), tb)
           if (java.lang.Long.compareUnsigned(h, mins(sd)) < 0) mins(sd) = h
           sd += 1
         }
+        i += 1
       }
-      i += 1
+      mins
     }
-    if (any) mins else null
-  }
 
-  /** Growable per-partition byte scratch for the xx64 kernel. */
-  private final class Scratch { var buf = new Array[Byte](64) }
-
-  /** Per-doc xx64 seed minima (hash input "$sd:$token" through the same
-    * XXH64(seed=42) Spark's `xxhash64` uses). Returns null for empty docs. */
-  private def xx64Minima(text: String, prefixes: Array[Array[Byte]],
-                         sc: Scratch): Array[Long] = {
-    val nSeeds = prefixes.length
-    val toks = if (text == null) Array.empty[String] else text.split(' ')
-    val mins = Array.fill(nSeeds)(-1L) // unsigned max
-    var any = false
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.nonEmpty) {
-        any = true
-        val tb = t.getBytes(UTF8)
-        var sd = 0
-        while (sd < nSeeds) {
-          val p = prefixes(sd)
-          val len = p.length + tb.length
-          if (sc.buf.length < len) sc.buf = new Array[Byte](len * 2)
-          System.arraycopy(p, 0, sc.buf, 0, p.length)
-          System.arraycopy(tb, 0, sc.buf, p.length, tb.length)
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashUnsafeBytes(sc.buf,
-              org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
-          if (java.lang.Long.compareUnsigned(h, mins(sd)) < 0) mins(sd) = h
-          sd += 1
+  /** tf-weighted minima: [[minima]] over the multiset {(term, rep) : rep <
+    * tf(term)} with hash input "$sd:$rep:$term". Null for an empty doc. */
+  private def weightedMinima(tf: java.util.HashMap[String, Integer], nSeeds: Int,
+                             k: Kernel): Array[Long] =
+    if (tf.isEmpty) null
+    else {
+      val mins = Array.fill(nSeeds)(-1L) // unsigned max
+      val e = tf.entrySet().iterator()
+      while (e.hasNext) {
+        val ent = e.next()
+        val tb = ent.getKey.getBytes(UTF8)
+        val n = ent.getValue.intValue()
+        var rep = 0
+        while (rep < n) {
+          var sd = 0
+          while (sd < nSeeds) {
+            val h = k.h64(k.repPrefix(sd, rep), tb)
+            if (java.lang.Long.compareUnsigned(h, mins(sd)) < 0) mins(sd) = h
+            sd += 1
+          }
+          rep += 1
         }
       }
-      i += 1
+      mins
     }
-    if (any) mins else null
+
+  /** Band hashes of a signature, indexed by band: band b hashes the
+    * comma-join of the hex minima of seeds [b·rowsPerBand, (b+1)·rowsPerBand)
+    * in seed order (the last band may be short). */
+  private[ops] def bands(mins: Array[Long], rowsPerBand: Int, k: Kernel): Array[String] = {
+    val hx = mins.map(hex16)
+    Array.tabulate((mins.length + rowsPerBand - 1) / rowsPerBand) { b =>
+      k.hexDigest(hx.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
+        .mkString(",").getBytes(UTF8))
+    }
   }
+
+  /** Signature prefix hashes, indexed by depth r − 1 for r = 1..nSeeds: the
+    * hash of the comma-join of the hex minima of seeds 0..r−1 (the LSH
+    * forest's prefix tree, one hash per depth). */
+  private[ops] def prefixHashes(mins: Array[Long], k: Kernel): Array[String] = {
+    val sb = new java.lang.StringBuilder(mins.length * 17)
+    Array.tabulate(mins.length) { r =>
+      if (r > 0) sb.append(',')
+      sb.append(hex16(mins(r)))
+      k.hexDigest(sb.toString.getBytes(UTF8))
+    }
+  }
+
+  // ---- per-doc helpers ---------------------------------------------------
+
+  /** The doc's non-empty space-separated tokens (null text → none). */
+  private def tokens(text: String): Array[String] =
+    if (text == null) Array.empty[String]
+    else {
+      val t = text.split(' ')
+      if (t.exists(_.isEmpty)) t.filter(_.nonEmpty) else t
+    }
+
+  /** Per-doc term frequencies. */
+  private def termFreqs(toks: Array[String]): java.util.HashMap[String, Integer] = {
+    val tf = new java.util.HashMap[String, Integer]()
+    toks.foreach(t => tf.merge(t, 1, (a: Integer, b: Integer) => a + b))
+    tf
+  }
+
+  /** The doc's n-token windows joined by single spaces, in order. */
+  private def windows(toks: Array[String], n: Int): Iterator[String] = {
+    val sb = new java.lang.StringBuilder(64)
+    (0 to toks.length - n).iterator.map { i =>
+      sb.setLength(0)
+      var j = i
+      while (j < i + n) {
+        if (j > i) sb.append(' ')
+        sb.append(toks(j))
+        j += 1
+      }
+      sb.toString
+    }
+  }
+
+  /** One map-only pass over (doc_id, text): `init` builds the per-task
+    * state once per partition, `f` emits each doc's rows, named `cols`. */
+  private def docPass[S, T <: Product : TypeTag](docs: DataFrame, cols: String*)(
+      init: => S)(f: (S, Long, String) => Iterator[T]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions { it =>
+        val s = init
+        it.flatMap { case (id, text) => f(s, id, text) }
+      }(Encoders.product[T])
+      .toDF(cols: _*)
+  }
+
+  /** (doc_id, seed, minhash) rows of a signature. */
+  private def sigRows(id: Long, mins: Array[Long]): Iterator[(Long, Long, String)] =
+    if (mins == null) Iterator.empty
+    else mins.indices.iterator.map(sd => (id, sd.toLong, hex16(mins(sd))))
+
+  // ---- operators ---------------------------------------------------------
 
   /** Exact dedup groups: content hash → group size + canonical (min) id.
     *
@@ -163,7 +288,7 @@ object Dedup {
     * reversed input), concatenated to the same 32-hex width as md5. */
   def exact(docs: DataFrame, hash: HashMode = Md5Portable): DataFrame = {
     val h = hash match {
-      case Md5Portable => md5s(col("text")) // full 32-hex digest (pinned oracle shape)
+      case Md5Portable => md5(col("text").cast("binary")) // full 32-hex digest (pinned oracle shape)
       case Xx64 => concat(hashHex(col("text"), Xx64),
         lower(lpad(hex(xxhash64(reverse(col("text")))), 16, "0")))
     }
@@ -171,49 +296,19 @@ object Dedup {
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keep_id"))
   }
 
-  /** Per-(doc, seed) MinHash: min over tokens of hash(seed:term).
-    * Set semantics are automatic (min over duplicates = min over set).
-    *
-    * ZERO-shuffle: a signature is a min over the doc's OWN tokens, so it
-    * never needs a (doc_id) aggregation at all — each row computes all
-    * nSeeds minima narrowly with `array_min(transform(tokens, …))`. Round
-    * 2's one-shuffle groupBy was already 8× better than the tokens×seeds
-    * crossJoin, but it still pushed the whole token relation through an
-    * exchange; measured at 100k pages (~10M tokens) the shuffle dominated
-    * the hash cost. This shape is map-only — at 10^12 docs the operator
-    * costs exactly one pass over the corpus. */
+  /** Per-(doc, seed) MinHash: min over tokens of hash("$sd:$token"), as
+    * 16-hex strings; empty docs have no signature. Zero-shuffle, and only
+    * the nSeeds winners are rendered as hex — the Column form renders one
+    * string per (token × seed) and takes `array_min` over strings (measured
+    * 15× slower for xx64 at 300k pages). */
   def minhash(docs: DataFrame, nSeeds: Int = 8,
-              hash: HashMode = Md5Portable): DataFrame = hash match {
-    // both modes route to zero-shuffle typed passes, byte-identical to
-    // their Column forms (parity-tested); the Column forms survive as the
-    // oracle shapes / parity references
-    case Md5Portable => minhashFastMd5(docs, nSeeds)
-    case Xx64 => minhashFast(docs, nSeeds)
-  }
+              hash: HashMode = Md5Portable): DataFrame =
+    docPass(docs, "doc_id", "seed", "minhash")(kernel(hash)) { (k, id, text) =>
+      sigRows(id, minima(tokens(text), nSeeds, k))
+    }
 
-  /** Typed fast path for [[minhash]] in [[Md5Portable]] mode —
-    * byte-identical to [[minhashColumnar]] (parity-tested): same md5 of
-    * "$sd:$token", minima compared as unsigned digest prefixes (≡
-    * lexicographic hex minima), same empty-doc semantics. Removes the
-    * per-(token × seed) hex-string render and `transform`/`array_min`
-    * machinery the Column form pays — the md5 twin of [[minhashFast]]. */
-  def minhashFastMd5(docs: DataFrame, nSeeds: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val dig = new Array[Byte](16)
-        val prefixes = Array.tabulate(nSeeds)(sd => s"$sd:".getBytes(UTF8))
-        it.flatMap { case (id, text) =>
-          val mins = md5Minima(text, prefixes, md, dig)
-          if (mins == null) Iterator.empty
-          else (0 until nSeeds).iterator.map(sd => (id, sd.toLong, hex16(mins(sd))))
-        }
-      }.toDF("doc_id", "seed", "minhash")
-  }
-
-  /** The Column-function form of [[minhash]] — the md5 oracle shape, and
-    * the parity reference the fast path is tested against. */
+  /** The Column-function form of [[minhash]] — the md5 oracle shape and
+    * the parity reference; the frozen bench times its xx64 form. */
   private[graft] def minhashColumnar(docs: DataFrame, nSeeds: Int = 8,
                                      hash: HashMode = Md5Portable): DataFrame = {
     val toks = filter(split(col("text"), " "), t => t =!= "")
@@ -228,143 +323,29 @@ object Dedup {
         col("col").as("minhash"))
   }
 
-  /** Production fast path for [[minhash]] in [[Xx64]] mode — byte-identical
-    * output (property-tested in SearchOpsSpec), one typed pass.
-    *
-    * Why it exists: with both modes warmed, the bench measured the Column
-    * forms at parity (~12 s / 100k pages) — the per-token hash is NOT the
-    * bottleneck; the `transform`-array machinery is, because it renders a
-    * 16-char hex string per (token × seed) and takes `array_min` over
-    * STRINGS. This pass keeps the minima as raw longs compared UNSIGNED
-    * (identical order to the padded-hex lexicographic min), hashes
-    * prefix+token bytes directly with the same XXH64(seed=42) Spark's
-    * `xxhash64` uses (driver-twin parity is the already-tested
-    * Bm25.termBucket pattern), and renders exactly nSeeds hex strings per
-    * document. Measured **15×** faster than either Column form (2.4 s vs
-    * ~35 s for 300k pages / 252M token-seed hashes ≈ 106M hashes/s; bench
-    * key minhash_xx64_sec vs minhash_xx64_columnar_sec). mapPartitions is
-    * justified here by the brief's own escape hatch: genuine per-partition
-    * imperative logic that the Column form demonstrably cannot match. */
-  def minhashFast(docs: DataFrame, nSeeds: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val prefixes = Array.tabulate(nSeeds)(sd => s"$sd:".getBytes(UTF8))
-        val sc = new Scratch
-        it.flatMap { case (id, text) =>
-          val mins = xx64Minima(text, prefixes, sc)
-          if (mins == null) Iterator.empty // empty docs have no signature
-          else (0 until nSeeds).iterator.map(sd => (id, sd.toLong, hex16(mins(sd))))
-        }
-      }.toDF("doc_id", "seed", "minhash")
-  }
+  /** The LSH-forest prefix relation (doc_id, r, ph), r = 1..nSeeds, ph =
+    * md5 of the comma-joined md5 minima of seeds 0..r−1 ([[prefixHashes]]).
+    * Zero-shuffle: prefixes are a function of the doc's own signature. */
+  def minhashPrefixes(docs: DataFrame, nSeeds: Int = 8): DataFrame =
+    docPass(docs, "doc_id", "r", "ph")(kernel(Md5Portable)) { (k, id, text) =>
+      val mins = minima(tokens(text), nSeeds, k)
+      if (mins == null) Iterator.empty
+      else prefixHashes(mins, k).iterator.zipWithIndex
+        .map { case (ph, r) => (id, r + 1L, ph) }
+    }
 
-  /** Typed fast path for the LSH-forest prefix relation (doc_id, r, ph),
-    * r = 1..nSeeds, ph = full md5 of the comma-joined minima hex strings of
-    * seeds 0..r−1 — byte-identical to MinHashSearch.prefixes ∘ md5-minhash
-    * (parity-tested) and ZERO-shuffle: prefixes are a function of the doc's
-    * own signature, so the crossJoin + per-depth collect_list groupBy
-    * machinery (36 shuffled rows per doc) collapses into one map pass. */
-  def minhashPrefixesFastMd5(docs: DataFrame, nSeeds: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val dig = new Array[Byte](16)
-        val prefixes = Array.tabulate(nSeeds)(sd => s"$sd:".getBytes(UTF8))
-        val sb = new java.lang.StringBuilder(nSeeds * 17)
-        it.flatMap { case (id, text) =>
-          val mins = md5Minima(text, prefixes, md, dig)
-          if (mins == null) Iterator.empty
-          else {
-            sb.setLength(0)
-            (1 to nSeeds).iterator.map { r =>
-              if (r > 1) sb.append(',')
-              sb.append(hex16(mins(r - 1)))
-              val joined = sb.toString.getBytes(UTF8)
-              md.reset(); md.update(joined); md.digest(dig, 0, 16)
-              (id, r.toLong, hex32(dig))
-            }
-          }
-        }
-      }.toDF("doc_id", "r", "ph")
-  }
-
-  /** LSH bands over the minhash signature: rows-per-band = 2, band hash =
-    * hash of the band's minima concatenated in seed order (deterministic via
-    * array_sort on (seed, minhash) structs). */
+  /** LSH bands over the minhash signature (doc_id, band, band_hash):
+    * rows-per-band = 2, band hash = hash of the band's hex minima joined in
+    * seed order ([[bands]]) — full md5 in Md5Portable mode, padded xxhash64
+    * in Xx64. Zero-shuffle: a doc's bands are a function of its signature. */
   def lshBands(docs: DataFrame, nSeeds: Int = 8, rowsPerBand: Int = 2,
                hash: HashMode = Md5Portable): DataFrame =
-    lshBandsFast(docs, nSeeds, rowsPerBand, hash)
-
-  /** The relational form of [[lshBands]] — the DuckDB oracle's shape and
-    * the parity reference for [[lshBandsFast]]. */
-  private[graft] def lshBandsColumnar(docs: DataFrame, nSeeds: Int = 8,
-                                      rowsPerBand: Int = 2,
-                                      hash: HashMode = Md5Portable): DataFrame = {
-    val bandCol = array_join(
-      transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-        x => x.getField("minhash")), ",")
-    val bandHash = hash match {
-      case Md5Portable => md5s(bandCol) // full digest (pinned oracle shape)
-      case Xx64 => hashHex(bandCol, Xx64)
+    docPass(docs, "doc_id", "band", "band_hash")(kernel(hash)) { (k, id, text) =>
+      val mins = minima(tokens(text), nSeeds, k)
+      if (mins == null) Iterator.empty
+      else bands(mins, rowsPerBand, k).iterator.zipWithIndex
+        .map { case (bh, b) => (id, b.toLong, bh) }
     }
-    minhashColumnar(docs, nSeeds, hash)
-      .withColumn("band", (col("seed") / rowsPerBand).cast("long"))
-      .groupBy(col("doc_id"), col("band"))
-      .agg(bandHash.as("band_hash"))
-  }
-
-  /** Typed fast path for [[lshBands]] — byte-identical to the relational
-    * form in BOTH modes (parity-tested) and ZERO-shuffle: a doc's bands are
-    * a function of its OWN signature, so the signature groupBy AND the band
-    * groupBy both disappear; one map pass emits (doc_id, band, band_hash)
-    * directly. Band hash input is the comma-join of the band's minima hex
-    * strings in seed order (what the array_sort(struct(seed, minhash))
-    * collect produces); Md5Portable hashes it with full-width md5, Xx64
-    * with xxhash64 rendered as padded hex. */
-  def lshBandsFast(docs: DataFrame, nSeeds: Int = 8, rowsPerBand: Int = 2,
-                   hash: HashMode = Md5Portable): DataFrame = {
-    import docs.sparkSession.implicits._
-    val isMd5 = hash == Md5Portable
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val dig = new Array[Byte](16)
-        val prefixes = Array.tabulate(nSeeds)(sd => s"$sd:".getBytes(UTF8))
-        val sc = new Scratch
-        val sb = new java.lang.StringBuilder(nSeeds * 17)
-        it.flatMap { case (id, text) =>
-          val mins =
-            if (isMd5) md5Minima(text, prefixes, md, dig)
-            else xx64Minima(text, prefixes, sc)
-          if (mins == null) Iterator.empty
-          else {
-            val nBands = (nSeeds + rowsPerBand - 1) / rowsPerBand
-            (0 until nBands).iterator.map { b =>
-              sb.setLength(0)
-              var sd = b * rowsPerBand
-              val end = math.min(nSeeds, sd + rowsPerBand)
-              while (sd < end) {
-                if (sd > b * rowsPerBand) sb.append(',')
-                sb.append(hex16(mins(sd)))
-                sd += 1
-              }
-              val joined = sb.toString.getBytes(UTF8)
-              val bh =
-                if (isMd5) {
-                  md.reset(); md.update(joined); md.digest(dig, 0, 16)
-                  hex32(dig)
-                } else hex16(org.apache.spark.sql.catalyst.expressions.XXH64
-                  .hashUnsafeBytes(joined,
-                    org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                    joined.length, 42L))
-              (id, b.toLong, bh)
-            }
-          }
-        }
-      }.toDF("doc_id", "band", "band_hash")
-  }
 
   /** Candidate near-dup pairs: docs sharing any band bucket.
     *
@@ -394,140 +375,48 @@ object Dedup {
 
   /** 32-bit SimHash from MD5 hex digits: for hex position p (1..8) and bit
     * j (0..3), the signed tf-weighted bit vote decides the output bit.
-    *
-    * Production route = [[simhashFast]]: ONE map-only typed pass
-    * (tf via a per-doc hash map, votes accumulated in a 32-slot array),
-    * bit-identical to the relational form — which survives as
-    * [[simhashColumnar]], the parity reference and the DuckDB oracle's
-    * shape. The relational plan costs two shuffles (the (doc,term) tf
-    * aggregation, then the (doc,bit) vote aggregation over a 32-way
-    * row multiplication); at corpus scale simhash is a signature pass and
-    * must cost one scan, like minhash. */
-  def simhash(docs: DataFrame): DataFrame = simhashFast(docs)
-
-  /** Zero-shuffle SimHash — bit-identical to [[simhashColumnar]]
-    * (parity-tested): same lowercase-hex MD5, same hex-digit/bit vote
-    * arithmetic, integer end-to-end. */
-  def simhashFast(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          val tf = new java.util.HashMap[String, Int]()
-          var i = 0
-          while (i < toks.length) {
-            val t = toks(i)
-            if (t.nonEmpty) tf.merge(t, 1, Integer.sum _)
-            i += 1
-          }
-          if (tf.isEmpty) Iterator.empty
-          else {
-            val votes = new Array[Long](32)
-            tf.forEach { (t, n) =>
-              md.reset()
-              val dig = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              // hex digit p (0-based 0..7) = nibble of byte p/2, high first —
-              // exactly substr(md5hex, p+1, 1) of the relational form
-              var p = 0
-              while (p < 8) {
-                val b = dig(p / 2) & 0xFF
-                val v = if (p % 2 == 0) b >>> 4 else b & 0xF
-                var j = 0
-                while (j < 4) {
-                  votes(p * 4 + j) += n.toLong * (((v >> j) & 1) * 2 - 1)
-                  j += 1
-                }
-                p += 1
-              }
+    * One map-only pass (votes accumulated in a 32-slot array), integer
+    * end-to-end; the relational form the oracle mirrors costs two shuffles. */
+  def simhash(docs: DataFrame): DataFrame =
+    docPass(docs, "doc_id", "simhash")(
+        java.security.MessageDigest.getInstance("MD5")) { (md, id, text) =>
+      val tf = termFreqs(tokens(text))
+      if (tf.isEmpty) Iterator.empty
+      else {
+        val votes = new Array[Long](32)
+        tf.forEach { (t, n) =>
+          md.reset()
+          val dig = md.digest(t.getBytes(UTF8))
+          // hex digit p (0-based 0..7) = nibble of byte p/2, high first —
+          // exactly substr(md5hex, p+1, 1) of the relational form
+          var p = 0
+          while (p < 8) {
+            val b = dig(p / 2) & 0xFF
+            val v = if (p % 2 == 0) b >>> 4 else b & 0xF
+            var j = 0
+            while (j < 4) {
+              votes(p * 4 + j) += n.longValue * (((v >> j) & 1) * 2 - 1)
+              j += 1
             }
-            var sim = 0L
-            var b = 0
-            while (b < 32) { if (votes(b) > 0) sim |= 1L << b; b += 1 }
-            Iterator.single((id, sim))
+            p += 1
           }
         }
-      }.toDF("doc_id", "simhash")
-  }
+        var sim = 0L
+        var b = 0
+        while (b < 32) { if (votes(b) > 0) sim |= 1L << b; b += 1 }
+        Iterator.single((id, sim))
+      }
+    }
 
-  /** The relational SimHash — the oracle shape and parity reference. */
-  private[graft] def simhashColumnar(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val tf = TextOps.termFreq(docs)
-      .withColumn("hx", md5s(col("term")))
-    val pj = spark.range(1, 9).toDF("p")
-      .crossJoin(spark.range(0, 4).toDF("j"))
-    tf.crossJoin(broadcast(pj))
-      .withColumn("v",
-        conv(col("hx").substr(col("p").cast("int"), lit(1)), 16, 10).cast("int"))
-      .withColumn("bit", ((col("p") - 1) * 4 + col("j")).cast("int"))
-      .withColumn("vote", col("tf") *
-        (expr("shiftright(v, cast(j as int))").bitwiseAND(1) * 2 - 1))
-      .groupBy(col("doc_id"), col("bit"))
-      .agg(sum(col("vote")).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("s") > 0,
-        expr("shiftleft(cast(1 as bigint), bit)")).otherwise(0L)).as("simhash"))
-  }
-
-  /** Distinct token n-gram shingles per doc — a NARROW array slide: the
-    * token array is built per row, windows of n are concatenated with
-    * `transform` over a `sequence` of start offsets, de-duplicated with
-    * `array_distinct`, then exploded. Zero shuffles before the downstream
-    * aggregation (the previous 3-way self-join of the exploded token table
-    * shuffled the full token relation twice for the same output — pure
-    * waste at corpus scale). The relational self-join form survives only in
-    * the DuckDB oracle (SparkEntry SH), which is exactly the cross-engine
-    * check that this slide emits the same shingle set. */
-  def shingles(docs: DataFrame, n: Int = 3): DataFrame = shinglesFast(docs, n)
-
-  /** Typed production route for [[shingles]] — identical (doc_id, shingle)
-    * set (parity-tested), one pass, no per-window HOF expression tree: the
-    * Column slide allocates a sliced array + concat per window through the
-    * `transform` machinery; here a single reused StringBuilder emits each
-    * window and a per-doc HashSet de-duplicates. Measured 1.6× on 100k
-    * pages (Main shinglebench: 7.1 s Column vs 4.4 s typed, warmed) — a
-    * smaller win than the signature passes because the output IS the
-    * strings either way; the HOF overhead is what goes away. */
-  def shinglesFast(docs: DataFrame, n: Int = 3): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val sb = new java.lang.StringBuilder(128)
-        it.flatMap { case (id, text) =>
-          val toks =
-            if (text == null) Array.empty[String]
-            else text.split(' ').filter(_.nonEmpty)
-          if (toks.length < n) Iterator.empty
-          else {
-            val seen = new java.util.HashSet[String]()
-            (0 to toks.length - n).iterator.flatMap { i =>
-              sb.setLength(0)
-              var k = 0
-              while (k < n) {
-                if (k > 0) sb.append(' ')
-                sb.append(toks(i + k))
-                k += 1
-              }
-              val s = sb.toString
-              if (seen.add(s)) Iterator.single((id, s)) else Iterator.empty
-            }
-          }
-        }
-      }.toDF("doc_id", "shingle")
-  }
-
-  /** The Column-slide form of [[shingles]] — the parity reference (the
-    * relational 3-way-join form lives only in the DuckDB oracle). */
-  private[graft] def shinglesColumnar(docs: DataFrame, n: Int = 3): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => t =!= "")
-    docs.select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(0), size(col("toks")) - n),
-          i => concat_ws(" ", slice(col("toks"), i + 1, lit(n)))))).as("shingle"))
-  }
+  /** Distinct token n-gram shingles per doc (doc_id, shingle), one map-only
+    * pass with a per-doc de-duplicating set. The relational 3-way self-join
+    * form lives only in the DuckDB oracle (SparkEntry SH), which is exactly
+    * the cross-engine check that this pass emits the same shingle set. */
+  def shingles(docs: DataFrame, n: Int = 3): DataFrame =
+    docPass(docs, "doc_id", "shingle")(()) { (_, id, text) =>
+      val seen = new java.util.HashSet[String]()
+      windows(tokens(text), n).filter(seen.add).map(s => (id, s))
+    }
 
   /** n-gram Jaccard near-dup pairs (≥ threshold), via shingle equi-join —
     * never an all-pairs product.
@@ -563,61 +452,33 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("jac_raw"), 6).as("jaccard"))
   }
 
-  /** Document fingerprint: lexicographic min MD5 over the doc's shingles
-    * (a winnowing-style rolling-window fingerprint, window = whole doc). */
-  def fingerprint(docs: DataFrame): DataFrame = fingerprintFast(docs)
-
-  /** The relational form of [[fingerprint]] — parity reference (the oracle
-    * computes the same min over the SH CTE). */
-  private[graft] def fingerprintColumnar(docs: DataFrame): DataFrame =
-    shinglesColumnar(docs).groupBy(col("doc_id"))
-      .agg(min(md5s(col("shingle"))).as("fingerprint"))
-
-  /** Typed fast path for [[fingerprint]] — byte-identical (parity-tested)
-    * and ZERO-shuffle: the min-md5 is a function of the doc's own shingle
-    * windows, so the shingle strings never leave the map task (no explode,
-    * no groupBy; min over duplicate shingles equals min over the set). */
-  def fingerprintFast(docs: DataFrame, n: Int = 3): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+  /** Document fingerprint: lexicographic min MD5 over the doc's 3-token
+    * shingles (a winnowing-style fingerprint, window = whole doc). Zero
+    * shuffle: the shingle strings never leave the map task. */
+  def fingerprint(docs: DataFrame): DataFrame = {
+    val n = 3
+    docPass(docs, "doc_id", "fingerprint")(
+        java.security.MessageDigest.getInstance("MD5")) { (md, id, text) =>
+      val toks = tokens(text)
+      if (toks.length < n) Iterator.empty
+      else {
         val dig = new Array[Byte](16)
         val best = new Array[Byte](16)
-        val sb = new java.lang.StringBuilder(128)
-        it.flatMap { case (id, text) =>
-          val toks =
-            if (text == null) Array.empty[String]
-            else text.split(' ').filter(_.nonEmpty)
-          if (toks.length < n) Iterator.empty
-          else {
-            var anyBest = false
-            var i = 0
-            while (i <= toks.length - n) {
-              sb.setLength(0)
-              var k = 0
-              while (k < n) {
-                if (k > 0) sb.append(' ')
-                sb.append(toks(i + k))
-                k += 1
-              }
-              md.reset()
-              md.update(sb.toString.getBytes(UTF8))
-              md.digest(dig, 0, 16)
-              // unsigned lexicographic digest compare ≡ hex-string min
-              var cmp = 0
-              var j = 0
-              while (cmp == 0 && j < 16) {
-                cmp = (dig(j) & 0xFF) - (if (anyBest) best(j) & 0xFF else 0x100)
-                j += 1
-              }
-              if (cmp < 0) { System.arraycopy(dig, 0, best, 0, 16); anyBest = true }
-              i += 1
-            }
-            Iterator.single((id, hex32(best)))
+        var anyBest = false
+        windows(toks, n).foreach { s =>
+          md.reset(); md.update(s.getBytes(UTF8)); md.digest(dig, 0, 16)
+          // unsigned lexicographic digest compare ≡ hex-string min
+          var cmp = 0
+          var j = 0
+          while (cmp == 0 && j < 16) {
+            cmp = (dig(j) & 0xFF) - (if (anyBest) best(j) & 0xFF else 0x100)
+            j += 1
           }
+          if (cmp < 0) { System.arraycopy(dig, 0, best, 0, 16); anyBest = true }
         }
-      }.toDF("doc_id", "fingerprint")
+        Iterator.single((id, hex32(best)))
+      }
+    }
   }
 
   // --- tf-weighted MinHash ---------------------------------------------
@@ -634,165 +495,16 @@ object Dedup {
     * encoding prefix-free, so distinct (seed, rep, term) triples never
     * collide as strings.
     *
-    * Scale: total replicated rows per doc = Σ_t tf = doc length, i.e. the
+    * Scale: total replicated hashes per doc = Σ_t tf = doc length, i.e. the
     * SAME work as unweighted [[minhash]] does over token instances — the
-    * weighting is free. Output shape matches [[minhash]]:
+    * weighting is free. One zero-shuffle pass (tf from a per-doc map), where
+    * the Column form pays two shuffles. Output shape matches [[minhash]]:
     * (doc_id, seed, minhash); empty docs have no signature. */
   def weightedMinhash(docs: DataFrame, nSeeds: Int = 8,
-                      hash: HashMode = Md5Portable): DataFrame = hash match {
-    // both modes route to zero-shuffle typed passes (parity-tested); the
-    // Column form keeps two shuffles and survives as the oracle shape
-    case Md5Portable => weightedMinhashFastMd5(docs, nSeeds)
-    case Xx64 => weightedMinhashFast(docs, nSeeds)
-  }
-
-  /** Typed fast path for [[weightedMinhash]] in [[Md5Portable]] mode —
-    * byte-identical to [[weightedMinhashColumnar]] (parity-tested), ZERO
-    * shuffle: tf from a per-doc HashMap, md5("$sd:$rep:$term") minima kept
-    * as unsigned digest prefixes, only the nSeeds winners rendered. Drops
-    * the columnar form's TWO shuffles (tf groupBy + signature groupBy) and
-    * its per-(instance × seed) hex render — the md5 twin of
-    * [[weightedMinhashFast]]. */
-  def weightedMinhashFastMd5(docs: DataFrame, nSeeds: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val dig = new Array[Byte](16)
-        // "$sd:$rep:" prefix bytes, cached for rep < 64 (same cache shape
-        // as the xx64 fast path)
-        val cache = Array.ofDim[Array[Byte]](nSeeds, 64)
-        def prefix(sd: Int, rep: Int): Array[Byte] =
-          if (rep < 64) {
-            var p = cache(sd)(rep)
-            if (p == null) { p = s"$sd:$rep:".getBytes(UTF8); cache(sd)(rep) = p }
-            p
-          } else s"$sd:$rep:".getBytes(UTF8)
-        it.flatMap { case (id, text) =>
-          val tf = new java.util.HashMap[String, Integer]()
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          var i = 0
-          while (i < toks.length) {
-            val t = toks(i)
-            if (t.nonEmpty) tf.merge(t, 1, (a: Integer, b: Integer) => a + b)
-            i += 1
-          }
-          if (tf.isEmpty) Iterator.empty
-          else {
-            val mins = Array.fill(nSeeds)(-1L) // unsigned max
-            val e = tf.entrySet().iterator()
-            while (e.hasNext) {
-              val ent = e.next()
-              val tb = ent.getKey.getBytes(UTF8)
-              val n = ent.getValue.intValue()
-              var rep = 0
-              while (rep < n) {
-                var sd = 0
-                while (sd < nSeeds) {
-                  md.reset()
-                  md.update(prefix(sd, rep))
-                  md.update(tb)
-                  md.digest(dig, 0, 16)
-                  val h = prefix64(dig)
-                  if (java.lang.Long.compareUnsigned(h, mins(sd)) < 0) mins(sd) = h
-                  sd += 1
-                }
-                rep += 1
-              }
-            }
-            (0 until nSeeds).iterator.map(sd => (id, sd.toLong, hex16(mins(sd))))
-          }
-        }
-      }.toDF("doc_id", "seed", "minhash")
-  }
-
-  /** Column-function form of [[weightedMinhash]] — the md5 oracle shape
-    * (tf via groupBy + sequence explode mirrors the DuckDB twin's
-    * generate-series expansion) and the parity reference for the fast
-    * path. */
-  private[graft] def weightedMinhashColumnar(docs: DataFrame, nSeeds: Int = 8,
-                                             hash: HashMode = Md5Portable): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => t =!= "")
-    val tf = docs.select(col("doc_id"), explode(toks).as("term"))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val reps = tf.select(col("doc_id"), col("term"),
-      explode(sequence(lit(0L), col("tf") - 1)).as("rep"))
-    val minima = (0 until nSeeds).map { sd =>
-      min(hashHex(concat(lit(s"$sd:"), col("rep").cast("string"), lit(":"),
-        col("term")), hash)).as(s"m$sd")
+                      hash: HashMode = Md5Portable): DataFrame =
+    docPass(docs, "doc_id", "seed", "minhash")(kernel(hash)) { (k, id, text) =>
+      sigRows(id, weightedMinima(termFreqs(tokens(text)), nSeeds, k))
     }
-    reps.groupBy(col("doc_id")).agg(minima.head, minima.tail: _*)
-      .select(col("doc_id"), posexplode(array((0 until nSeeds).map(sd => col(s"m$sd")): _*)))
-      .select(col("doc_id"), col("pos").cast("long").as("seed"),
-        col("col").as("minhash"))
-  }
-
-  /** Production fast path for [[weightedMinhash]] in [[Xx64]] mode —
-    * byte-identical to the columnar form (parity-tested), ZERO shuffle:
-    * tf comes from a per-doc HashMap (O(doc) state, the same map-side
-    * pre-merge trick as the index build's docTermFreqs), minima stay raw
-    * unsigned longs, and only the nSeeds winners are rendered as hex.
-    * The columnar form pays TWO shuffles (tf groupBy + signature groupBy)
-    * and renders a hex string per (instance × seed) — the same
-    * string-machinery tax that made [[minhashFast]] 15× faster. */
-  def weightedMinhashFast(docs: DataFrame, nSeeds: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        var buf = new Array[Byte](64)
-        // "$sd:$rep:" prefix bytes, cached for rep < 64 (covers all but
-        // pathological tf; larger reps build the prefix on the fly)
-        val cache = Array.ofDim[Array[Byte]](nSeeds, 64)
-        def prefix(sd: Int, rep: Int): Array[Byte] =
-          if (rep < 64) {
-            var p = cache(sd)(rep)
-            if (p == null) { p = s"$sd:$rep:".getBytes(utf8); cache(sd)(rep) = p }
-            p
-          } else s"$sd:$rep:".getBytes(utf8)
-        it.flatMap { case (id, text) =>
-          val tf = new java.util.HashMap[String, Integer]()
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          var i = 0
-          while (i < toks.length) {
-            val t = toks(i)
-            if (t.nonEmpty) tf.merge(t, 1, (a: Integer, b: Integer) => a + b)
-            i += 1
-          }
-          if (tf.isEmpty) Iterator.empty
-          else {
-            val mins = Array.fill(nSeeds)(-1L) // unsigned max
-            val e = tf.entrySet().iterator()
-            while (e.hasNext) {
-              val ent = e.next()
-              val tb = ent.getKey.getBytes(utf8)
-              val n = ent.getValue.intValue()
-              var rep = 0
-              while (rep < n) {
-                var sd = 0
-                while (sd < nSeeds) {
-                  val p = prefix(sd, rep)
-                  val len = p.length + tb.length
-                  if (buf.length < len) buf = new Array[Byte](len * 2)
-                  System.arraycopy(p, 0, buf, 0, p.length)
-                  System.arraycopy(tb, 0, buf, p.length, tb.length)
-                  val h = org.apache.spark.sql.catalyst.expressions.XXH64
-                    .hashUnsafeBytes(buf,
-                      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
-                  if (java.lang.Long.compareUnsigned(h, mins(sd)) < 0) mins(sd) = h
-                  sd += 1
-                }
-                rep += 1
-              }
-            }
-            (0 until nSeeds).iterator.map { sd =>
-              val hx = java.lang.Long.toHexString(mins(sd))
-              (id, sd.toLong, "0" * (16 - hx.length) + hx)
-            }
-          }
-        }
-      }.toDF("doc_id", "seed", "minhash")
-  }
 
   /** Weighted-Jaccard near-dup pairs from [[weightedMinhash]] signatures:
     * candidates are docs sharing any (seed, minhash) bucket (the

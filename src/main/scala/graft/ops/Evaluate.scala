@@ -17,13 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Evaluate {
 
-  /** Hex MD5 of a string — the portable ordering key for seeded drops
-    * (DuckDB's md5() produces the identical hex). */
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-
   case class EvalQuery(query_id: Long, expect_doc: Long, variant: String,
                        query: String)
 
@@ -33,6 +26,9 @@ object Evaluate {
   def selfQueries(docs: DataFrame, n: Int = 20, width: Int = 8,
                   nDrop: Int = 2, seed: Long = 42L): Seq[EvalQuery] = {
     import docs.sparkSession.implicits._
+    // hex MD5 is the portable ordering key for seeded drops (DuckDB's md5()
+    // produces the identical hex)
+    val digest = Dedup.kernel(Dedup.Md5Portable)
     val rows = docs.select($"doc_id", $"text").orderBy($"doc_id").limit(n)
       .as[(Long, String)].collect()
     rows.zipWithIndex.flatMap { case ((docId, text), qi) =>
@@ -40,7 +36,8 @@ object Evaluate {
       if (toks.length < 3) Nil
       else {
         val exact = EvalQuery(qi * 2L, docId, "exact", toks.mkString(" "))
-        val keep = toks.indices.sortBy(i => md5Hex(s"$seed:$docId:$i"))
+        val keep = toks.indices.sortBy(i => digest.hexDigest(s"$seed:$docId:$i"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
           .drop(nDrop).sorted
         val perturbed = EvalQuery(qi * 2L + 1, docId, "perturbed",
           keep.map(toks).mkString(" "))

@@ -14,13 +14,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: the probe is an equi-join on (band, band_hash) — the LSH
   * bucket lookup — followed by a candidate-only Jaccard join; the corpus is
   * never scanned per query. The QUERY side (a handful of rows) is computed
-  * DRIVER-SIDE with the same md5 arithmetic — zero Spark jobs — and enters
-  * the plan as broadcast local relations; the document side runs the typed
-  * zero-shuffle signature passes (Dedup.lshBandsFast /
-  * minhashPrefixesFastMd5). Both sides are parity-covered: the driver-side
-  * signature math is asserted equal to the relational form in
-  * SearchOpsSpec, and the typed doc passes have their own Column-form
-  * parity tests.
+  * DRIVER-SIDE by the same signature functions the document passes use
+  * (Dedup.minima / bands / prefixHashes, md5 kernel) — zero Spark jobs —
+  * and enters the plan as broadcast local relations; the document side runs
+  * the zero-shuffle passes Dedup.lshBands / minhashPrefixes. SearchOpsSpec
+  * asserts that a query's rows equal the doc pass's rows for the same
+  * tokens, and both equal their relational forms.
   */
 object MinHashSearch {
 
@@ -39,58 +38,44 @@ object MinHashSearch {
     }.toDF("query_id", "term")
   }
 
-  // ---- driver-side query signature math (md5 mode, the oracle shape) ----
+  // ---- driver-side query signatures: the doc passes' functions on the
+  // query tokens, md5 kernel (the oracle shape) ------------------------------
 
-  private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(UTF8)).map(b => f"$b%02x").mkString
-
-  /** Per-query minhash hex minima in seed order — the driver-side twin of
-    * `querySignatures` (min over tokens of substr(md5("$sd:$term"), 1, 16));
-    * a pure function of the query set, so it costs zero Spark jobs.
-    * Queries with no tokens have no signature (matching the relational
-    * form, whose groupBy has no rows for them). */
+  /** Per-query minhash minima in seed order (unsigned longs; their 16-hex
+    * renders are the doc side's `minhash` strings) — [[Dedup.minima]] over
+    * [[queryTokens]], zero Spark jobs. Queries with no tokens have no
+    * signature, like empty docs. */
   private[graft] def querySigLocal(queries: Seq[(Int, String)],
-                                   nSeeds: Int): Seq[(Long, Array[String])] =
+                                   nSeeds: Int): Seq[(Long, Array[Long])] = {
+    val k = Dedup.kernel(Dedup.Md5Portable)
     queries.flatMap { case (id, q) =>
-      val toks = queryTokens(q)
-      if (toks.isEmpty) None
-      else Some(id.toLong -> Array.tabulate(nSeeds) { sd =>
-        toks.map(t => md5Hex(s"$sd:$t").substring(0, 16)).min
-      })
+      Option(Dedup.minima(queryTokens(q).toArray, nSeeds, k)).map(id.toLong -> _)
     }
+  }
 
-  /** Driver-side band rows (query_id, band, band_hash) — the twin of
-    * banding [[querySigLocal]] signatures exactly like Dedup.lshBands. */
+  /** Driver-side band rows (query_id, band, band_hash) — [[Dedup.bands]]
+    * of [[querySigLocal]], the rows Dedup.lshBands emits for a doc with the
+    * query's tokens. */
   private[graft] def queryBandsLocal(queries: Seq[(Int, String)], nSeeds: Int,
-                                     rowsPerBand: Int): Seq[(Long, Long, String)] =
-    querySigLocal(queries, nSeeds).flatMap { case (id, hexes) =>
-      hexes.indices.groupBy(_ / rowsPerBand).toSeq.map { case (b, sds) =>
-        (id, b.toLong, md5Hex(sds.map(hexes).mkString(",")))
-      }
+                                     rowsPerBand: Int): Seq[(Long, Long, String)] = {
+    val k = Dedup.kernel(Dedup.Md5Portable)
+    querySigLocal(queries, nSeeds).flatMap { case (id, mins) =>
+      Dedup.bands(mins, rowsPerBand, k).toSeq.zipWithIndex
+        .map { case (bh, b) => (id, b.toLong, bh) }
     }
+  }
 
-  /** Driver-side prefix rows (query_id, r, ph), r = 1..nSeeds — the twin of
-    * [[prefixes]] over the query signatures. */
+  /** Driver-side prefix rows (query_id, r, ph), r = 1..nSeeds —
+    * [[Dedup.prefixHashes]] of [[querySigLocal]], the rows
+    * Dedup.minhashPrefixes emits for a doc with the query's tokens. */
   private[graft] def queryPrefixesLocal(queries: Seq[(Int, String)],
-                                        nSeeds: Int): Seq[(Long, Long, String)] =
-    querySigLocal(queries, nSeeds).flatMap { case (id, hexes) =>
-      (1 to nSeeds).map(r => (id, r.toLong, md5Hex(hexes.take(r).mkString(","))))
+                                        nSeeds: Int): Seq[(Long, Long, String)] = {
+    val k = Dedup.kernel(Dedup.Md5Portable)
+    querySigLocal(queries, nSeeds).flatMap { case (id, mins) =>
+      Dedup.prefixHashes(mins, k).toSeq.zipWithIndex
+        .map { case (ph, r) => (id, r + 1L, ph) }
     }
-
-  private val md5s = (c: org.apache.spark.sql.Column) => md5(c.cast("binary"))
-
-  /** Query MinHash signatures (query_id, seed, minhash) — the RELATIONAL
-    * form (same construction as Dedup.minhashColumnar); survives as the
-    * parity reference for [[querySigLocal]]. */
-  private[graft] def querySignatures(qt: DataFrame, nSeeds: Int): DataFrame =
-    qt.crossJoin(broadcast(qt.sparkSession.range(nSeeds).toDF("seed")))
-      .groupBy(col("query_id"), col("seed"))
-      .agg(min(substring(md5s(
-        concat(col("seed").cast("string"), lit(":"), col("term"))), 1, 16))
-        .as("minhash"))
+  }
 
   /** Exact token-Jaccard of each (query_id, doc_id) candidate pair, with
     * candidates' extra columns carried through. The corpus side is joined
@@ -145,18 +130,6 @@ object MinHashSearch {
       .select(col("query_id"), col("rank"), col("doc_id"), col("jaccard"))
   }
 
-  /** Signature PREFIX hashes for every depth r = 1..nSeeds: ph(r) =
-    * md5(minhash_0, …, minhash_{r−1}) — the relational form of a prefix
-    * tree; survives as the parity reference for the typed doc pass
-    * (Dedup.minhashPrefixesFastMd5) and the driver-side query twin. */
-  private[graft] def prefixes(sig: DataFrame, idCol: String, nSeeds: Int): DataFrame =
-    sig.crossJoin(broadcast(sig.sparkSession.range(1, nSeeds + 1).toDF("r")))
-      .filter(col("seed") < col("r"))
-      .groupBy(col(idCol), col("r"))
-      .agg(md5s(array_join(
-        transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-          x => x.getField("minhash")), ",")).as("ph"))
-
   /** LSH FOREST top-k (reference: index/index.py:55-62 —
     * MinHashLSHForest.query): candidates are matched by their LONGEST shared
     * signature prefix with the query (prefix trees in the reference;
@@ -171,7 +144,7 @@ object MinHashSearch {
     import spark.implicits._
     val qt = queryTermsDF(spark, queries)
     val qpre = queryPrefixesLocal(queries, nSeeds).toDF("query_id", "r", "ph")
-    val dpre = Dedup.minhashPrefixesFastMd5(docs, nSeeds)
+    val dpre = Dedup.minhashPrefixes(docs, nSeeds)
     val cand = dpre.join(broadcast(qpre), Seq("r", "ph"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(max(col("r")).as("depth"))

@@ -58,11 +58,6 @@ object Similarity {
         conv(md5(concat(col("j").cast("string"), lit(":"), col("i").cast("string"))
           .cast("binary")).substr(lit(1), lit(1)), 16, 10).cast("double") - 7.5)
 
-  /** Random-hyperplane LSH bucket per vector: bit j = (round(x·w_j, 6) > 0).
-    * Output: (vec_id, bucket). */
-  def annBuckets(emb: DataFrame, nPlanes: Int = 8, dims: Int = 64): DataFrame =
-    annBucketsFast(emb, nPlanes, dims)
-
   /** The relational form of [[annBuckets]] — the DuckDB oracle's shape and
     * the parity reference for the typed pass. */
   private[graft] def annBucketsColumnar(emb: DataFrame, nPlanes: Int = 8,
@@ -89,15 +84,16 @@ object Similarity {
     }
   }
 
-  /** Typed fast path for [[annBuckets]] — byte-identical to the relational
-    * form (parity-tested) and ZERO-shuffle: a vector's bucket is a function
+  /** Random-hyperplane LSH bucket per vector: bit j = (round(x·w_j, 6) > 0).
+    * Output: (vec_id, bucket). Byte-identical to the relational form
+    * (parity-tested) and ZERO-shuffle: a vector's bucket is a function
     * of its own components, so the explode + plane join + two aggregations
     * collapse into one map pass against a driver-computed weight table.
     * The dot product accumulates in ascending dimension order — the same
     * order the posexplode feeds the hash aggregate — and rounds with the
     * identical BigDecimal HALF_UP arithmetic Spark's `round` uses, so the
     * sign decisions are bit-identical. */
-  def annBucketsFast(emb: DataFrame, nPlanes: Int = 8, dims: Int = 64): DataFrame = {
+  def annBuckets(emb: DataFrame, nPlanes: Int = 8, dims: Int = 64): DataFrame = {
     import emb.sparkSession.implicits._
     val w = planesLocal(nPlanes, dims)
     emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
@@ -126,7 +122,7 @@ object Similarity {
   }
 
   /** One typed pass emitting (vec_id, v: double vector, bucket) — the
-    * fused form of `asDouble(embedding)` ⋈ [[annBucketsFast]]: the bucket
+    * fused form of `asDouble(embedding)` ⋈ [[annBuckets]]: the bucket
     * is a per-row function, so attaching it never needs the vec_id join
     * (one exchange per consumer gone). Same empty-vector absence and
     * bit-identical buckets as the unfused pair. */

@@ -63,7 +63,9 @@ object Bm25 {
 
   /** Adaptive bail for ALL-HOT queries: when every query term's df exceeds
     * this fraction of the corpus, the pruning attempt is skipped entirely
-    * and the query takes the single-pass plan. Rationale: pruning a block
+    * and every block of the query's terms is scored — on the driver or by
+    * the Spark plan, as the posting budget ([[LocalPostings]]) decides.
+    * Rationale: pruning a block
     * needs some OTHER term's cell bound to be ~0 in the block's doc-range
     * cells, i.e. some term absent from whole grid cells — but a term with
     * df ≥ 0.15·N has ~df/64 ≥ thousands of postings per cell at hash-

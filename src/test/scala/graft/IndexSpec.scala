@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.TextExtract
 import graft.data.Synth
-import graft.index.{BuildParams, IndexBuild, InvertedIndex, ManifestRow}
+import graft.index.{BuildParams, IndexBuild, InvertedIndex, ManifestRow, ParityRefs}
 import graft.query.Bm25
 
 /** End-to-end: build → query → oracle rank-identity → WAND identity →
@@ -247,7 +247,7 @@ class IndexSpec extends SparkSpec {
         b.first_doc, b.last_doc, b.n_docs, b.max_tf, b.max_tfsat,
         b.doc_gaps_vb.toSeq, b.tfs_vb.toSeq, b.dls_vb.toSeq)).toSet
     val fast = canon(IndexBuild.saltedRuns(feed, hotDf, p, 5.0))
-    val ref = canon(IndexBuild.saltedRunsSortShuffle(feed, hotDf, p, 5.0))
+    val ref = canon(ParityRefs.saltedRunsSortShuffle(feed, hotDf, p, 5.0))
     assert(fast.nonEmpty && fast == ref)
   }
 

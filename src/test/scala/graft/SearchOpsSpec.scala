@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.ParityRefs
 import graft.ops.{Dedup, Evaluate, MinHashSearch}
 
 /** MinHash-LSH search + evaluation harness over the documents testdata. */
@@ -30,30 +31,28 @@ class SearchOpsSpec extends SparkSpec {
     assert(mdMap.count { case (k, v) => xxMap(k) == v } < md.length / 100,
       "xx64 signatures should not coincide with md5 signatures")
 
-    // the typed fast path (the production route behind minhash(Xx64)) must
-    // be BYTE-IDENTICAL to the xx64 COLUMN form (same XXH64 seed-42
-    // hashing, unsigned-long minima ≡ padded-hex lexicographic minima,
-    // same empty-token/empty-doc semantics)
+    // the typed pass (the production route behind minhash(Xx64)) must be
+    // BYTE-IDENTICAL to the xx64 COLUMN form (same XXH64 seed-42 hashing,
+    // unsigned-long minima ≡ padded-hex lexicographic minima, same
+    // empty-token/empty-doc semantics)
     val xxCol = Dedup.minhashColumnar(docs, hash = Dedup.Xx64)
       .as[(Long, Long, String)].collect()
-    val fast = Dedup.minhashFast(docs)
-      .as[(Long, Long, String)].collect()
-    assert(fast.sorted.toSeq == xxCol.sorted.toSeq,
-      "minhashFast diverged from the xx64 Column form")
+    assert(xx.sorted.toSeq == xxCol.sorted.toSeq,
+      "minhash(Xx64) diverged from the xx64 Column form")
 
     // shingles: the typed pass (the production route) must emit the same
     // (doc_id, shingle) set as the Column slide
-    val shCol = Dedup.shinglesColumnar(docs).as[(Long, String)].collect()
-    val shFast = Dedup.shinglesFast(docs).as[(Long, String)].collect()
+    val shCol = ParityRefs.shinglesColumnar(docs).as[(Long, String)].collect()
+    val shFast = Dedup.shingles(docs).as[(Long, String)].collect()
     assert(shFast.sorted.toSeq == shCol.sorted.toSeq,
-      "shinglesFast diverged from the Column slide")
+      "shingles diverged from the Column slide")
 
     // simhash: the zero-shuffle typed pass (the production route) must be
     // bit-identical to the relational form the DuckDB oracle mirrors
-    val simCol = Dedup.simhashColumnar(docs).as[(Long, Long)].collect()
-    val simFast = Dedup.simhashFast(docs).as[(Long, Long)].collect()
+    val simCol = ParityRefs.simhashColumnar(docs).as[(Long, Long)].collect()
+    val simFast = Dedup.simhash(docs).as[(Long, Long)].collect()
     assert(simFast.sorted.toSeq == simCol.sorted.toSeq,
-      "simhashFast diverged from the relational form")
+      "simhash diverged from the relational form")
 
     // structural LSH guarantee, hash-independent: docs with IDENTICAL text
     // have identical signatures, so every exact-dup pair appears in lshPairs
@@ -140,70 +139,60 @@ class SearchOpsSpec extends SparkSpec {
     }
     val df = docs.toDF("doc_id", "text")
 
-    val mFast = Dedup.minhashFast(df)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    val mCol = Dedup.minhashColumnar(df, hash = Dedup.Xx64)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(mFast == mCol, "minhashFast diverged on adversarial corpus")
-
     val sFast = Dedup.simhash(df)
       .as[(Long, Long)].collect().sorted.toSeq
-    val sCol = Dedup.simhashColumnar(df)
+    val sCol = ParityRefs.simhashColumnar(df)
       .as[(Long, Long)].collect().sorted.toSeq
-    assert(sFast == sCol, "simhashFast diverged on adversarial corpus")
+    assert(sFast == sCol, "simhash diverged on adversarial corpus")
 
     val shFast = Dedup.shingles(df)
       .as[(Long, String)].collect().sorted.toSeq
-    val shCol = Dedup.shinglesColumnar(df)
+    val shCol = ParityRefs.shinglesColumnar(df)
       .as[(Long, String)].collect().sorted.toSeq
-    assert(shFast == shCol, "shinglesFast diverged on adversarial corpus")
+    assert(shFast == shCol, "shingles diverged on adversarial corpus")
 
-    val wFast = Dedup.weightedMinhashFast(df)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    val wCol = Dedup.weightedMinhashColumnar(df, hash = Dedup.Xx64)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(wFast == wCol, "weightedMinhashFast diverged on adversarial corpus")
-
-    // --- md5-mode typed fast paths (the routes behind the DECLARED
-    // queries since r6) — byte-identical to their Column forms -----------
-    val mdFast = Dedup.minhashFastMd5(df)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    val mdCol = Dedup.minhashColumnar(df, hash = Dedup.Md5Portable)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(mdFast == mdCol, "minhashFastMd5 diverged on adversarial corpus")
-
-    val wmdFast = Dedup.weightedMinhashFastMd5(df)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    val wmdCol = Dedup.weightedMinhashColumnar(df, hash = Dedup.Md5Portable)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(wmdFast == wmdCol, "weightedMinhashFastMd5 diverged")
-
-    for (h <- Seq[Dedup.HashMode](Dedup.Md5Portable, Dedup.Xx64)) {
-      val bFast = Dedup.lshBandsFast(df, hash = h)
+    // per mode: parity of every signature op; yields the doc_ids of the
+    // minhash and weighted-minhash rows for the empty-doc check below
+    val sigIds = Seq[Dedup.HashMode](Dedup.Md5Portable, Dedup.Xx64).flatMap { h =>
+      val mFast = Dedup.minhash(df, hash = h)
         .as[(Long, Long, String)].collect().sorted.toSeq
-      val bCol = Dedup.lshBandsColumnar(df, hash = h)
+      val mCol = Dedup.minhashColumnar(df, hash = h)
         .as[(Long, Long, String)].collect().sorted.toSeq
-      assert(bFast == bCol, s"lshBandsFast($h) diverged on adversarial corpus")
+      assert(mFast == mCol, s"minhash($h) diverged on adversarial corpus")
+
+      val wFast = Dedup.weightedMinhash(df, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      val wCol = ParityRefs.weightedMinhashColumnar(df, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      assert(wFast == wCol, s"weightedMinhash($h) diverged on adversarial corpus")
+
+      val bFast = Dedup.lshBands(df, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      val bCol = ParityRefs.lshBandsColumnar(df, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      assert(bFast == bCol, s"lshBands($h) diverged on adversarial corpus")
+
+      // odd band split (nSeeds not a multiple of rowsPerBand)
+      val b3Fast = Dedup.lshBands(df, nSeeds = 8, rowsPerBand = 3, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      val b3Col = ParityRefs.lshBandsColumnar(df, nSeeds = 8, rowsPerBand = 3, hash = h)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      assert(b3Fast == b3Col, s"lshBands($h) diverged on a ragged band split")
+      Seq(mFast.map(_._1), wFast.map(_._1))
     }
-    // odd band split (nSeeds not a multiple of rowsPerBand)
-    val b3Fast = Dedup.lshBandsFast(df, nSeeds = 8, rowsPerBand = 3)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    val b3Col = Dedup.lshBandsColumnar(df, nSeeds = 8, rowsPerBand = 3)
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(b3Fast == b3Col, "lshBandsFast diverged on a ragged band split")
 
-    val fpFast = Dedup.fingerprintFast(df)
+    val fpFast = Dedup.fingerprint(df)
       .as[(Long, String)].collect().sorted.toSeq
-    val fpCol = Dedup.fingerprintColumnar(df)
+    val fpCol = ParityRefs.fingerprintColumnar(df)
       .as[(Long, String)].collect().sorted.toSeq
-    assert(fpFast == fpCol, "fingerprintFast diverged on adversarial corpus")
+    assert(fpFast == fpCol, "fingerprint diverged on adversarial corpus")
 
-    val prFast = Dedup.minhashPrefixesFastMd5(df)
+    val prFast = Dedup.minhashPrefixes(df)
       .as[(Long, Long, String)].collect().sorted.toSeq
-    val prCol = MinHashSearch.prefixes(
+    val prCol = ParityRefs.prefixes(
       Dedup.minhashColumnar(df, hash = Dedup.Md5Portable), "doc_id", 8)
       .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(prFast == prCol, "minhashPrefixesFastMd5 diverged")
+    assert(prFast == prCol, "minhashPrefixes diverged")
 
     // typed token passes ≡ their relational forms
     import graft.ops.TextOps
@@ -226,11 +215,8 @@ class SearchOpsSpec extends SparkSpec {
     // the empty and sub-n docs really are absent (not present-with-garbage)
     val emptyIds = docs.filter(_._2.trim.isEmpty).map(_._1).toSet
     assert(emptyIds.nonEmpty)
-    assert(mFast.forall(r => !emptyIds.contains(r._1)))
     assert(sFast.forall(r => !emptyIds.contains(r._1)))
-    assert(wFast.forall(r => !emptyIds.contains(r._1)))
-    assert(mdFast.forall(r => !emptyIds.contains(r._1)))
-    assert(wmdFast.forall(r => !emptyIds.contains(r._1)))
+    assert(sigIds.forall(_.forall(id => !emptyIds.contains(id))))
   }
 
   test("driver-side query signature math: byte-identical to the relational " +
@@ -239,22 +225,22 @@ class SearchOpsSpec extends SparkSpec {
       3 -> "Unicode HÉLLO 日本語 hello unicode", // case-fold + dedup
       4 -> "  padded   spaces  ")
     val qt = MinHashSearch.queryTermsDF(spark, queries)
-    val sigRel = MinHashSearch.querySignatures(qt, 8)
+    val sigRel = ParityRefs.querySignatures(qt, 8)
       .as[(Long, Long, String)].collect()
       .groupBy(_._1).map { case (id, rs) =>
         id -> rs.sortBy(_._2).map(_._3).toSeq }
     val sigLoc = MinHashSearch.querySigLocal(queries, 8)
-      .map { case (id, hexes) => id -> hexes.toSeq }.toMap
+      .map { case (id, mins) => id -> mins.toSeq.map(m => f"$m%016x") }.toMap
     assert(sigLoc == sigRel, "querySigLocal diverged from querySignatures")
 
-    val preRel = MinHashSearch.prefixes(
-      MinHashSearch.querySignatures(qt, 8), "query_id", 8)
+    val preRel = ParityRefs.prefixes(
+      ParityRefs.querySignatures(qt, 8), "query_id", 8)
       .as[(Long, Long, String)].collect().sorted.toSeq
     val preLoc = MinHashSearch.queryPrefixesLocal(queries, 8).sorted
     assert(preLoc == preRel, "queryPrefixesLocal diverged from prefixes")
 
     import org.apache.spark.sql.functions._
-    val bandsRel = MinHashSearch.querySignatures(qt, 8)
+    val bandsRel = ParityRefs.querySignatures(qt, 8)
       .withColumn("band", (col("seed") / 2).cast("long"))
       .groupBy(col("query_id"), col("band"))
       .agg(md5(array_join(transform(
@@ -264,6 +250,30 @@ class SearchOpsSpec extends SparkSpec {
     val bandsLoc = MinHashSearch.queryBandsLocal(queries, 8, 2).sorted
     assert(bandsLoc == bandsRel, "queryBandsLocal diverged from the " +
       "relational banding of query signatures")
+  }
+
+  test("index/query signature contract: a query's driver-side bands and " +
+    "prefixes are the doc passes' rows for its tokens") {
+    // the LSH probe and the forest join match query rows against doc rows
+    // on equality, so a query must hash exactly like a document holding
+    // its tokens
+    val queries = SparkEntry.mhQueries :+ (3 -> "Data JOIN data Fast window")
+    for ((id, q) <- queries) {
+      val doc = Seq((id.toLong, MinHashSearch.queryTokens(q).mkString(" ")))
+        .toDF("doc_id", "text")
+      for (rows <- Seq(2, 3)) {
+        val docBands = Dedup.lshBands(doc, 8, rows)
+          .as[(Long, Long, String)].collect().sorted.toSeq
+        assert(docBands.nonEmpty)
+        assert(MinHashSearch.queryBandsLocal(Seq(id -> q), 8, rows).sorted == docBands,
+          s"query $id: bands (rowsPerBand=$rows) differ from Dedup.lshBands")
+      }
+      val docPre = Dedup.minhashPrefixes(doc, 8)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      assert(docPre.length == 8)
+      assert(MinHashSearch.queryPrefixesLocal(Seq(id -> q), 8).sorted == docPre,
+        s"query $id: prefixes differ from Dedup.minhashPrefixes")
+    }
   }
 
   test("weighted minhash: tf weighting separates docs the unweighted " +

@@ -2,20 +2,18 @@ package graft
 
 import graft.ops.Similarity
 
-/** Parity coverage for the typed ANN bucket pass (the production route
-  * behind annBuckets since r6) against the relational Column form the
-  * DuckDB oracle mirrors. */
+/** Parity coverage for the typed ANN bucket pass (annBuckets) against the
+  * relational Column form the DuckDB oracle mirrors. */
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
-  test("annBucketsFast: byte-identical to the relational form on the " +
-    "embeddings testdata and on adversarial vectors") {
+  test("annBuckets matches the relational form on testdata and adversarial vectors") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val fast = Similarity.annBucketsFast(emb)
+    val fast = Similarity.annBuckets(emb)
       .as[(Long, Long)].collect().sorted.toSeq
     val col = Similarity.annBucketsColumnar(emb)
       .as[(Long, Long)].collect().sorted.toSeq
-    assert(fast == col, "annBucketsFast diverged on the testdata")
+    assert(fast == col, "annBuckets diverged on the testdata")
 
     // adversarial: empty vector (must be absent), short vector, zero
     // vector (all d = 0 -> bucket 0 but PRESENT), near-boundary values
@@ -26,7 +24,7 @@ class SimilaritySpec extends SparkSpec {
       (4L, Array.tabulate(64)(i => if (i % 2 == 0) 1e-7f else -1e-7f)),
       (5L, Array.tabulate(64)(i => (i - 32).toFloat))
     ).toDF("vec_id", "embedding")
-    val fa = Similarity.annBucketsFast(adv)
+    val fa = Similarity.annBuckets(adv)
       .as[(Long, Long)].collect().sorted.toSeq
     val ca = Similarity.annBucketsColumnar(adv)
       .as[(Long, Long)].collect().sorted.toSeq
