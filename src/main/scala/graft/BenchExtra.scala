@@ -67,7 +67,9 @@ object BenchExtra {
     InvertedIndex.deleteDir(Shm)
     new java.io.File(s"$Shm/tmp").mkdirs()
     sys.props("java.io.tmpdir") = s"$Shm/tmp"
-    if (mode == "scale") scale(args.drop(1)) else queries(mode, args)
+    // the scratch root is tmpfs (memory): leave nothing behind
+    try { if (mode == "scale") scale(args.drop(1)) else queries(mode, args) }
+    finally InvertedIndex.deleteDir(Shm)
   }
 
   private def queries(mode: String, args: Array[String]): Unit = {

@@ -188,14 +188,14 @@ object SparkEntry {
       val tok = IndexBuild.tokenize(Synth.pages(s, 1000, 42L), p)
       val stats = tok.agg(count(lit(1)), avg(col("dl"))).collect()(0)
       val avgdl = stats.getDouble(1)
-      // per-doc (term, tf) pre-merge — zero-shuffle, identical rows to the
-      // corpus-wide termFreqs aggregation (one row per distinct term per
+      // per-doc (term, tf) pre-merge — zero-shuffle, identical rows to a
+      // corpus-wide (term, doc_id) aggregation (one row per distinct term per
       // doc), so the hot-term counts and every encoded block are unchanged
       val tf = IndexBuild.docTermFreqs(tok)
       val hot = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .filter(col("df") > p.saltThreshold)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      IndexBuild.buildShardPostings(tf, hot, p, avgdl)
+      IndexBuild.saltedRuns(tf, hot, p, avgdl)
         .groupBy(col("term"))
         .agg(count(lit(1)).as("n_blocks"), sum(col("n_docs")).as("n_postings"))
     }),

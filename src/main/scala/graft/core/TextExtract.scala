@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Deterministic HTML → text extraction + normalization + tokenization.
@@ -158,35 +158,11 @@ object TextExtract extends Serializable {
     * (reference: cleaners.py:38-41). */
   def tokenizeQuery(raw: String): Array[String] = splitFilter(cleanText(raw))
 
-  // ---------------------------------------------------------------------
-  // Column forms. Everything except the tag-strip state machine stays in
-  // built-in (codegen'd) expressions; the stripper is the one genuinely
-  // custom scalar and is registered once per session as a deterministic UDF.
-  // ---------------------------------------------------------------------
-
-  /** html binary column → extracted text column (the one custom scalar;
-    * deterministic, so Catalyst may collapse/push it freely). */
+  /** html binary column → extracted text column: [[stripHtml]] as a
+    * deterministic UDF (so Catalyst may collapse/push it freely). */
   def stripHtmlCol(html: Column): Column =
     udf((b: Array[Byte]) =>
       if (b == null) null
       else stripHtml(new String(b, java.nio.charset.StandardCharsets.UTF_8))
     ).apply(html)
-
-  /** text column → cleaned column (built-in regexp_replace + lower). */
-  def cleanTextCol(text: Column): Column =
-    lower(regexp_replace(text, "[^a-zA-Z0-9 \\n]+", ""))
-
-  private def stopwordsLit: Column = lit(Stopwords.englishSorted)
-
-  /** cleaned text column → token array, stopword-filtered, optionally capped.
-    * Pure built-ins: split + filter + slice → whole-stage codegen. */
-  def tokensCol(cleaned: Column, cap: Option[Int]): Column = {
-    val toks = filter(
-      split(cleaned, "\\s+"),
-      t => t =!= lit("") && !array_contains(stopwordsLit, t))
-    cap.fold(toks)(k => slice(toks, 1, k))
-  }
-
-  def docTokensCol(cleaned: Column): Column = tokensCol(cleaned, Some(MaxDocTokens))
-  def fullTokensCol(cleaned: Column): Column = tokensCol(cleaned, None)
 }

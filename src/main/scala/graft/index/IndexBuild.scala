@@ -2,11 +2,12 @@ package graft.index
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.core.TextExtract
 import graft.data.Page
+import graft.query.Bm25
 
 /** One (term, doc) pair with the doc's length riding along (so scoring never
   * needs a doc-side join). */
@@ -37,11 +38,16 @@ case class ManifestRow(
     partition_id: Int, rows: Long, blocks: Long, bytes: Long,
     committed: Boolean, lineage: String)
 
-/** Build parameters. `numShards` is the coarse doc-partitioning of the whole
-  * index (the unit of resumability and of bounded per-term merge state: at
-  * 10^12 docs a 30%-df hot term has ~3·10^11 postings — no single task may
-  * ever see all of them, so the index is doc-sharded first, and within a
-  * shard hot terms are salted and re-merged).
+/** Build parameters, persisted with the index at <dir>/params.
+  * `numShards` is the coarse doc-partitioning of the whole index (the unit
+  * of resumability and of bounded per-term merge state: at 10^12 docs a
+  * 30%-df hot term has ~3·10^11 postings — no single task may ever see all
+  * of them, so the index is doc-sharded first, and within a shard hot terms
+  * are salted into doc_id ranges). None of them is a scoring knob: BM25's
+  * k1 and b are [[Bm25.K1]]/[[Bm25.B]], shared by the build's block maxima
+  * and every scorer, and documents are always tokenized in full. (Indexes
+  * whose params table still holds the old `k1`, `b` and `fullText` columns
+  * open unchanged: the declared-schema reader skips them.)
   */
 case class BuildParams(
     numShards: Int = 4,
@@ -49,9 +55,6 @@ case class BuildParams(
     saltThreshold: Long = 100000L, // df within shard above which a term is salted
     targetPerSalt: Long = 50000L,  // postings per salt bucket for hot terms
     nTermBuckets: Int = 16,        // directory partitions of postings by term hash
-    k1: Double = 1.2,
-    b: Double = 0.75,
-    fullText: Boolean = true,      // uncapped tokens (web index) vs 16-token cap
     waveShards: Int = 0)           // shards committed per wave job; 0 = all todo
 
 /** Inverted-index construction: the Spark-native rebuild of the reference's
@@ -59,22 +62,22 @@ case class BuildParams(
   * as a declarative pipeline:
   *
   *   pages → extract+tokenize (narrow) → per-doc (term, tf) pre-merge
-  *   (docTermFreqs) → range-salted repartition+sort (ONE skew-bounded
-  *   shuffle) → varbyte block encode → partitioned Parquet postings +
-  *   doc/term/corpus stats + manifest.
+  *   (docTermFreqs) → map-side sorted varbyte runs per range-salted
+  *   (shard|salt, term) → ONE skew-bounded shuffle of the runs → merge +
+  *   block encode → partitioned Parquet postings + doc/corpus stats +
+  *   manifest. There is no term-stats table: per-term (df, max_tfsat) is a
+  *   scan of the blocks' metadata columns at query time.
   *
-  * Everything is Dataset/Catalyst — the only imperative code runs inside
-  * `flatMapSortedGroups` (block encode), the typed-Dataset analog of the
-  * reference's `_dump_block` (hash_index.py:113-124) with Spark's spilling
-  * shuffle underneath. The reference's k-way `heapq.merge`
-  * (hash_index.py:166-195) has no runtime counterpart at all: range salting
-  * makes the per-salt runs disjoint-and-ordered, so "merge" is a free
-  * layout property (see [[rangeSalt]]).
+  * The imperative code runs inside `mapPartitions` (run generation) and
+  * `flatMapGroups` (merge + encode) over primitive arrays — the typed
+  * analog of the reference's `_dump_block` (hash_index.py:113-124). The
+  * reference's k-way `heapq.merge` (hash_index.py:166-195) survives only
+  * within one (shard|salt, term) group, as a sort of its runs' postings:
+  * range salting makes the salts of a term disjoint and ordered, so no
+  * merge ever spans salts (see [[rangeSalt]]). Block maxima are
+  * [[Bm25.tfSat]], the scorer's own function.
   */
 object IndexBuild {
-
-  val BM25_K1 = 1.2
-  val BM25_B = 0.75
 
   /** Stable doc id: hash of url, masked non-negative (63 bits — at 10^12
     * docs the expected collision count is ~5·10^4, i.e. a 5e-8 rate;
@@ -104,13 +107,9 @@ object IndexBuild {
   def tokenize(pages: Dataset[Page], p: BuildParams): DataFrame = {
     import pages.sparkSession.implicits._
     val numShards = p.numShards
-    val fullText = p.fullText
     pages.mapPartitions { it =>
       it.flatMap { pg =>
-        val cleaned = TextExtract.cleanText(pg.text)
-        val toks =
-          if (fullText) TextExtract.tokenizeFull(cleaned)
-          else TextExtract.tokenizeDoc(cleaned)
+        val toks = TextExtract.tokenizeFull(TextExtract.cleanText(pg.text))
         if (toks.isEmpty) None // empty-doc filter (reference: main.py:31-33)
         else {
           val id = docId(pg.url)
@@ -118,23 +117,6 @@ object IndexBuild {
         }
       }
     }.toDF()
-  }
-
-  /** Stats pass: per-doc lengths + corpus aggregates for one shard. */
-  def docStats(tokenized: DataFrame): Dataset[DocStat] = {
-    import tokenized.sparkSession.implicits._
-    tokenized.select($"doc_id", $"url", $"dl".as("doclen"), $"shard").as[DocStat]
-  }
-
-  /** (term, doc_id, tf, dl) via explode + partial+final hash aggregation. */
-  def termFreqs(tokenized: DataFrame): Dataset[Posting] = {
-    import tokenized.sparkSession.implicits._
-    tokenized
-      .select($"doc_id", $"dl", explode($"tokens").as("term"))
-      .groupBy($"term", $"doc_id", $"dl")
-      .agg(count(lit(1)).cast("int").as("tf"))
-      .select($"term", $"doc_id", $"tf", $"dl".as("dl"))
-      .as[Posting]
   }
 
   /** Tiny mutable counter cell — one allocation per DISTINCT term per doc
@@ -151,8 +133,8 @@ object IndexBuild {
     * This cuts the build's ONE shuffle by the within-doc term-duplication
     * factor in both rows and bytes (the term string no longer travels once
     * per occurrence) — the dominant cost of a 100 TB build and the lever on
-    * a bandwidth-capped box. Downstream [[saltedRuns]] is unchanged:
-    * `mergeConsecutive` accepts pre-aggregated input as a no-op, and the
+    * a bandwidth-capped box. Downstream [[saltedRuns]] is unchanged: its
+    * equal-doc_id merge accepts pre-aggregated input as a no-op, and the
     * per-(term,salt) doc_id-sorted posting stream — hence every encoded
     * block — is byte-identical to the raw-instance feed. */
   def docTermFreqs(tokenized: DataFrame): Dataset[ShardPosting] = {
@@ -185,9 +167,6 @@ object IndexBuild {
       }
   }
 
-  private[index] def tfSat(tf: Int, dl: Int, avgdl: Double, k1: Double, b: Double): Double =
-    tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
   /** Decode a block back to postings (sorted by doc_id). */
   def decodeBlock(blk: PostingBlock): Iterator[Posting] = {
     val docs = VarByte.decodeDeltas(blk.doc_gaps_vb, blk.n_docs)
@@ -205,12 +184,12 @@ object IndexBuild {
     * over [0, 2^63), so fixed-width ranges are as balanced as hash salting —
     * AND they make the salted runs of one term DISJOINT and ordered (all
     * doc ids in salt k precede all in salt k+1). That property eliminates
-    * the whole k-way merge stage: the concatenation of the per-salt sorted
-    * runs in salt order IS the globally doc_id-ordered posting list, so no
-    * task ever needs to hold more than one encode buffer — per-term merge
-    * state is O(blockSize) no matter how hot the term (the reference's
-    * heapq.merge, hash_index.py:166-195, becomes a zero-cost layout
-    * property instead of a compute stage). */
+    * any merge ACROSS salts: the concatenation of the per-salt blocks in
+    * salt order IS the globally doc_id-ordered posting list. A reduce task
+    * holds one (shard|salt, term) group's decoded postings whole while it
+    * merges them, so a hot term's per-task state is bounded by
+    * ~targetPerSalt postings, not by the term's df (the reference's
+    * heapq.merge, hash_index.py:166-195, shrinks to one salt's slice). */
   def rangeSalt(docId: Long, n: Int): Int =
     if (n <= 1) 0 else (docId / (Long.MaxValue / n + 1)).toInt
 
@@ -225,7 +204,8 @@ object IndexBuild {
       gk: Long, term: String, n: Int,
       docs_vb: Array[Byte], tfs_vb: Array[Byte], dls_vb: Array[Byte])
 
-  /** Growable (doc_id, tfdl) pair buffer for one (term, salt) run. */
+  /** Growable (doc_id, tf|dl) pair buffer: one (term, salt) run on the map
+    * side, one whole (shard|salt, term) group at the reduce-side merge. */
   private final class RunBuf(initCap: Int) {
     var docs = new Array[Long](initCap)
     var tfdls = new Array[Long](initCap)
@@ -278,36 +258,48 @@ object IndexBuild {
     }
   }
 
-  /** Sort a run buffer by doc_id, merge equal doc_ids (sum tf, keep the
-    * first dl — doc_ids repeat only on instance-level feeds, where dl is
-    * constant per doc), and varbyte-encode it into one [[PostingRun]]. */
-  private def encodeRun(gk: Long, term: String, b: RunBuf): PostingRun = {
-    sortPairs(b.docs, b.tfdls, 0, b.n - 1)
-    val docs = new Array[Long](b.n)
-    val tfs = new Array[Long](b.n)
-    val dls = new Array[Long](b.n)
+  /** One doc_id-sorted posting list with distinct doc_ids, as parallel
+    * arrays. */
+  private final case class Merged(docs: Array[Long], tfs: Array[Long],
+                                  dls: Array[Long])
+
+  /** Sort a run buffer by doc_id and merge equal doc_ids (sum tf, keep the
+    * first dl — doc_ids repeat only on instance-level feeds or across runs,
+    * where dl is constant per doc). */
+  private def sortMerge(b: RunBuf): Merged = {
+    val (d, t, n) = (b.docs, b.tfdls, b.n)
+    sortPairs(d, t, 0, n - 1)
+    val docs = new Array[Long](n)
+    val tfs = new Array[Long](n)
+    val dls = new Array[Long](n)
     var m = 0
     var i = 0
-    while (i < b.n) {
-      val docId = b.docs(i)
-      var tf = (b.tfdls(i) >>> 32).toInt
-      val dl = b.tfdls(i).toInt
+    while (i < n) {
+      val docId = d(i)
+      var tf = (t(i) >>> 32).toInt
+      val dl = t(i).toInt
       i += 1
-      while (i < b.n && b.docs(i) == docId) {
-        tf += (b.tfdls(i) >>> 32).toInt; i += 1
+      while (i < n && d(i) == docId) {
+        tf += (t(i) >>> 32).toInt; i += 1
       }
       docs(m) = docId; tfs(m) = tf.toLong; dls(m) = dl.toLong
       m += 1
     }
-    PostingRun(gk, term, m,
-      VarByte.encodeDeltas(java.util.Arrays.copyOf(docs, m)),
-      VarByte.encode(java.util.Arrays.copyOf(tfs, m)),
-      VarByte.encode(java.util.Arrays.copyOf(dls, m)))
+    Merged(java.util.Arrays.copyOf(docs, m), java.util.Arrays.copyOf(tfs, m),
+      java.util.Arrays.copyOf(dls, m))
+  }
+
+  /** A run buffer, sorted and merged, varbyte-encoded into one
+    * [[PostingRun]]. */
+  private def encodeRun(gk: Long, term: String, b: RunBuf): PostingRun = {
+    val m = sortMerge(b)
+    PostingRun(gk, term, m.docs.length, VarByte.encodeDeltas(m.docs),
+      VarByte.encode(m.tfs), VarByte.encode(m.dls))
   }
 
   /** Map-side state cap: when a task has buffered this many postings it
     * flushes its runs early (several runs per (term, salt) per partition
-    * are fine — the reduce-side k-way merge accepts any number). Bounds
+    * are fine — the reduce-side merge accepts any number). Bounds
     * per-task memory at ~2×64 MB of primitive arrays regardless of
     * partition size. */
   private val RunFlushPostings = 4L * 1000 * 1000
@@ -373,119 +365,68 @@ object IndexBuild {
       }
     }
 
-  /** Reduce side: k-way-merge the doc_id-sorted runs of one (shard|salt,
-    * term) group and chunk the merged stream into encoded blocks — the
+  /** Reduce side: merge the doc_id-sorted runs of one (shard|salt, term)
+    * group into one posting list and chunk it into blocks. The group is
+    * held decoded and whole — at most ~saltThreshold postings for an
+    * unsalted term, ~targetPerSalt for a salted one. This is the
     * byte-identical successor of the row-per-posting sorted shuffle (same
     * merge-equal-doc_ids-then-chunk semantics over the same globally sorted
-    * stream; runs never interleave equal doc_ids unless the caller fed
-    * duplicate (term, doc) rows across partitions, which the merge handles
-    * exactly like the old sorted shuffle did). */
+    * stream). A single run is already sorted and merged (map side) and is
+    * chunked as decoded — the common case for rare terms. Several runs are
+    * concatenated and go through the map side's own sort-and-merge: runs
+    * interleave doc_ids, and repeat one only when the caller fed duplicate
+    * (term, doc) rows across partitions, which the merge sums exactly like
+    * the old sorted shuffle did. */
   private def mergeRunsEncode(shard: Int, term: String, salt: Int,
                               runs: Array[PostingRun], blockSize: Int,
-                              avgdl: Double, k1: Double, b: Double
-                             ): Iterator[PostingBlock] = {
-    val k = runs.length
-    val rd = new Array[Array[Long]](k)
-    val rt = new Array[Array[Long]](k)
-    val rl = new Array[Array[Long]](k)
-    var i = 0
-    while (i < k) {
-      val r = runs(i)
-      rd(i) = VarByte.decodeDeltas(r.docs_vb, r.n)
-      rt(i) = VarByte.decode(r.tfs_vb, r.n)
-      rl(i) = VarByte.decode(r.dls_vb, r.n)
-      i += 1
-    }
-    if (k == 1)
-      // single run (already merged and sorted at map side): chunk directly,
-      // no heap — the common case for rare terms and single-partition waves
-      return singleRunBlocks(shard, term, salt, rd(0), rt(0), rl(0),
-        blockSize, avgdl, k1, b)
-
-    val pos = new Array[Int](k)
-    // min-heap of run indices keyed by current doc_id; indices are boxed
-    // ONCE here (Integer.valueOf only caches ≤127, and a hot term's group
-    // can hold one run per map partition — re-boxing on every re-add would
-    // allocate per posting)
-    val boxed = Array.tabulate[Integer](k)(Integer.valueOf)
-    val heap = new java.util.PriorityQueue[Integer](math.max(1, k),
-      (a: Integer, b2: Integer) => java.lang.Long.compare(
-        rd(a.intValue())(pos(a.intValue())), rd(b2.intValue())(pos(b2.intValue()))))
-    i = 0
-    while (i < k) { if (rd(i).nonEmpty) heap.add(boxed(i)); i += 1 }
-
-    new Iterator[PostingBlock] {
-      private val docs = new Array[Long](blockSize)
-      private val tfs = new Array[Long](blockSize)
-      private val dls = new Array[Long](blockSize)
-      private var blockId = 0
-      def hasNext: Boolean = !heap.isEmpty
-      def next(): PostingBlock = {
-        var n = 0
-        var maxTf = 0
-        var maxSat = 0.0
-        while (!heap.isEmpty && n < blockSize) {
-          var r = heap.poll().intValue()
-          val docId = rd(r)(pos(r))
-          var tf = rt(r)(pos(r)).toInt
-          val dl = rl(r)(pos(r)).toInt
-          pos(r) += 1
-          if (pos(r) < rd(r).length) heap.add(boxed(r))
-          // merge the same doc_id surfacing from any run
-          var top = heap.peek()
-          while (top != null && rd(top.intValue())(pos(top.intValue())) == docId) {
-            r = heap.poll().intValue()
-            tf += rt(r)(pos(r)).toInt
-            pos(r) += 1
-            if (pos(r) < rd(r).length) heap.add(boxed(r))
-            top = heap.peek()
-          }
-          docs(n) = docId; tfs(n) = tf.toLong; dls(n) = dl.toLong
-          if (tf > maxTf) maxTf = tf
-          val s = tfSat(tf, dl, avgdl, k1, b)
-          if (s > maxSat) maxSat = s
-          n += 1
+                              avgdl: Double): Iterator[PostingBlock] = {
+    val merged =
+      if (runs.length == 1) {
+        val r = runs(0)
+        Merged(VarByte.decodeDeltas(r.docs_vb, r.n), VarByte.decode(r.tfs_vb, r.n),
+          VarByte.decode(r.dls_vb, r.n))
+      } else {
+        val buf = new RunBuf(runs.iterator.map(_.n).sum)
+        for (r <- runs) {
+          val docs = VarByte.decodeDeltas(r.docs_vb, r.n)
+          val tfs = VarByte.decode(r.tfs_vb, r.n)
+          val dls = VarByte.decode(r.dls_vb, r.n)
+          var i = 0
+          while (i < r.n) { buf.add(docs(i), (tfs(i) << 32) | dls(i)); i += 1 }
         }
-        val blk = PostingBlock(
-          shard, term, salt, blockId, docs(0), docs(n - 1), n,
-          maxTf, maxSat,
-          VarByte.encodeDeltas(java.util.Arrays.copyOf(docs, n)),
-          VarByte.encode(java.util.Arrays.copyOf(tfs, n)),
-          VarByte.encode(java.util.Arrays.copyOf(dls, n)))
-        blockId += 1
-        blk
+        sortMerge(buf)
       }
-    }
+    chunkBlocks(shard, term, salt, merged, blockSize, avgdl)
   }
 
-  /** Chunk one already-merged, doc_id-sorted run straight into blocks. */
-  private def singleRunBlocks(shard: Int, term: String, salt: Int,
-                              docsIn: Array[Long], tfsIn: Array[Long],
-                              dlsIn: Array[Long], blockSize: Int,
-                              avgdl: Double, k1: Double, b: Double
-                             ): Iterator[PostingBlock] =
+  /** Chunk one merged, doc_id-sorted posting list into blocks of ≤
+    * blockSize postings, each with its max tf and its max [[Bm25.tfSat]] —
+    * the scorer's own function, so the stored bound is never below a score
+    * the scorer computes for the block. */
+  private def chunkBlocks(shard: Int, term: String, salt: Int, m: Merged,
+                          blockSize: Int, avgdl: Double): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
       private var off = 0
       private var blockId = 0
-      def hasNext: Boolean = off < docsIn.length
+      def hasNext: Boolean = off < m.docs.length
       def next(): PostingBlock = {
-        val n = math.min(blockSize, docsIn.length - off)
+        val n = math.min(blockSize, m.docs.length - off)
         var maxTf = 0
         var maxSat = 0.0
-        var i = 0
-        while (i < n) {
-          val tf = tfsIn(off + i).toInt
+        var i = off
+        while (i < off + n) {
+          val tf = m.tfs(i).toInt
           if (tf > maxTf) maxTf = tf
-          val s = tfSat(tf, dlsIn(off + i).toInt, avgdl, k1, b)
+          val s = Bm25.tfSat(tf, m.dls(i).toInt, avgdl)
           if (s > maxSat) maxSat = s
           i += 1
         }
         val blk = PostingBlock(
           shard, term, salt, blockId,
-          docsIn(off), docsIn(off + n - 1), n, maxTf, maxSat,
-          VarByte.encodeDeltas(java.util.Arrays.copyOfRange(docsIn, off, off + n)),
-          VarByte.encode(java.util.Arrays.copyOfRange(tfsIn, off, off + n)),
-          VarByte.encode(java.util.Arrays.copyOfRange(dlsIn, off, off + n)))
+          m.docs(off), m.docs(off + n - 1), n, maxTf, maxSat,
+          VarByte.encodeDeltas(java.util.Arrays.copyOfRange(m.docs, off, off + n)),
+          VarByte.encode(java.util.Arrays.copyOfRange(m.tfs, off, off + n)),
+          VarByte.encode(java.util.Arrays.copyOfRange(m.dls, off, off + n)))
         off += n
         blockId += 1
         blk
@@ -493,7 +434,7 @@ object IndexBuild {
     }
 
   /** Salt hot terms, generate map-side sorted varbyte runs per (shard|salt,
-    * term) (SPIMI, IIR §4.3), shuffle the RUNS, k-way-merge and chunk into
+    * term) (SPIMI, IIR §4.3), shuffle the RUNS, merge and chunk into
     * blocks at the reduce side. The salt bounds any single group's postings
     * to ~targetPerSalt regardless of term skew; keying by shard lets ONE
     * job process a whole wave of shards. Because the salt is a doc_id RANGE
@@ -520,21 +461,13 @@ object IndexBuild {
       t -> saltCount(df, p.targetPerSalt)
     }
     val bcHot = spark.sparkContext.broadcast(hotSalts)
-    val (k1, b, blockSize) = (p.k1, p.b, p.blockSize)
+    val blockSize = p.blockSize
     tf
       .mapPartitions(it => partitionRuns(it, bcHot.value))
       .groupByKey(r => (r.gk, r.term))
       .flatMapGroups { (key: (Long, String), it: Iterator[PostingRun]) =>
         mergeRunsEncode((key._1 >>> 32).toInt, key._2, key._1.toInt,
-          it.toArray, blockSize, avgdl, k1, b)
+          it.toArray, blockSize, avgdl)
       }
   }
-
-  /** The postings build over a wave of shards — ONE shuffle. hotDf =
-    * per-shard posting count (approx) of terms above the salt threshold.
-    * (Range salting makes a separate merge stage unnecessary; see
-    * [[rangeSalt]].) */
-  def buildShardPostings(tf: Dataset[ShardPosting], hotDf: Map[String, Long],
-                         p: BuildParams, avgdl: Double): Dataset[PostingBlock] =
-    saltedRuns(tf, hotDf, p, avgdl)
 }

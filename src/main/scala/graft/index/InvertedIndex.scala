@@ -270,8 +270,8 @@ object InvertedIndex {
     // term per doc, not per token instance (IndexBuild.docTermFreqs). There
     // is deliberately NO corpus-wide (term, doc_id) aggregation: its group
     // count ≈ corpus size degenerates hash agg into an external sort; the
-    // per-doc HashMap is O(doc) and the salted sort's run-length merge
-    // (IndexBuild.mergeConsecutive) remains as a no-op safety net.
+    // per-doc HashMap is O(doc) and the run build's equal-doc_id merge
+    // remains as a no-op safety net.
     def wavePostingsInput(shards: Seq[Int]) =
       IndexBuild.docTermFreqs(tokenized.filter($"shard".isin(shards: _*)))
 
@@ -321,7 +321,7 @@ object InvertedIndex {
       val wavePartitions = math.max(1L, math.min(20000L, balanced)).toInt
       // AQE partition coalescing must sit out the wave: the run shuffle's
       // rows are varbyte-COMPRESSED posting runs, so their byte size
-      // underrepresents reduce work (decode + k-way merge + block encode
+      // underrepresents reduce work (decode + merge + block encode
       // of ~125 postings per wire byte) by ~2 orders of magnitude, and the
       // byte-based advisory target coalesces the data-derived partition
       // count ~8× below the cores (measured: postings-build 13.2 s
@@ -360,7 +360,7 @@ object InvertedIndex {
           .parquet(s"$dir/corpus")))
 
       try phaseTimed("postings-build")(
-        IndexBuild.buildShardPostings(wavePostingsInput(wave), hotDf, p, avgdl)
+        IndexBuild.saltedRuns(wavePostingsInput(wave), hotDf, p, avgdl)
           .withColumn("bucket",
             pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
           .repartition(col("shard"), col("bucket"))

@@ -71,7 +71,7 @@ object Evaluate {
     val toks = TextOps.tokens(docs)
     // per-doc token counts are a map-only pass (byte-identical to the
     // groupBy form — long counts, exact sums), not a token-relation shuffle
-    val dl = TextOps.docLengthsFast(docs)
+    val dl = TextOps.docLengths(docs)
     val stats = dl.agg(count(lit(1)).as("n"), avg($"dl").as("avgdl"))
     val tf = toks.join(broadcast(qterms), $"term" === $"qterm")
       .groupBy($"query_id", $"doc_id", $"term").agg(count(lit(1)).as("tf"))

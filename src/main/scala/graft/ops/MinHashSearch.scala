@@ -86,8 +86,8 @@ object MinHashSearch {
   private def withJaccard(docs: DataFrame, qt: DataFrame, qsizes: Seq[(Long, Long)],
                           cand: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val dtok = TextOps.distinctTokensFast(docs)
-    val dsize = TextOps.tokenSetSizesFast(docs)
+    val dtok = TextOps.distinctTokens(docs)
+    val dsize = TextOps.tokenSetSizes(docs)
       .select(col("doc_id"), col("n").as("dn"))
     val qsize = broadcast(qsizes.toDF("query_id", "qn"))
     val inter = cand.select(col("query_id"), col("doc_id"))

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over a `documents(doc_id, text, ...)` table whose
@@ -22,62 +24,44 @@ object TextOps {
       .select(col("doc_id"), col("col").as("term"),
         (col("pos") + 1).cast("long").as("ord"))
 
+  /** The typed passes' one split-and-filter: each doc's non-empty
+    * space-separated tokens, handed to `rows` with its doc_id — one map-only
+    * pass, no shuffle. */
+  private def perDoc[T <: Product: TypeTag](docs: DataFrame)(
+      rows: (Long, Array[String]) => Iterator[T]): Dataset[T] = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        rows(id, if (text == null) Array.empty[String]
+          else text.split(' ').filter(_.nonEmpty))
+      })(Encoders.product[T])
+  }
+
   /** Typed zero-shuffle DISTINCT (doc_id, term) relation — byte-identical
     * to `tokens(docs).select(doc_id, term).distinct()` (set semantics are
     * PER-DOC, so a per-doc HashSet replaces the corpus-wide distinct()
     * exchange; docs with no tokens emit nothing, like the explode). */
-  def distinctTokensFast(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          val seen = new java.util.HashSet[String](math.max(8, toks.length * 2))
-          toks.iterator.filter(t => t.nonEmpty && seen.add(t)).map(t => (id, t))
-        }
-      }.toDF("doc_id", "term")
-  }
+  def distinctTokens(docs: DataFrame): DataFrame =
+    perDoc(docs) { (id, toks) =>
+      val seen = new java.util.HashSet[String](math.max(8, toks.length * 2))
+      toks.iterator.filter(seen.add).map(t => (id, t))
+    }.toDF("doc_id", "term")
 
   /** Typed zero-shuffle per-doc distinct-token counts (doc_id, n) — the
     * map-only form of `distinctTokens.groupBy(doc_id).count`. */
-  def tokenSetSizesFast(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          val seen = new java.util.HashSet[String](math.max(8, toks.length * 2))
-          var i = 0
-          while (i < toks.length) {
-            val t = toks(i)
-            if (t.nonEmpty) seen.add(t)
-            i += 1
-          }
-          if (seen.isEmpty) Iterator.empty
-          else Iterator.single((id, seen.size.toLong))
-        }
-      }.toDF("doc_id", "n")
-  }
+  def tokenSetSizes(docs: DataFrame): DataFrame =
+    perDoc(docs) { (id, toks) =>
+      if (toks.isEmpty) Iterator.empty
+      else Iterator.single((id, toks.distinct.length.toLong))
+    }.toDF("doc_id", "n")
 
   /** Typed zero-shuffle per-doc token counts WITH multiplicity (doc_id, dl)
     * — the map-only form of `tokens.groupBy(doc_id).count` (empty docs
     * emit nothing, like the explode). */
-  def docLengthsFast(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.split(' ')
-          var n = 0L
-          var i = 0
-          while (i < toks.length) {
-            if (toks(i).nonEmpty) n += 1
-            i += 1
-          }
-          if (n == 0L) Iterator.empty else Iterator.single((id, n))
-        }
-      }.toDF("doc_id", "dl")
-  }
+  def docLengths(docs: DataFrame): DataFrame =
+    perDoc(docs) { (id, toks) =>
+      if (toks.isEmpty) Iterator.empty else Iterator.single((id, toks.length.toLong))
+    }.toDF("doc_id", "dl")
 
   /** Whitespace + regex ("BPE-ish" [a-z0-9]+ word pieces) token counts. */
   def tokenCounts(docs: DataFrame): DataFrame =
@@ -97,7 +81,7 @@ object TextOps {
   /** Single-row corpus stats (per-doc lengths from the map-only pass —
     * long counts, so the avg is exact and byte-identical either way). */
   def corpusStats(docs: DataFrame): DataFrame =
-    docLengthsFast(docs)
+    docLengths(docs)
       .agg(count(lit(1)).as("n_docs"), round(avg(col("dl")), 6).as("avgdl"))
 
   /** BM25 top-k over the documents table for a fixed term set (k1=1.2,
@@ -105,7 +89,7 @@ object TextOps {
     * doc_id tiebreak so the result is bit-stable across engines. */
   def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     val toks = tokens(docs)
-    val dl = docLengthsFast(docs) // map-only; exact long counts either way
+    val dl = docLengths(docs) // map-only; exact long counts either way
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
     val tf = toks.filter(col("term").isin(terms: _*))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

@@ -13,7 +13,13 @@ import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
   *
   * score(d, q) = Σ_{t ∈ distinct(q)} qtf(t) · idf(t) · tfsat(t, d)
   *   idf(t)      = ln(1 + (N − df + 0.5) / (df + 0.5))          (Lucene form)
-  *   tfsat(t, d) = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+  *   tfsat(t, d) = (tf·(k1+1)) / (tf + k1·((1 − b) + (b/avgdl)·dl))
+  *
+  * tfsat is written once, in that operation order: [[tfSat]], with
+  * [[tfSatCol]] its codegen twin (pinned bit for bit by Bm25ScorerSpec).
+  * The build's per-block `max_tfsat` calls [[tfSat]] too, so a block's
+  * stored bound is exactly the largest tfsat any scorer computes for it —
+  * floating-point rounding cannot sink it below a score it must bound.
   *
   * Deterministic tiebreak everywhere: (score desc, doc_id asc).
   *
@@ -21,16 +27,16 @@ import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
   * re-rank (reference: index/index_new.py:65-72): query terms → pruned
   * posting-block scan (bucket directory pruning + Parquet min-max on term)
   * → decode → score → per-doc sum → top-k. Two scorers run that pipeline
-  * after the scan, with the same per-posting arithmetic ([[tfSatCol]]'s
-  * association):
+  * after the scan, with the same per-posting arithmetic:
   *   - the DRIVER scorer ([[IndexHandle]]'s `localTopk`): one `collect` of
-  *     the pruned blocks, then decode, score, sum into a primitive
-  *     doc_id → score table and a bounded top-k heap in driver code. At
-  *     small sizes a query's time is per-Spark-job latency, not posting
-  *     work, so one job beats a plan of several.
-  *   - the SPARK plans: decode → codegen'd score → groupBy(doc_id) sum →
-  *     TakeOrderedAndProject (partial per-partition top-k, merged on the
-  *     driver). They scale past what one driver should hold.
+  *     the pruned blocks, then decode, score with [[tfSat]], sum into a
+  *     primitive doc_id → score table and a bounded top-k heap in driver
+  *     code. At small sizes a query's time is per-Spark-job latency, not
+  *     posting work, so one job beats a plan of several.
+  *   - the SPARK plans: decode → codegen'd score ([[tfSatCol]]) →
+  *     groupBy(doc_id) sum → TakeOrderedAndProject (partial per-partition
+  *     top-k, merged on the driver). They scale past what one driver
+  *     should hold.
   * A query takes the driver scorer when a bound on its postings fits the
   * budget [[LocalPostings]] (a handle's `localPostings`). The gate needs no
   * Spark job: the exhaustive path reads the snapshot's committed posting
@@ -180,16 +186,18 @@ object Bm25 {
   def idf(n: Long, df: Long): Double =
     math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-  def tfSat(tf: Double, dl: Double, avgdl: Double): Double =
-    tf * (IndexBuild.BM25_K1 + 1.0) /
-      (tf + IndexBuild.BM25_K1 * (1.0 - IndexBuild.BM25_B +
-        IndexBuild.BM25_B * dl / avgdl))
+  final val K1 = 1.2
+  final val B = 0.75
 
-  /** Column form of tfsat — keeps per-posting scoring in codegen. */
+  /** Saturated term frequency — the one definition (see the header for
+    * why its operation order is fixed). */
+  def tfSat(tf: Double, dl: Double, avgdl: Double): Double =
+    tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + (B / avgdl) * dl))
+
+  /** Column form of [[tfSat]], the same operations in the same order —
+    * keeps per-posting scoring in codegen. */
   def tfSatCol(tf: Column, dl: Column, avgdl: Double): Column =
-    tf * lit(IndexBuild.BM25_K1 + 1.0) /
-      (tf + lit(IndexBuild.BM25_K1) * (lit(1.0 - IndexBuild.BM25_B) +
-        lit(IndexBuild.BM25_B / avgdl) * dl))
+    tf * lit(K1 + 1.0) / (tf + lit(K1) * (lit(1.0 - B) + lit(B / avgdl) * dl))
 
   /** Parse + weight the query with the reference query tokenizer (uncapped,
     * stopword-filtered; reference: cleaners.py:38-41). Duplicate terms
@@ -367,21 +375,25 @@ object Bm25 {
       loadBlockMeta(queryTerms(q).map(_.term)).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
-    /** The Spark scorer of block-max survivors: decode + score + aggregate
-      * + top-k. Scoring weights (term → qtf·idf) enter as a literal map so
-      * the whole per-posting path after decode is codegen. */
-    private def scoreBlocks(blocks: Dataset[PostingBlock],
-                            weights: Map[String, Double], k: Int): DataFrame = {
-      val wMap = map(weights.toSeq.flatMap { case (t, w) => Seq(lit(t), lit(w)) }: _*)
-      blocks
-        .flatMap(IndexBuild.decodeBlock _)
-        .toDF()
-        .withColumn("score",
-          element_at(wMap, $"term") * tfSatCol($"tf", $"dl", avgdl))
+    /** The Spark plans' one scoring tail: decoded postings carrying their
+      * term's weight `w` (qtf·idf) → w·tfsat in codegen → per-doc sum →
+      * top k by (score desc, doc_id asc). */
+    private def sumTopk(postings: DataFrame, k: Int): DataFrame =
+      postings
+        .withColumn("score", $"w" * tfSatCol($"tf", $"dl", avgdl))
         .groupBy($"doc_id")
         .agg(sum($"score").as("score"))
         .orderBy(desc("score"), asc("doc_id"))
         .limit(k)
+
+    /** The Spark scorer of block-max survivors. Scoring weights (term →
+      * qtf·idf) enter as a literal map so the whole per-posting path after
+      * decode is codegen. */
+    private def scoreBlocks(blocks: Dataset[PostingBlock],
+                            weights: Map[String, Double], k: Int): DataFrame = {
+      val wMap = map(weights.toSeq.flatMap { case (t, w) => Seq(lit(t), lit(w)) }: _*)
+      sumTopk(blocks.flatMap(IndexBuild.decodeBlock _).toDF()
+        .withColumn("w", element_at(wMap, $"term")), k)
     }
 
     /** ONE-action exhaustive top-k: df (and so idf) is aggregated from
@@ -399,19 +411,12 @@ object Bm25 {
         .select($"term", (element_at(qtfMap, $"term") *
           log(lit(1.0) + (lit(nDocs.toDouble) - $"df" + 0.5) / ($"df" + 0.5)))
           .as("w"))
-      blocks
-        .flatMap(IndexBuild.decodeBlock _)
-        .toDF()
-        .join(broadcast(termW), "term")
-        .withColumn("score", $"w" * tfSatCol($"tf", $"dl", avgdl))
-        .groupBy($"doc_id")
-        .agg(sum($"score").as("score"))
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(k)
+      sumTopk(blocks.flatMap(IndexBuild.decodeBlock _).toDF()
+        .join(broadcast(termW), "term"), k)
     }
 
-    /** The driver scorer: decode `blocks`, score each posting with the
-      * arithmetic of [[tfSatCol]], sum per doc into a primitive table and
+    /** The driver scorer: decode `blocks`, score each posting with
+      * [[Bm25.tfSat]], sum per doc into a primitive table and
       * keep the top k by (score desc, doc_id asc). Returns a local
       * DataFrame (doc_id, score) — collecting it runs no job.
       *
@@ -423,15 +428,11 @@ object Bm25 {
       * bit for bit, not just up to summation order. */
     private def localTopk(blocks: Array[PostingBlock],
                           weights: Map[String, Double], k: Int): DataFrame = {
-      import IndexBuild.{BM25_B, BM25_K1}
-      val (c1, c0, cb) = (BM25_K1 + 1.0, 1.0 - BM25_B, BM25_B / avgdl)
       val scores = new DocScores(blocks.iterator.map(_.n_docs).sum)
       for (b <- blocks.sortBy(b => (b.term, b.shard, b.salt, b.block_id))) {
         val w = weights(b.term)
-        IndexBuild.decodeBlock(b).foreach { p =>
-          val tf = p.tf.toDouble
-          scores.add(p.doc_id, w * (tf * c1 / (tf + BM25_K1 * (c0 + cb * p.dl))))
-        }
+        IndexBuild.decodeBlock(b).foreach(p =>
+          scores.add(p.doc_id, w * tfSat(p.tf, p.dl, avgdl)))
       }
       scores.top(k).toDF("doc_id", "score")
     }

@@ -109,7 +109,7 @@ object StreamingIndex {
     // streaming append previously paid a full groupBy shuffle per
     // micro-batch for tf that run-length/pre-merge semantics give for free
     val postingsObs = Observation("postings")
-    try IndexBuild.buildShardPostings(IndexBuild.docTermFreqs(tokenized), Map.empty, p, avgdl)
+    try IndexBuild.saltedRuns(IndexBuild.docTermFreqs(tokenized), Map.empty, p, avgdl)
       .withColumn("bucket", pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
       .repartition(col("bucket")).sortWithinPartitions($"term", $"salt", $"block_id")
       .observe(postingsObs, coalesce(sum($"n_docs"), lit(0L)).as("rows"),

@@ -109,6 +109,52 @@ class Bm25ScorerSpec extends SparkSpec {
     assert(all.size == 4 && ties.map(_._1) == tieIds && ties.map(_._2).distinct.size == 1)
   }
 
+  test("block maxima bound the scorer exactly: forced WAND keeps a block " +
+    "whose tfsat rounds differently in another operation order") {
+    // avgdl is exactly 100 (1000 tokens over 10 docs); "zz" occurs once, in
+    // a 74-token doc. Written as tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl)),
+    // its tfsat rounds one ulp below the scorer's value, and a block bound
+    // stored that way sank below θ and pruned the only matching block.
+    def doc(i: Int, n: Int, head: Seq[String] = Nil) =
+      page(s"ulp://$i", (head ++ (head.size until n).map(j => s"f${i}x$j")).mkString(" "))
+    val docs = doc(0, 74, Seq("zz")) +: ((1 to 8).map(doc(_, 103)) :+ doc(9, 102))
+    val dir = tmpDir("ulp-idx")
+    InvertedIndex.build(spark, docs.toDS(), dir, params)
+    val h0 = Bm25.open(spark, dir)
+    assert(h0.nDocs == 10 && h0.avgdl == 100.0)
+    for ((h, path) <- Seq(h0 -> "driver", h0.copy(localPostings = 0L) -> "spark")) {
+      val forced = h.copy(wandCutoff = 0L)
+      val want = rows(h.topk("zz", 1))
+      assert(want.map(_._1) == Seq(IndexBuild.docId("ulp://0")), s"[$path] $want")
+      assert(isLocal(forced.topkWand("zz", 1)) == (path == "driver"))
+      assert(rows(forced.topkWand("zz", 1)) == want, s"[$path] forced topkWand != topk")
+      val (total, kept, theta) = forced.wandStats("zz", 1)
+      assert(total == 1 && kept == 1, s"[$path] $total blocks, $kept kept, θ = $theta")
+    }
+    for (b <- InvertedIndex.postings(spark, dir).collect()) {
+      val top = IndexBuild.decodeBlock(b).map(p => Bm25.tfSat(p.tf, p.dl, h0.avgdl)).max
+      assert(top <= b.max_tfsat, s"${b.term}/${b.block_id}: $top > ${b.max_tfsat}")
+    }
+  }
+
+  test("tfSatCol is Bm25.tfSat bit for bit") {
+    // tf 1..50 × dl 1..2000, Int columns like the decoded postings the
+    // Spark plans score, one tfSatCol column per avgdl
+    val avgdls = Seq(100.0, 105.5345, 7.5, 8.884558)
+    val got = spark.range(50L * 2000L)
+      .select(floor($"id" / 2000 + 1).cast("int").as("tf"),
+        ($"id" % 2000 + 1).cast("int").as("dl"))
+      .select($"tf" +: $"dl" +: avgdls.map(Bm25.tfSatCol($"tf", $"dl", _)): _*)
+      .collect()
+    assert(got.length == 100000)
+    for (r <- got; (avgdl, i) <- avgdls.zipWithIndex) {
+      val (tf, dl, col) = (r.getInt(0), r.getInt(1), r.getDouble(2 + i))
+      val want = Bm25.tfSat(tf, dl, avgdl)
+      assert(java.lang.Double.doubleToLongBits(col) == java.lang.Double.doubleToLongBits(want),
+        s"tf=$tf dl=$dl avgdl=$avgdl: column $col, scalar $want")
+    }
+  }
+
   test("withUrls joins on the driver with inner-join multiplicity") {
     val h = Bm25.open(spark, corpus._1)
     val readded = IndexBuild.docId(corpus._2.last.url)

@@ -196,21 +196,21 @@ class SearchOpsSpec extends SparkSpec {
 
     // typed token passes ≡ their relational forms
     import graft.ops.TextOps
-    val dtFast = TextOps.distinctTokensFast(df)
+    val dtFast = TextOps.distinctTokens(df)
       .as[(Long, String)].collect().sorted.toSeq
     val dtCol = TextOps.tokens(df).select($"doc_id", $"term").distinct()
       .as[(Long, String)].collect().sorted.toSeq
-    assert(dtFast == dtCol, "distinctTokensFast diverged")
-    val szFast = TextOps.tokenSetSizesFast(df)
+    assert(dtFast == dtCol, "distinctTokens diverged")
+    val szFast = TextOps.tokenSetSizes(df)
       .as[(Long, Long)].collect().sorted.toSeq
     val szCol = TextOps.tokens(df).select($"doc_id", $"term").distinct()
       .groupBy($"doc_id").count().as[(Long, Long)].collect().sorted.toSeq
-    assert(szFast == szCol, "tokenSetSizesFast diverged")
-    val dlFast = TextOps.docLengthsFast(df)
+    assert(szFast == szCol, "tokenSetSizes diverged")
+    val dlFast = TextOps.docLengths(df)
       .as[(Long, Long)].collect().sorted.toSeq
     val dlCol = TextOps.tokens(df).groupBy($"doc_id").count()
       .as[(Long, Long)].collect().sorted.toSeq
-    assert(dlFast == dlCol, "docLengthsFast diverged")
+    assert(dlFast == dlCol, "docLengths diverged")
 
     // the empty and sub-n docs really are absent (not present-with-garbage)
     val emptyIds = docs.filter(_._2.trim.isEmpty).map(_._1).toSet

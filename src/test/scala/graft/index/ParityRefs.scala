@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, TextOps}
 import graft.ops.Dedup.{HashMode, Md5Portable, Xx64}
+import graft.query.Bm25
 
 /** Parity references: the relational (Column) forms of the signature ops,
   * whose shapes the DuckDB oracles mirror, and the row-per-posting salted
@@ -125,8 +126,7 @@ object ParityRefs {
     * (term, doc_id) aggregation. */
   private def encodeRunValues(shard: Int, term: String, salt: Int,
                               rvs: Iterator[RunValue], blockSize: Int,
-                              avgdl: Double, k1: Double, b: Double
-                             ): Iterator[PostingBlock] =
+                              avgdl: Double): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
       private val buf = rvs.buffered
       private val docs = new Array[Long](blockSize)
@@ -147,7 +147,7 @@ object ParityRefs {
             tf += (buf.next().tfdl >>> 32).toInt
           docs(n) = docId; tfs(n) = tf.toLong; dls(n) = dl.toLong
           if (tf > maxTf) maxTf = tf
-          val s = IndexBuild.tfSat(tf, dl, avgdl, k1, b)
+          val s = Bm25.tfSat(tf, dl, avgdl)
           if (s > maxSat) maxSat = s
           n += 1
         }
@@ -174,7 +174,7 @@ object ParityRefs {
       t -> IndexBuild.saltCount(df, p.targetPerSalt)
     }
     val bcHot = spark.sparkContext.broadcast(hotSalts)
-    val (k1, b, blockSize) = (p.k1, p.b, p.blockSize)
+    val blockSize = p.blockSize
     tf
       .groupByKey { pp =>
         val n = bcHot.value.getOrElse(pp.term, 1)
@@ -183,7 +183,7 @@ object ParityRefs {
       .mapValues(pp => RunValue(pp.doc_id, (pp.tf.toLong << 32) | pp.dl))
       .flatMapSortedGroups($"doc_id") { case ((gk, term), it) =>
         encodeRunValues((gk >>> 32).toInt, term, gk.toInt, it,
-          blockSize, avgdl, k1, b)
+          blockSize, avgdl)
       }
   }
 }
