@@ -35,8 +35,9 @@ object InvertedIndex {
 
   /** Per-shard corpus stats. `avgdl_build` is the corpus avgdl that this
     * shard's blocks were encoded with (their max_tfsat bounds assume it);
-    * query-time WAND inflates stale bounds by max(1, avgdl_now/avgdl_build)
-    * — tfsat is monotone in avgdl with exactly that Lipschitz factor — so
+    * query-time WAND inflates stale bounds by
+    * `Bm25.driftFactor(avgdl_now, avgdl_build)` — tfsat grows with avgdl by
+    * at most their ratio, and the factor adds a margin for rounding — so
     * bounds stay safe when later appends (resume waves, streaming segments)
     * shift the global avgdl. */
   case class CorpusShard(shard: Int, n_docs: Long, sum_dl: Long,

@@ -39,11 +39,11 @@ import graft.index.{IndexBuild, InvertedIndex, Posting, PostingBlock, TermStat}
   *     should hold.
   * A query takes the driver scorer when a bound on its postings fits the
   * budget [[LocalPostings]] (a handle's `localPostings`). The gate needs no
-  * Spark job: the exhaustive path reads the snapshot's committed posting
-  * total, a bound on any query's postings
-  * ([[graft.index.InvertedIndex.Snapshot]]`.postings`, known at open); the
-  * block-max path reads Σ df of the query terms from the termInfos it
-  * needs anyway.
+  * Spark job: it reads the snapshot's committed posting total, a bound on
+  * any query's postings ([[graft.index.InvertedIndex.Snapshot]]`.postings`,
+  * known at open). Below it, a forced block-max query is the exhaustive
+  * driver query too. Above it, the block-max path reads Σ df of the query
+  * terms from the termInfos its Spark bound jobs need anyway.
   *
   * [[IndexHandle.topkWand]] adds block-max pruning (Ding & Suel, SIGIR 2011
   * "Faster top-k document retrieval using block-max indexes"): a block of
@@ -85,8 +85,11 @@ object Bm25 {
 
   /** Posting budget of the driver scorer: a query whose gate input fits it
     * is scored by one block `collect` and driver code instead of a Spark
-    * plan. At 10^6 postings the driver holds a 2^21-slot score table
-    * (32 MB) plus the collected blocks' payloads.
+    * plan. When the snapshot's whole posting total fits it, a forced
+    * block-max query is that same one-job query: block-max pruning there
+    * would save only decode and scoring, since the one collect reads the
+    * query terms' payloads anyway. At 10^6 postings the driver holds a
+    * 2^21-slot score table (32 MB) plus the collected blocks' payloads.
     *
     * Measured at local[4] on a 4-vCPU host (Synth indexes of 2k–512k docs,
     * ~81 postings a doc, medians of 5, queries of 3 to 7.4·10^6 postings):
@@ -98,8 +101,10 @@ object Bm25 {
     * Spark plans' parallel decode; that is unmeasured.
     *
     * The exhaustive path gates on the WHOLE index's posting total, so on
-    * an index above 10^6 postings (~12k Synth docs) every query takes the
-    * Spark plans, even a one-rare-term query the driver scores faster. */
+    * an index above 10^6 postings (~12k Synth docs) every exhaustive query
+    * takes the Spark plan, even a one-rare-term query the driver scores
+    * faster, and every forced block-max query runs termInfos and the Spark
+    * bound jobs. */
   final val LocalPostings = 1000000L
 
   /** doc_id → summed score over primitive arrays, open addressing with
@@ -194,6 +199,34 @@ object Bm25 {
   def tfSat(tf: Double, dl: Double, avgdl: Double): Double =
     tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + (B / avgdl) * dl))
 
+  /** Inflation of a shard's stored block maxima once appends have moved
+    * avgdl: the shard's blocks were encoded at `avgdlBuild`, and for every
+    * tf, dl ≥ 1 and f = driftFactor(avgdl, avgdlBuild),
+    *   fl(fl(tfSat(tf, dl, avgdlBuild)) · f) ≥ fl(tfSat(tf, dl, avgdl)),
+    * so `max_tfsat · f` still bounds every score of the block.
+    *
+    * avgdl ≤ avgdlBuild gives exactly 1.0: tfsat falls with avgdl, and
+    * every IEEE operation in [[tfSat]] is monotone, so the rounded tfsat
+    * cannot rise either.
+    *
+    * avgdl > avgdlBuild: the exact tfsat grows by at most the ratio
+    * r = avgdl/avgdlBuild (its denominator is c + e/avgdl with c, e ≥ 0).
+    * [[tfSat]] rounds seven times, each by a relative error of at most
+    * u = 2^-53, and its five denominator roundings act on sums of
+    * non-negative terms, so a computed tfsat lies within the factors
+    * (1−u)^2/(1+u)^5 and (1+u)^2/(1−u)^5 of the exact one. Counting the
+    * roundings of r, of r·(1 + 2^-48) and of the product max_tfsat · f, the
+    * bound holds when (1 + 2^-48)·(1−u)^10 ≥ (1+u)^7, i.e. 32u ≥ 17u to
+    * first order. A bare r is not enough: at tf 4, dl 7955 and avgdl
+    * 224.4005433114935 → 224.4005433114936 (four ulps up), r = 1 + 4u, yet
+    * the inflated bound lands one ulp under the new tfsat (pinned in
+    * Bm25ScorerSpec). */
+  def driftFactor(avgdl: Double, avgdlBuild: Double): Double =
+    if (avgdl <= avgdlBuild) 1.0 else avgdl / avgdlBuild * DriftMargin
+
+  /** 1 + 2^-48, exact in a double: see [[driftFactor]]. */
+  private final val DriftMargin = 1.0 + java.lang.Math.scalb(1.0, -48)
+
   /** Column form of [[tfSat]], the same operations in the same order —
     * keeps per-posting scoring in codegen. */
   def tfSatCol(tf: Column, dl: Column, avgdl: Double): Column =
@@ -234,7 +267,7 @@ object Bm25 {
     val snap = InvertedIndex.snapshot(spark, dir)
     val p = snap.params.getOrElse(graft.index.BuildParams(nTermBuckets = nTermBuckets))
     val avgdl = snap.sumDl.toDouble / math.max(snap.nDocs, 1L)
-    val factors = snap.corpus.map(c => c.shard -> math.max(1.0, avgdl / c.avgdl_build)).toMap
+    val factors = snap.corpus.map(c => c.shard -> driftFactor(avgdl, c.avgdl_build)).toMap
     IndexHandle(spark, dir, snap.nDocs, avgdl, p.nTermBuckets, snap.committed, factors,
       InvertedIndex.postingsTable(spark, dir),
       InvertedIndex.docStats(spark, dir)
@@ -259,8 +292,9 @@ object Bm25 {
                            * it a query runs as one driver-blocking action
                            * (see singlePassTopk) — result-identical, lower
                            * latency. Above it, block-max WAND's extra
-                           * round-trips pay for themselves. Tests set 0 to
-                           * force the pruning path. */
+                           * round-trips pay for themselves. Tests set 0,
+                           * with localPostings 0, to force the pruning
+                           * path. */
                          wandCutoff: Long = 2000000L,
                          /** Driver-scorer budget in POSTINGS (see
                            * [[Bm25.LocalPostings]]): a query whose gate
@@ -270,7 +304,7 @@ object Bm25 {
                          localPostings: Long = Bm25.LocalPostings,
                          /** Committed posting total of the snapshot
                            * (Snapshot.postings, set by [[Bm25.open]]): the
-                           * exhaustive path's gate input. */
+                           * input of the [[onDriver]] gate. */
                          nPostings: Long = 0L) {
     import spark.implicits._
 
@@ -296,6 +330,12 @@ object Bm25 {
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       this
     }
+
+    /** Whether the snapshot's committed posting total (`nPostings`, read at
+      * open — no job) fits `localPostings`. No query can exceed it, so every
+      * query, forced block-max included, is then scored on the driver from
+      * one block `collect`. */
+    def onDriver: Boolean = nPostings <= localPostings
 
     /** Per-term stats cache: a query set hits the same vocabulary over and
       * over; one pruned termstats job per NEW term set, zero for repeats. */
@@ -439,15 +479,13 @@ object Bm25 {
 
     /** Exhaustive scoring: always correct; WAND must equal it.
       *
-      * When the snapshot's committed posting total (`nPostings`, read at
-      * open — no job) fits `localPostings`, no query can exceed it: the
-      * pruned blocks are collected in ONE job, df per term is Σ n_docs of
-      * the collected blocks, and [[localTopk]] scores them. Otherwise the
-      * one-action Spark plan ([[singlePassTopk]]) runs. */
+      * [[onDriver]]: the pruned blocks are collected in ONE job, df per term
+      * is Σ n_docs of the collected blocks, and [[localTopk]] scores them.
+      * Otherwise the one-action Spark plan ([[singlePassTopk]]) runs. */
     def topk(q: String, k: Int): DataFrame = {
       val qts = queryTerms(q)
       if (qts.isEmpty) emptyResult(spark)
-      else if (nPostings <= localPostings) {
+      else if (onDriver) {
         val blocks = loadBlocks(qts.map(_.term)).collect()
         val df = blocks.groupMapReduce(_.term)(_.n_docs.toLong)(_ + _)
         localTopk(blocks, qts.collect {
@@ -463,12 +501,16 @@ object Bm25 {
       * theta-bounding scan) cost more wall-clock than block skipping can
       * save — the pruned block scan is already small — so the query IS
       * [[topk]] (identical results: WAND with theta = −inf prunes nothing).
-      * Above it, block-max pruning pays; the blocks that survive the bound
-      * are scored on the driver ([[localTopk]]) when Σ df of the query
-      * terms (from termInfos, which the bound needs anyway) fits
-      * `localPostings`, else by the Spark plan ([[scoreBlocks]]). */
+      * [[onDriver]], the query is [[topk]] as well: its one block `collect`
+      * reads every payload of the query terms, so a bound could save only
+      * decode and scoring of a few dozen blocks, and computing it on the
+      * driver measured no faster than [[topk]]. Otherwise block-max pruning
+      * pays; the blocks that survive the bound are scored on the driver
+      * ([[localTopk]]) when Σ df of the query terms (from termInfos, which
+      * the bound needs anyway) fits `localPostings`, else by the Spark plan
+      * ([[scoreBlocks]]). */
     def topkWand(q: String, k: Int): DataFrame = {
-      if (nDocs < wandCutoff) return topk(q, k)
+      if (nDocs < wandCutoff || onDriver) return topk(q, k)
       val infos = termInfos(q)
       if (infos.isEmpty) return emptyResult(spark)
       val terms = infos.map(_.term)
@@ -525,10 +567,10 @@ object Bm25 {
       * than k — those scans are tiny anyway).
       *
       * Safety: cellMax(t', c) ≥ tfsat of every posting of t' in any doc of
-      * cell c (stale-avgdl inflation applied by the shared pruned scan
-      * under both projections), so the per-block bound still dominates
-      * every true document score in the block — the topk≡topkWand
-      * identity argument is unchanged. */
+      * cell c (stale-avgdl inflation, [[Bm25.driftFactor]], applied by the
+      * shared pruned scan under both projections), so the per-block bound
+      * still dominates every true document score in the block — the
+      * topk≡topkWand identity argument is unchanged. */
     private def computeBound(meta: Dataset[BlockMeta], infos: Seq[TermInfo],
                              k: Int): Option[WandBound] = {
       val eligible = infos.filter(_.df >= k)
@@ -577,8 +619,9 @@ object Bm25 {
       * computation as [[topkWand]] — but forcing it, regardless of the
       * adaptive cutoff and the all-hot bail (telemetry must measure the
       * bound itself) — without scoring; the bench uses it to show skipping
-      * is actually engaged at scale. Counts run on the metadata projection
-      * only: telemetry never touches a payload byte either. */
+      * is actually engaged at scale. It runs the Spark bound also where
+      * [[topkWand]] runs none ([[onDriver]]). Counts run on the metadata
+      * projection only: telemetry never touches a payload byte either. */
     def wandStats(q: String, k: Int): (Long, Long, Double) = {
       val infos = termInfos(q)
       if (infos.isEmpty) return (0L, 0L, 0.0)

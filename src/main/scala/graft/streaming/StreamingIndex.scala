@@ -18,8 +18,9 @@ import graft.index.{BuildParams, IndexBuild, InvertedIndex, ManifestRow}
   *
   * Consistency under growth: each segment's blocks embed the avgdl at its
   * append time (corpus row `avgdl_build`); queries inflate stale max_tfsat
-  * bounds by max(1, avgdl_now/avgdl_build), keeping WAND result-identical
-  * while the corpus drifts.
+  * bounds by `Bm25.driftFactor(avgdl_now, avgdl_build)` (avgdl_now /
+  * avgdl_build with a rounding margin, 1 when avgdl did not rise), keeping
+  * WAND result-identical while the corpus drifts.
   *
   * Exactly-once: foreachBatch + a manifest commit row per (segment) batch;
   * a replayed batch id that is already committed is skipped, so restart

@@ -137,6 +137,45 @@ class Bm25ScorerSpec extends SparkSpec {
     }
   }
 
+  test("the stale-avgdl factor keeps block maxima above the scores of a later avgdl") {
+    def bits(x: Double) = java.lang.Double.doubleToLongBits(x)
+    // an append moved avgdl up by four ulps; the bare ratio
+    // avgdl/avgdl_build (1 + 2^-51) inflates the old bound to one ulp under
+    // the new tfsat
+    val (a0, a1) = (224.4005433114935, 224.4005433114936)
+    val (tf, dl) = (4.0, 7955.0)
+    assert(bits(a1) - bits(a0) == 4 && a1 / a0 == 1.0 + java.lang.Math.scalb(1.0, -51))
+    assert(bits(Bm25.tfSat(tf, dl, a0) * (a1 / a0)) == bits(0.24306033086595927))
+    assert(bits(Bm25.tfSat(tf, dl, a1)) == bits(0.24306033086595932))
+    assert(Bm25.tfSat(tf, dl, a0) * Bm25.driftFactor(a1, a0) >= Bm25.tfSat(tf, dl, a1))
+    // avgdl at or below the build's: no inflation at all
+    assert(Bm25.driftFactor(a0, a0) == 1.0 && Bm25.driftFactor(a0, a1) == 1.0)
+
+    // seeded sweep: avgdl moved by a few ulps (where rounding decides) and
+    // by ordinary amounts, up and down
+    val rnd = new scala.util.Random(20261020L)
+    var bareUnder = 0
+    for (i <- 0 until 200000) {
+      val tf = 1 + rnd.nextInt(if (i % 4 == 0) 200 else 5)
+      val dl = (tf + rnd.nextInt(20000)).toDouble
+      val avgdlBuild = 5.0 + rnd.nextDouble() * 295.0
+      val avgdl = i % 3 match {
+        case 0 =>
+          Iterator.iterate(avgdlBuild)(java.lang.Math.nextUp).drop(1 + rnd.nextInt(6)).next()
+        case 1 => avgdlBuild * (1.0 + rnd.nextDouble() * 0.5)
+        case _ => avgdlBuild * (0.5 + rnd.nextDouble())
+      }
+      val stored = Bm25.tfSat(tf, dl, avgdlBuild)
+      val score = Bm25.tfSat(tf, dl, avgdl)
+      val bound = stored * Bm25.driftFactor(avgdl, avgdlBuild)
+      assert(bound >= score,
+        s"tf=$tf dl=$dl avgdl $avgdlBuild -> $avgdl: bound $bound < tfsat $score")
+      if (stored * math.max(1.0, avgdl / avgdlBuild) < score) bareUnder += 1
+    }
+    // the sweep reaches the cases the bare ratio gets wrong
+    assert(bareUnder > 0)
+  }
+
   test("tfSatCol is Bm25.tfSat bit for bit") {
     // tf 1..50 × dl 1..2000, Int columns like the decoded postings the
     // Spark plans score, one tfSatCol column per avgdl

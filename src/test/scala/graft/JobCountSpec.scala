@@ -13,7 +13,8 @@ import graft.query.Bm25
 import graft.streaming.StreamingIndex
 
 /** Spark-job budgets of the small paths, where per-job latency, not data
-  * volume, is the cost: a segment append, an index open and a served query. */
+  * volume, is the cost: a segment append, an index open, a served query and
+  * a forced block-max query. */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,5 +94,27 @@ class JobCountSpec extends SparkSpec {
     val jobs = jobsOf(h.withUrls(h.topkWand(q, 10)).collect())
     info(s"served query: ${jobs.size} jobs — ${jobs.mkString("; ")}")
     assert(jobs.size <= 2, s"served query ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("a warm forced block-max WAND query below the budget runs 1 Spark job") {
+    val dir = tmpDir("jobs-wand")
+    InvertedIndex.build(spark, Synth.pages(spark, 300, 11L, 4), dir,
+      BuildParams(numShards = 2, blockSize = 16))
+    val h = Bm25.open(spark, dir).copy(wandCutoff = 0L)
+    assert(h.onDriver)
+    val hot = Bm25.WandAllHotFrac * h.nDocs
+    // below the budget both take the one block collect of topk; above it
+    // (the Spark termInfos of a separate handle tells which) one runs the
+    // bound jobs (a term at most 15% of the corpus) and one the all-hot
+    // bail (every term above it)
+    for ((q, allHot) <- Seq("w7 w300 w2000" -> false, "w1 w3 the0" -> true)) {
+      assert(h.copy(localPostings = 0L).termInfos(q).forall(_.df > hot) == allHot, q)
+      h.topkWand(q, 10).collect() // warm-up
+      // a fresh copy starts with an empty term-stats cache
+      val fresh = h.copy()
+      val jobs = jobsOf(fresh.topkWand(q, 10).collect())
+      info(s"forced WAND '$q': ${jobs.size} jobs — ${jobs.mkString("; ")}")
+      assert(jobs.size == 1, s"forced WAND '$q' ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    }
   }
 }
