@@ -7,7 +7,7 @@ import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash groupBy), MinHash + LSH banding (shingle → minhash → band →
-  * bucket join), SimHash, and token-shingle Jaccard — each with an exact
+  * bucket grouping), SimHash, and token-shingle Jaccard — each with an exact
   * DuckDB oracle twin.
   *
   * Hashing is pluggable ([[HashMode]]): the default [[Md5Portable]] renders
@@ -29,12 +29,14 @@ import scala.reflect.runtime.universe.TypeTag
   * DuckDB oracles mirror are the parity references in test scope, except
   * [[minhashColumnar]], which the frozen bench also times.
   *
-  * Scale notes: everything else is groupBy/join on (doc_id | shingle |
-  * band_hash) keys — shuffle-partitioned by key, no driver materialization;
-  * LSH banding is exactly the "bucket join beats all-pairs" trick that makes
-  * near-dup detection feasible at 10^12 docs (the all-pairs q_jaccard path
-  * is restricted to pairs already sharing a shingle, i.e. an equi-join, not
-  * a cross join).
+  * Scale notes: everything else is a groupBy on (doc_id | shingle |
+  * band | minhash) keys — shuffle-partitioned by key, no driver
+  * materialization. The near-dup pairs come from one grouping per bucket
+  * ([[Buckets]]): LSH banding is the "bucket beats all-pairs" trick that
+  * makes near-dup detection feasible at 10^12 docs, and a bucket's group
+  * emits and verifies its own pairs, so no self-join of the band, shingle
+  * or signature table runs (the q_jaccard path is restricted to pairs
+  * already sharing a shingle, never a cross join).
   */
 object Dedup {
 
@@ -91,9 +93,16 @@ object Dedup {
       }
   }
 
-  private final class Md5Kernel extends Kernel {
+  /** The md5 [[Kernel]]; also the digest behind the md5-only passes
+    * ([[simhash]], [[fingerprint]], `Similarity.planesLocal`). */
+  private[ops] final class Md5Kernel extends Kernel {
     private val md = java.security.MessageDigest.getInstance("MD5")
     private val dig = new Array[Byte](16)
+
+    /** The 16-byte md5 of `bytes`, written into `out`. */
+    def digest16(bytes: Array[Byte], out: Array[Byte]): Unit = {
+      md.reset(); md.update(bytes); md.digest(out, 0, 16)
+    }
 
     def h64(prefix: Array[Byte], tok: Array[Byte]): Long = {
       md.reset(); md.update(prefix); md.update(tok); md.digest(dig, 0, 16)
@@ -103,7 +112,7 @@ object Dedup {
     }
 
     def hexDigest(bytes: Array[Byte]): String = {
-      md.reset(); md.update(bytes); md.digest(dig, 0, 16)
+      digest16(bytes, dig)
       hex32(dig)
     }
   }
@@ -347,30 +356,26 @@ object Dedup {
         .map { case (bh, b) => (id, b.toLong, bh) }
     }
 
-  /** Candidate near-dup pairs: docs sharing any band bucket.
+  /** Candidate near-dup pairs (doc_a < doc_b): docs sharing any band
+    * bucket. One grouping per (band, band_hash) bucket emits the bucket's
+    * pairs ([[Buckets.pairs]]), and a `distinct` merges a pair met in
+    * several bands — no self-join of the band table.
     *
     * Bucket-size cap (the 100 TB guard): a bucket of m members emits m²/2
     * pairs, so one degenerate mega-bucket (e.g. the empty-ish-doc band) makes
     * the output quadratic in corpus size. Buckets with more than `maxBucket`
-    * members are dropped whole before the self-join — at that size the bucket
-    * carries no near-dup signal anyway (it's a collision cluster), and the
-    * cap makes the operator's output linear in the input. Deterministic and
-    * SQL-expressible (QUALIFY count(*) OVER bucket <= cap), so the oracle
-    * applies the identical cap. */
+    * member rows are dropped whole, by the group's own size — at that size
+    * the bucket carries no near-dup signal anyway (it's a collision
+    * cluster), and the cap makes the operator's output linear in the input.
+    * Deterministic and SQL-expressible (QUALIFY count(*) OVER bucket <=
+    * cap), so the oracle applies the identical cap. */
   def lshPairs(docs: DataFrame, nSeeds: Int = 8, rowsPerBand: Int = 2,
                maxBucket: Int = 50, hash: HashMode = Md5Portable): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("band_hash"))
-    val bands = lshBands(docs, nSeeds, rowsPerBand, hash)
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= maxBucket)
-    val a = bands.select(col("band").as("band_a"), col("band_hash").as("bh_a"),
-      col("doc_id").as("doc_a"))
-    val b = bands.select(col("band").as("band_b"), col("band_hash").as("bh_b"),
-      col("doc_id").as("doc_b"))
-    a.join(b, col("band_a") === col("band_b") && col("bh_a") === col("bh_b") &&
-        col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    import docs.sparkSession.implicits._
+    Buckets.pairs[Long, (Long, Long)](lshBands(docs, nSeeds, rowsPerBand, hash),
+        Seq(col("band"), col("band_hash")), col("doc_id"), maxBucket)(d => d)(
+        (a, b) => Some((a, b)))
+      .toDF("doc_a", "doc_b").distinct()
   }
 
   /** 32-bit SimHash from MD5 hex digits: for hex position p (1..8) and bit
@@ -379,14 +384,13 @@ object Dedup {
     * end-to-end; the relational form the oracle mirrors costs two shuffles. */
   def simhash(docs: DataFrame): DataFrame =
     docPass(docs, "doc_id", "simhash")(
-        java.security.MessageDigest.getInstance("MD5")) { (md, id, text) =>
+        (new Md5Kernel, new Array[Byte](16))) { case ((md, dig), id, text) =>
       val tf = termFreqs(tokens(text))
       if (tf.isEmpty) Iterator.empty
       else {
         val votes = new Array[Long](32)
         tf.forEach { (t, n) =>
-          md.reset()
-          val dig = md.digest(t.getBytes(UTF8))
+          md.digest16(t.getBytes(UTF8), dig)
           // hex digit p (0-based 0..7) = nibble of byte p/2, high first —
           // exactly substr(md5hex, p+1, 1) of the relational form
           var p = 0
@@ -418,15 +422,18 @@ object Dedup {
       windows(tokens(text), n).filter(seen.add).map(s => (id, s))
     }
 
-  /** n-gram Jaccard near-dup pairs (≥ threshold), via shingle equi-join —
-    * never an all-pairs product.
+  /** n-gram Jaccard near-dup pairs (≥ threshold) — never an all-pairs
+    * product. One grouping per shingle emits the pairs of docs sharing it
+    * ([[Buckets.pairs]]); a pair's intersection is the number of shingle
+    * groups that emit it, and each doc's set size is its number of rows in
+    * the same capped groups.
     *
     * Hot-shingle cap (the 100 TB guard, same trade as [[lshPairs]]'s bucket
-    * cap): a shingle appearing in m docs emits m²/2 join rows, so ONE
+    * cap): a shingle appearing in m docs emits m²/2 pairs, so ONE
     * boilerplate trigram ("click here to", a license header line) shared by
     * the whole corpus makes the output quadratic in corpus size. Shingles
     * with df > `maxDf` are dropped from the shingle universe BEFORE both
-    * the join and the per-doc set sizes: Jaccard is then estimated over the
+    * the pairs and the per-doc set sizes: Jaccard is then estimated over the
     * non-boilerplate shingles — the standard dedup trade (pairs that only
     * share boilerplate stop matching; genuinely similar pairs still match
     * on their distinctive shingles). Deterministic and QUALIFY-expressible,
@@ -435,15 +442,17 @@ object Dedup {
     * engines. */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.2,
                    maxDf: Int = 50): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
+    import docs.sparkSession.implicits._
     val sh = shingles(docs)
-      .withColumn("df", count(lit(1)).over(w))
-      .filter(col("df") <= maxDf).drop("df")
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
-      .filter(col("doc_a") < col("doc_b"))
+    val key = Seq(col("shingle"))
+    val inter = Buckets.pairs[Long, (Long, Long)](sh, key, col("doc_id"), maxDf)(
+        d => d)((a, b) => Some((a, b)))
+      .toDF("doc_a", "doc_b")
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+    // the same capped groups (their exchange is reused), one row per member
+    val sz = Buckets.capped(sh, key, col("doc_id"), maxDf)
+      .select(explode(col("members")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     inter
       .join(sz.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(sz.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
@@ -458,15 +467,14 @@ object Dedup {
   def fingerprint(docs: DataFrame): DataFrame = {
     val n = 3
     docPass(docs, "doc_id", "fingerprint")(
-        java.security.MessageDigest.getInstance("MD5")) { (md, id, text) =>
+        (new Md5Kernel, new Array[Byte](16))) { case ((md, dig), id, text) =>
       val toks = tokens(text)
       if (toks.length < n) Iterator.empty
       else {
-        val dig = new Array[Byte](16)
         val best = new Array[Byte](16)
         var anyBest = false
         windows(toks, n).foreach { s =>
-          md.reset(); md.update(s.getBytes(UTF8)); md.digest(dig, 0, 16)
+          md.digest16(s.getBytes(UTF8), dig)
           // unsigned lexicographic digest compare ≡ hex-string min
           var cmp = 0
           var j = 0
@@ -511,33 +519,49 @@ object Dedup {
     * reference's l=1 LSH-forest probe shape, index/index.py:31-33), the
     * estimate is the agreeing-seed fraction — an unbiased estimator of the
     * weighted Jaccard. Bucket-size cap = the same 100 TB quadratic-output
-    * guard as [[lshPairs]]; the agreement join costs nSeeds rows per
-    * candidate pair, linear in the candidate set. The threshold predicate
-    * compares agree/nSeeds, a ratio of small integers — bit-deterministic
-    * across engines. */
+    * guard as [[lshPairs]].
+    *
+    * Each doc's signature is carried into its (seed, minhash) groups, so
+    * a group counts its pairs' agreeing seeds itself ([[Buckets.pairs]]) and
+    * a `distinct` merges a pair met in several buckets — no join back to
+    * the signatures. The signatures are first gathered per doc_id, so a
+    * doc_id held by several rows carries all of their signatures and
+    * `agree` counts every (row of a, row of b, seed) match, as the join
+    * back did. The threshold predicate compares agree/nSeeds, a ratio of
+    * small integers — bit-deterministic across engines. */
   def weightedJaccardPairs(docs: DataFrame, threshold: Double = 0.25,
                            nSeeds: Int = 8, maxBucket: Int = 50,
                            hash: HashMode = Md5Portable): DataFrame = {
-    val sig = weightedMinhash(docs, nSeeds, hash)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("seed"), col("minhash"))
-    val capped = sig.withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= maxBucket)
-    val cand = capped.select(col("seed"), col("minhash"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("seed"), col("minhash"), col("doc_id").as("doc_b")),
-        Seq("seed", "minhash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("seed"),
-        col("minhash").as("ma")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("seed"),
-        col("minhash").as("mb")), Seq("doc_b", "seed"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("agree"))
+    import docs.sparkSession.implicits._
+    val sigs = docPass(docs, "doc_id", "mins")(kernel(hash)) { (k, id, text) =>
+      val mins = weightedMinima(termFreqs(tokens(text)), nSeeds, k)
+      if (mins == null) Iterator.empty else Iterator.single((id, mins))
+    }.groupBy(col("doc_id")).agg(collect_list(col("mins")).as("sigs"))
+    // one row per (doc row, seed): the bucket key (the unsigned minimum
+    // stands for its hex render) and the doc's signatures
+    val rows = sigs.as[(Long, Array[Array[Long]])].flatMap { case (id, ss) =>
+      ss.iterator.flatMap(s => s.indices.iterator.map(sd => (sd.toLong, s(sd), id, ss)))
+    }.toDF("seed", "minhash", "doc_id", "sigs")
+    Buckets.pairs[(Long, Array[Array[Long]]), (Long, Long, Long)](rows,
+        Seq(col("seed"), col("minhash")),
+        struct(col("doc_id").as("_1"), col("sigs").as("_2")), maxBucket)(_._1) {
+        (a, b) => Some((a._1, b._1, agreeing(a._2, b._2)))
+      }
+      .toDF("doc_a", "doc_b", "agree").distinct()
       .withColumn("wjac_est", col("agree") * lit(1.0) / nSeeds)
       .filter(col("wjac_est") >= threshold)
       .select(col("doc_a"), col("doc_b"),
         round(col("wjac_est"), 6).as("wjaccard"))
+  }
+
+  /** Σ over signature pairs (x ∈ sa, y ∈ sb) of the seeds where x and y
+    * agree. */
+  private def agreeing(sa: Array[Array[Long]], sb: Array[Array[Long]]): Long = {
+    var n = 0L
+    for (x <- sa; y <- sb) {
+      var sd = 0
+      while (sd < x.length) { if (x(sd) == y(sd)) n += 1; sd += 1 }
+    }
+    n
   }
 }

@@ -8,15 +8,21 @@ import org.apache.spark.sql.functions._
   *
   * - [[cosineTopK]]: brute-force cosine top-k — the exactness baseline.
   *   The query side is tiny and broadcast; the candidate side streams, dot
-  *   products run inside codegen (`zip_with` + `aggregate`), ranking is
-  *   per-query partial top-k. This is the plan shape that survives scale-up:
-  *   broadcast Q × stream N, no N×N product.
+  *   products are Column expressions (`zip_with` + `aggregate`, which
+  *   Spark evaluates without codegen), ranking is per-query partial top-k.
+  *   This is the plan shape that survives scale-up: broadcast Q × stream
+  *   N, no N×N product.
   * - [[annBuckets]]: random-hyperplane LSH bucketing — the scale path. Each
   *   vector gets a small integer bucket; ANN probes only its own bucket
   *   (+ neighbors if recall demands). Hyperplanes are derived from MD5 hex
   *   digits so the oracle can reproduce them bit-exactly.
   * - [[annTopK]]: bucketed ANN = bucket equi-join + within-bucket cosine
   *   top-k.
+  * - [[embeddingNearDups]]: one grouping per LSH bucket scores the
+  *   bucket's own pairs on the JVM, bit-identical to the Column cosine.
+  *
+  * A zero-norm vector has no cosine: it forms no pair and ranks for no
+  * query (the Column forms divide with `try_divide`).
   *
   * Determinism: dots are rounded to 6 dp before any ordering or sign
   * decision, so float summation order (which differs between engines and
@@ -26,10 +32,39 @@ object Similarity {
 
   private def asDouble(emb: Column): Column = transform(emb, x => x.cast("double"))
 
-  private def dot(a: Column, b: Column): Column =
+  private[graft] def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  private def norm(a: Column): Column = sqrt(dot(a, a))
+  private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** `round(dot(a, b) / (norm(a) · norm(b)), 6)`, NULL where the cosine
+    * does not exist: a zero-norm vector (the divisor is 0) or vectors of
+    * unequal length (`zip_with` pads with NULL). */
+  private def cos6(a: Column, b: Column): Column =
+    round(try_divide(dot(a, b), norm(a) * norm(b)), 6)
+
+  /** [[cos6]] on the JVM, bit for bit: the same left-to-right sums from
+    * 0.0, the same division, and Spark `round`'s arithmetic (NaN and ±∞
+    * pass through, else `BigDecimal.valueOf(..).setScale(6, HALF_UP)`).
+    * None where [[cos6]] is NULL. */
+  private[graft] def cosLocal(a: Array[Double], b: Array[Double]): Option[Double] =
+    if (a.length != b.length) None
+    else {
+      def dotL(x: Array[Double], y: Array[Double]): Double = {
+        var s = 0.0
+        var i = 0
+        while (i < x.length) { s += x(i) * y(i); i += 1 }
+        s
+      }
+      val d = math.sqrt(dotL(a, a)) * math.sqrt(dotL(b, b))
+      if (d == 0.0) None
+      else {
+        val c = dotL(a, b) / d
+        Some(if (c.isNaN || c.isInfinite) c
+          else java.math.BigDecimal.valueOf(c)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+      }
+    }
 
   /** Exact top-k cosine neighbors for each query vector (vec_id < nQueries),
     * excluding self. Output: (query_id, rank, vec_id, cos). */
@@ -38,8 +73,8 @@ object Similarity {
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(dot(col("qv"), col("v")) /
-        (norm(col("qv")) * norm(col("v"))), 6))
+      .withColumn("cos", cos6(col("qv"), col("v")))
+      .filter(col("cos").isNotNull) // no cosine: ranks for no query
     scored
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
@@ -76,10 +111,10 @@ object Similarity {
   /** Driver-side hyperplane weights — w(j)(i−1) = hexdigit(md5("j:i")) − 7.5,
     * the exact values [[planes]] computes relationally. */
   private[graft] def planesLocal(nPlanes: Int, dims: Int): Array[Array[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = new Dedup.Md5Kernel
+    val d = new Array[Byte](16)
     Array.tabulate(nPlanes, dims) { (j, i0) =>
-      md.reset()
-      val d = md.digest(s"$j:${i0 + 1}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.digest16(s"$j:${i0 + 1}".getBytes(java.nio.charset.StandardCharsets.UTF_8), d)
       ((d(0) >> 4) & 0xF) - 7.5
     }
   }
@@ -126,7 +161,7 @@ object Similarity {
     * is a per-row function, so attaching it never needs the vec_id join
     * (one exchange per consumer gone). Same empty-vector absence and
     * bit-identical buckets as the unfused pair. */
-  private def vectorsWithBuckets(emb: DataFrame, nPlanes: Int,
+  private[graft] def vectorsWithBuckets(emb: DataFrame, nPlanes: Int,
                                  dims: Int): DataFrame = {
     import emb.sparkSession.implicits._
     val w = planesLocal(nPlanes, dims)
@@ -168,8 +203,8 @@ object Similarity {
         col("bucket").as("qbucket"))
     val scored = e.join(broadcast(q),
       col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(dot(col("qv"), col("v")) /
-        (norm(col("qv")) * norm(col("v"))), 6))
+      .withColumn("cos", cos6(col("qv"), col("v")))
+      .filter(col("cos").isNotNull) // no cosine: ranks for no query
     scored
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
@@ -179,27 +214,26 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs within LSH buckets (vec analog of
-    * Dedup.lshPairs): pairs in the same bucket with cosine ≥ threshold.
-    * Buckets larger than `maxBucket` are dropped whole before the self-join
-    * (same quadratic-output guard as Dedup.lshPairs, same oracle-expressible
-    * QUALIFY cap). */
+    * Dedup.lshPairs): pairs (vec_a < vec_b) in the same bucket with cosine
+    * ≥ threshold. One grouping per bucket collects (vec_id, v) and scores
+    * its own pairs on the JVM ([[Buckets.pairs]], [[cosLocal]]) — no
+    * self-join, and no interpreted higher-order-function arithmetic. A
+    * zero-norm vector or a pair of unequal lengths has no cosine and forms
+    * no pair. Buckets with more than `maxBucket` member rows are dropped
+    * whole (same quadratic-output guard as Dedup.lshPairs, same
+    * oracle-expressible QUALIFY cap). */
   def embeddingNearDups(emb: DataFrame, threshold: Double = 0.95,
                         nPlanes: Int = 8, dims: Int = 64,
                         maxBucket: Int = 50): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bucket"))
-    // fused vector+bucket pass (bucket is a per-row function) — the cap
-    // window sees the identical per-bucket row counts, and the vec_id
-    // join that attached vectors to buckets is gone
-    val e = vectorsWithBuckets(emb, nPlanes, dims)
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= maxBucket).drop("bn")
-    val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("bucket"))
-    val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-      col("bucket").as("bucket_b"))
-    a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(dot(col("va"), col("vb")) /
-        (norm(col("va")) * norm(col("vb"))), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
+    import emb.sparkSession.implicits._
+    Buckets.pairs[(Long, Array[Double]), (Long, Long, Double)](
+        vectorsWithBuckets(emb, nPlanes, dims), Seq(col("bucket")),
+        struct(col("vec_id").as("_1"), col("v").as("_2")), maxBucket)(_._1) {
+        (a, b) =>
+          // Spark orders NaN above every number, so NaN >= threshold holds
+          cosLocal(a._2, b._2).filter(c => c.isNaN || c >= threshold)
+            .map(c => (a._1, b._1, c))
+      }
+      .toDF("vec_a", "vec_b", "cos")
   }
 }

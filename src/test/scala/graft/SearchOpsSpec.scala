@@ -331,6 +331,111 @@ class SearchOpsSpec extends SparkSpec {
       s"uncapped should be all-pairs, got $uncapped")
   }
 
+  test("bucket groupings: lshPairs, jaccardPairs and weightedJaccardPairs " +
+    "equal their self-join forms on generated corpora and adversarial buckets") {
+    // doubles compared by their bits, rows as sorted multisets
+    def rows2(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().sorted.toSeq
+    def rows3(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double)].collect()
+        .map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3)))
+        .sorted.toSeq
+    def parity(df: org.apache.spark.sql.DataFrame, ctx: String,
+               maxBucket: Int): Unit = {
+      val lsh = rows2(Dedup.lshPairs(df, maxBucket = maxBucket))
+      assert(lsh == rows2(ParityRefs.lshPairsSelfJoin(df, maxBucket = maxBucket)),
+        s"[$ctx] lshPairs diverged")
+      assert(lsh.forall(p => p._1 < p._2) && lsh.distinct == lsh, s"[$ctx] lsh rows")
+      for (t <- Seq(0.05, 0.2)) {
+        val jac = rows3(Dedup.jaccardPairs(df, t, maxDf = maxBucket))
+        assert(jac == rows3(ParityRefs.jaccardPairsSelfJoin(df, t, maxDf = maxBucket)),
+          s"[$ctx] jaccardPairs($t) diverged")
+        for (h <- Seq[Dedup.HashMode](Dedup.Md5Portable, Dedup.Xx64)) {
+          val wj = rows3(Dedup.weightedJaccardPairs(df, t, maxBucket = maxBucket, hash = h))
+          assert(wj == rows3(ParityRefs.weightedJaccardPairsSelfJoin(df, t,
+            maxBucket = maxBucket, hash = h)), s"[$ctx] weightedJaccardPairs($t, $h) diverged")
+        }
+      }
+    }
+
+    // seeded generated corpora over a small vocabulary (so bands, shingles
+    // and minima collide), with empty docs and duplicate doc_id rows
+    for (seed <- Seq(7L, 8L, 9L)) {
+      val rnd = new scala.util.Random(seed)
+      val vocab = Array("a", "b", "c", "d", "e", "f", "g", "héllo", "日本")
+      val rows = (0 until 160).map { i =>
+        val text = if (i % 23 == 0) ""
+          else Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+        val id = if (i % 17 == 5) (i - 1 - rnd.nextInt(4)).toLong else i.toLong
+        (id, text)
+      }
+      for (cap <- Seq(50, 6)) parity(rows.toDF("doc_id", "text"), s"seed $seed cap $cap", cap)
+    }
+
+    // adversarial buckets, cap 4: four identical docs fill every bucket
+    // they share to exactly the cap (kept; each pair collides in all four
+    // bands and is emitted once); five identical docs overflow it
+    // (dropped); doc_id 300 held by two identical rows pairs with 301 but
+    // never with itself, and its rows count twice against the cap
+    val adv = (100L to 103L).map(_ -> "p q r s t u") ++
+      (200L to 204L).map(_ -> "k l m n o j") ++
+      Seq(300L -> "v w x y z", 300L -> "v w x y z", 301L -> "v w x y z") ++
+      Seq(400L -> "v w x y z", 401L -> "v w x y z")
+    val advDf = adv.toDF("doc_id", "text")
+    parity(advDf, "adversarial", 4)
+    val kept = (for (a <- 100L to 103L; b <- a + 1 to 103L) yield (a, b)).toSet
+    val lsh = rows2(Dedup.lshPairs(advDf, maxBucket = 4))
+    assert(lsh.toSet == kept, s"cap 4: got $lsh")
+    // without the two extra copies the v-w-x-y-z buckets hold 3 rows:
+    // (300, 301) once, no self-pair
+    val small = adv.filterNot(_._1 >= 400L).toDF("doc_id", "text")
+    parity(small, "duplicate rows", 4)
+    assert(rows2(Dedup.lshPairs(small, maxBucket = 4)).toSet == kept + ((300L, 301L)))
+    val wj = Dedup.weightedJaccardPairs(small, maxBucket = 4)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(wj.exists(r => r._1 == 300L && r._2 == 301L), s"weighted pairs: $wj")
+    assert(!wj.exists(r => r._1 == r._2))
+  }
+
+  test("near-dup pair plans: one scan of the input, no join") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for ((name, df) <- Seq(
+        "lshPairs" -> Dedup.lshPairs(docs),
+        "weightedJaccardPairs" -> Dedup.weightedJaccardPairs(docs),
+        "embeddingNearDups" -> graft.ops.Similarity.embeddingNearDups(emb, 0.2))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan); a
+        case p => p
+      }
+      val nodes = collectAllNodes(plan)
+      val joins = nodes.collect {
+        case j @ (_: SortMergeJoinExec | _: ShuffledHashJoinExec |
+                  _: BroadcastHashJoinExec) => j.nodeName
+      }
+      assert(joins.isEmpty, s"$name: joins in the final plan: $joins")
+      val scans = nodes.count(_.isInstanceOf[FileSourceScanExec])
+      assert(scans == 1, s"$name: $scans scans of its input\n$plan")
+    }
+  }
+
+  /** Every node of a physical plan, through AQE's final plan and its query
+    * stages (a reused exchange counts once). */
+  private def collectAllNodes(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: kids.flatMap(collectAllNodes)
+  }
+
   test("forest top-k: deeper prefix matches rank first; self-retrieval " +
     "of exact text hits at full depth") {
     val (docId, text) = docs.select($"doc_id", $"text")

@@ -3,14 +3,16 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, Similarity, TextOps}
 import graft.ops.Dedup.{HashMode, Md5Portable, Xx64}
 import graft.query.Bm25
 
 /** Parity references: the relational (Column) forms of the signature ops,
-  * whose shapes the DuckDB oracles mirror, and the row-per-posting salted
-  * sort the SPIMI run build replaced. Production runs the typed passes;
-  * the specs assert those are byte-identical to these forms. The object
+  * whose shapes the DuckDB oracles mirror, the window-cap + self-join forms
+  * of the near-dup pair operators, and the row-per-posting salted sort the
+  * SPIMI run build replaced. Production runs the typed passes and the
+  * bucket groupings; the specs assert those are byte-identical to these
+  * forms. The object
   * lives in `graft.index` so the sort can reach the build's package-private
   * helpers. (`Dedup.minhashColumnar` and `Similarity.annBucketsColumnar`
   * stay in main code.) */
@@ -111,6 +113,87 @@ object ParityRefs {
       .agg(md5s(array_join(
         transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
           x => x.getField("minhash")), ",")).as("ph"))
+
+  // ---- near-dup pairs: window cap + self-join ---------------------------
+
+  private def capByWindow(rows: DataFrame, maxBucket: Int, key: String*): DataFrame =
+    rows.withColumn("bn", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key.map(col): _*)))
+      .filter(col("bn") <= maxBucket).drop("bn")
+
+  /** Self-join [[Dedup.lshPairs]]. */
+  def lshPairsSelfJoin(docs: DataFrame, nSeeds: Int = 8, rowsPerBand: Int = 2,
+                       maxBucket: Int = 50, hash: HashMode = Md5Portable): DataFrame = {
+    val bands = capByWindow(Dedup.lshBands(docs, nSeeds, rowsPerBand, hash),
+      maxBucket, "band", "band_hash")
+    val a = bands.select(col("band").as("band_a"), col("band_hash").as("bh_a"),
+      col("doc_id").as("doc_a"))
+    val b = bands.select(col("band").as("band_b"), col("band_hash").as("bh_b"),
+      col("doc_id").as("doc_b"))
+    a.join(b, col("band_a") === col("band_b") && col("bh_a") === col("bh_b") &&
+        col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+  }
+
+  /** Self-join [[Dedup.jaccardPairs]]. */
+  def jaccardPairsSelfJoin(docs: DataFrame, threshold: Double = 0.2,
+                           maxDf: Int = 50): DataFrame = {
+    val sh = capByWindow(Dedup.shingles(docs), maxDf, "shingle")
+    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = sh.select(col("doc_id").as("doc_a"), col("shingle"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+    inter
+      .join(sz.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(sz.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .withColumn("jac_raw", col("i") * lit(1.0) / (col("na") + col("nb") - col("i")))
+      .filter(col("jac_raw") >= threshold)
+      .select(col("doc_a"), col("doc_b"), round(col("jac_raw"), 6).as("jaccard"))
+  }
+
+  /** Self-join [[Dedup.weightedJaccardPairs]]: candidates from the capped
+    * bucket self-join, then `agree` from two joins back to the signatures. */
+  def weightedJaccardPairsSelfJoin(docs: DataFrame, threshold: Double = 0.25,
+                                   nSeeds: Int = 8, maxBucket: Int = 50,
+                                   hash: HashMode = Md5Portable): DataFrame = {
+    val sig = Dedup.weightedMinhash(docs, nSeeds, hash)
+    val capped = capByWindow(sig, maxBucket, "seed", "minhash")
+    val cand = capped.select(col("seed"), col("minhash"), col("doc_id").as("doc_a"))
+      .join(capped.select(col("seed"), col("minhash"), col("doc_id").as("doc_b")),
+        Seq("seed", "minhash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    cand
+      .join(sig.select(col("doc_id").as("doc_a"), col("seed"),
+        col("minhash").as("ma")), Seq("doc_a"))
+      .join(sig.select(col("doc_id").as("doc_b"), col("seed"),
+        col("minhash").as("mb")), Seq("doc_b", "seed"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("agree"))
+      .withColumn("wjac_est", col("agree") * lit(1.0) / nSeeds)
+      .filter(col("wjac_est") >= threshold)
+      .select(col("doc_a"), col("doc_b"),
+        round(col("wjac_est"), 6).as("wjaccard"))
+  }
+
+  /** Self-join [[Similarity.embeddingNearDups]], with the Column cosine
+    * (plain `/`: it is given no zero-norm vector). */
+  def embeddingNearDupsSelfJoin(emb: DataFrame, threshold: Double = 0.95,
+                                nPlanes: Int = 8, dims: Int = 64,
+                                maxBucket: Int = 50): DataFrame = {
+    import Similarity.{dot, norm}
+    val e = capByWindow(Similarity.vectorsWithBuckets(emb, nPlanes, dims),
+      maxBucket, "bucket")
+    val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("bucket"))
+    val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
+      col("bucket").as("bucket_b"))
+    a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
+      .withColumn("cos", round(dot(col("va"), col("vb")) /
+        (norm(col("va")) * norm(col("vb"))), 6))
+      .filter(col("cos") >= threshold)
+      .select(col("vec_a"), col("vec_b"), col("cos"))
+  }
 
   // ---- the row-per-posting salted sort ---------------------------------
 
