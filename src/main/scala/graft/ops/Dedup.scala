@@ -449,7 +449,7 @@ object Dedup {
         d => d)((a, b) => Some((a, b)))
       .toDF("doc_a", "doc_b")
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    // the same capped groups (their exchange is reused), one row per member
+    // the same capped groups, one row per member
     val sz = Buckets.capped(sh, key, col("doc_id"), maxDf)
       .select(explode(col("members")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
