@@ -364,17 +364,19 @@ object Dedup {
     * Bucket-size cap (the 100 TB guard): a bucket of m members emits m²/2
     * pairs, so one degenerate mega-bucket (e.g. the empty-ish-doc band) makes
     * the output quadratic in corpus size. Buckets with more than `maxBucket`
-    * member rows are dropped whole, by the group's own size — at that size
-    * the bucket carries no near-dup signal anyway (it's a collision
+    * member rows are dropped whole, by the group's own row count — at that
+    * size the bucket carries no near-dup signal anyway (it's a collision
     * cluster), and the cap makes the operator's output linear in the input.
+    * The grouping stops holding a bucket's members once its count passes
+    * the cap, so a mega-bucket costs a counter, not a list of its members.
     * Deterministic and SQL-expressible (QUALIFY count(*) OVER bucket <=
     * cap), so the oracle applies the identical cap. */
   def lshPairs(docs: DataFrame, nSeeds: Int = 8, rowsPerBand: Int = 2,
                maxBucket: Int = 50, hash: HashMode = Md5Portable): DataFrame = {
     import docs.sparkSession.implicits._
-    Buckets.pairs[Long, (Long, Long)](lshBands(docs, nSeeds, rowsPerBand, hash),
-        Seq(col("band"), col("band_hash")), col("doc_id"), maxBucket)(d => d)(
-        (a, b) => Some((a, b)))
+    val groups = Buckets.capped[Long](lshBands(docs, nSeeds, rowsPerBand, hash),
+      Seq(col("band"), col("band_hash")), Seq(col("doc_id")), maxBucket)
+    Buckets.pairs(groups)(d => d)((a, b) => Some((a, b)))
       .toDF("doc_a", "doc_b").distinct()
   }
 
@@ -443,15 +445,13 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.2,
                    maxDf: Int = 50): DataFrame = {
     import docs.sparkSession.implicits._
-    val sh = shingles(docs)
-    val key = Seq(col("shingle"))
-    val inter = Buckets.pairs[Long, (Long, Long)](sh, key, col("doc_id"), maxDf)(
-        d => d)((a, b) => Some((a, b)))
+    val groups = Buckets.capped[Long](shingles(docs), Seq(col("shingle")),
+      Seq(col("doc_id")), maxDf)
+    val inter = Buckets.pairs(groups)(d => d)((a, b) => Some((a, b)))
       .toDF("doc_a", "doc_b")
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    // the same capped groups, one row per member
-    val sz = Buckets.capped(sh, key, col("doc_id"), maxDf)
-      .select(explode(col("members")).as("doc_id"))
+    // the same capped groups (one grouping, read twice), one row per member
+    val sz = groups.select(explode(col("members")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     inter
       .join(sz.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
@@ -521,32 +521,26 @@ object Dedup {
     * weighted Jaccard. Bucket-size cap = the same 100 TB quadratic-output
     * guard as [[lshPairs]].
     *
-    * Each doc's signature is carried into its (seed, minhash) groups, so
-    * a group counts its pairs' agreeing seeds itself ([[Buckets.pairs]]) and
-    * a `distinct` merges a pair met in several buckets — no join back to
-    * the signatures. The signatures are first gathered per doc_id, so a
-    * doc_id held by several rows carries all of their signatures and
-    * `agree` counts every (row of a, row of b, seed) match, as the join
-    * back did. The threshold predicate compares agree/nSeeds, a ratio of
-    * small integers — bit-deterministic across engines. */
+    * Each doc_id's (seed, minhash) entries are gathered once and carried
+    * into the doc's (seed, minhash) groups, so a group counts its pairs'
+    * agreeing seeds itself ([[Buckets.pairs]]) and a `distinct` merges a
+    * pair met in several buckets — no join back to the signatures. A
+    * doc_id held by several rows carries the entries of all of them, and
+    * `agree` counts every (entry of a, entry of b) match, as a join back
+    * to the signature rows would. The threshold predicate compares
+    * agree/nSeeds, a ratio of small integers — bit-deterministic across
+    * engines. */
   def weightedJaccardPairs(docs: DataFrame, threshold: Double = 0.25,
                            nSeeds: Int = 8, maxBucket: Int = 50,
                            hash: HashMode = Md5Portable): DataFrame = {
     import docs.sparkSession.implicits._
-    val sigs = docPass(docs, "doc_id", "mins")(kernel(hash)) { (k, id, text) =>
-      val mins = weightedMinima(termFreqs(tokens(text)), nSeeds, k)
-      if (mins == null) Iterator.empty else Iterator.single((id, mins))
-    }.groupBy(col("doc_id")).agg(collect_list(col("mins")).as("sigs"))
-    // one row per (doc row, seed): the bucket key (the unsigned minimum
-    // stands for its hex render) and the doc's signatures
-    val rows = sigs.as[(Long, Array[Array[Long]])].flatMap { case (id, ss) =>
-      ss.iterator.flatMap(s => s.indices.iterator.map(sd => (sd.toLong, s(sd), id, ss)))
-    }.toDF("seed", "minhash", "doc_id", "sigs")
-    Buckets.pairs[(Long, Array[Array[Long]]), (Long, Long, Long)](rows,
-        Seq(col("seed"), col("minhash")),
-        struct(col("doc_id").as("_1"), col("sigs").as("_2")), maxBucket)(_._1) {
-        (a, b) => Some((a._1, b._1, agreeing(a._2, b._2)))
-      }
+    // (seed, minhash) entries as the (_1, _2) fields of a tuple
+    val rows = weightedMinhash(docs, nSeeds, hash).groupBy(col("doc_id"))
+      .agg(collect_list(struct(col("seed").as("_1"), col("minhash").as("_2"))).as("sig"))
+      .select(col("doc_id"), col("sig"), explode(col("sig")).as("e"))
+    val groups = Buckets.capped[(Long, Array[(Long, String)])](rows,
+      Seq(col("e._1"), col("e._2")), Seq(col("doc_id"), col("sig")), maxBucket)
+    Buckets.pairs(groups)(_._1)((a, b) => Some((a._1, b._1, agreeing(a._2, b._2))))
       .toDF("doc_a", "doc_b", "agree").distinct()
       .withColumn("wjac_est", col("agree") * lit(1.0) / nSeeds)
       .filter(col("wjac_est") >= threshold)
@@ -554,14 +548,11 @@ object Dedup {
         round(col("wjac_est"), 6).as("wjaccard"))
   }
 
-  /** Σ over signature pairs (x ∈ sa, y ∈ sb) of the seeds where x and y
-    * agree. */
-  private def agreeing(sa: Array[Array[Long]], sb: Array[Array[Long]]): Long = {
+  /** The number of equal (seed, minhash) entries over every pair of one
+    * entry of `sa` and one of `sb`. */
+  private def agreeing(sa: Array[(Long, String)], sb: Array[(Long, String)]): Long = {
     var n = 0L
-    for (x <- sa; y <- sb) {
-      var sd = 0
-      while (sd < x.length) { if (x(sd) == y(sd)) n += 1; sd += 1 }
-    }
+    for (x <- sa; y <- sb) if (x._1 == y._1 && x._2 == y._2) n += 1
     n
   }
 }

@@ -226,13 +226,13 @@ object Similarity {
                         nPlanes: Int = 8, dims: Int = 64,
                         maxBucket: Int = 50): DataFrame = {
     import emb.sparkSession.implicits._
-    Buckets.pairs[(Long, Array[Double]), (Long, Long, Double)](
-        vectorsWithBuckets(emb, nPlanes, dims), Seq(col("bucket")),
-        struct(col("vec_id").as("_1"), col("v").as("_2")), maxBucket)(_._1) {
-        (a, b) =>
-          // Spark orders NaN above every number, so NaN >= threshold holds
-          cosLocal(a._2, b._2).filter(c => c.isNaN || c >= threshold)
-            .map(c => (a._1, b._1, c))
+    val groups = Buckets.capped[(Long, Array[Double])](
+      vectorsWithBuckets(emb, nPlanes, dims), Seq(col("bucket")),
+      Seq(col("vec_id"), col("v")), maxBucket)
+    Buckets.pairs(groups)(_._1) { (a, b) =>
+        // Spark orders NaN above every number, so NaN >= threshold holds
+        cosLocal(a._2, b._2).filter(c => c.isNaN || c >= threshold)
+          .map(c => (a._1, b._1, c))
       }
       .toDF("vec_a", "vec_b", "cos")
   }
