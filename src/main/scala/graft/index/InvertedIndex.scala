@@ -2,7 +2,8 @@ package graft.index
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -160,6 +161,12 @@ object InvertedIndex {
     r
   }
 
+  /** Declared schema of the tokenize scratch: [[IndexBuild.TokDoc]]'s
+    * columns plus the `smp` partition int (`shard` is the other partition
+    * column). Declaring it skips the Parquet schema-inference job. */
+  private val scratchSchema: StructType =
+    Encoders.product[IndexBuild.TokDoc].schema.add("smp", IntegerType)
+
   /** Build (or resume) the index over `pages` into `dir`. Returns the number
     * of shards built in this invocation.
     *
@@ -173,15 +180,15 @@ object InvertedIndex {
     *      sample scaled back up (heavy hitters ≥ saltThreshold have <3%
     *      sampling error; a missed borderline term just sorts unsalted,
     *      which the spilling shuffle absorbs).
-    *   3. per wave of shards (the resume unit): per-doc pre-merged
-    *      (term, tf) rows off the scratch (IndexBuild.docTermFreqs — one
-    *      shuffle row per distinct term per doc, not per token) → ONE
-    *      skew-bounded shuffle (range-salted sort-encode, no merge stage —
-    *      see IndexBuild.rangeSalt) → layout repartition → postings write;
-    *      then docstats / corpus writes (concurrently) and LAST the
-    *      manifest commit marker — so readers filtering by committed shards
-    *      (Bm25.open) never see a torn wave. No termstats table exists:
-    *      term stats are block-metadata scans at query time.
+    *   3. per wave of shards (the resume unit): [[writeShards]], the writer
+    *      segment appends use too — docstats, then the corpus rows and the
+    *      postings (per-doc pre-merged (term, tf) rows → ONE skew-bounded
+    *      run shuffle → layout repartition → sorted partitioned write)
+    *      concurrently, and LAST the manifest commit marker, so readers
+    *      filtering by committed shards (Bm25.open) never see a torn wave.
+    *      The manifest totals are observed on the wave's own writes; nothing
+    *      the wave wrote is read back. No termstats table exists: term
+    *      stats are block-metadata scans at query time.
     */
   def build(spark: SparkSession, pages: Dataset[Page], dir: String,
             params: BuildParams = BuildParams()): Int = {
@@ -201,9 +208,9 @@ object InvertedIndex {
     import scala.concurrent.ExecutionContext.Implicits.global
 
     // params land ASYNC — nothing in this build reads them back (p is
-    // already reconciled above), and readers only open the index after a
-    // manifest marker exists, which is awaited-before below. Removes a
-    // fixed one-row-parquet Spark job from the critical path.
+    // already reconciled above); they are awaited before the first wave
+    // commits, because readers only open the index after a manifest marker
+    // exists. Keeps a fixed one-row-parquet Spark job off the critical path.
     val paramsF = Future(writeParamsIfAbsent(spark, dir, p))
 
     // Never .persist() here: Spark's columnar cache serializer
@@ -232,7 +239,7 @@ object InvertedIndex {
       .withColumn("smp",
         (pmod(xxhash64($"doc_id"), lit(SampleMod)) === 0).cast("int"))
       .write.mode(SaveMode.Overwrite).partitionBy("shard", "smp").parquet(scratch))
-    val tokenized = spark.read.parquet(scratch)
+    val tokenized = spark.read.schema(scratchSchema).parquet(scratch)
 
     // Corpus stats over ALL shards (done + todo) — avgdl must be
     // corpus-global and identical on resume. Todo shards from a column-
@@ -259,168 +266,181 @@ object InvertedIndex {
           $"n_per_shard", lit(0L).as("sum_dl")))
       .as[(Int, String, Long, Long)].collect())
 
-    val todoStats: Array[(Int, Long, Long)] =
-      comb.collect { case (0, sh, n, sd) => (sh.toInt, n, sd) }
     val hotDf: Map[String, Long] =
       comb.collect { case (1, t, n, _) => t -> n }.toMap
-    val nDocs = todoStats.map(_._2).sum + snap.nDocs
-    val avgdl = (todoStats.map(_._3).sum + snap.sumDl).toDouble /
-      math.max(nDocs, 1L)
-
-    // Per-doc pre-merged (term, tf) postings — one shuffle row per DISTINCT
-    // term per doc, not per token instance (IndexBuild.docTermFreqs). There
-    // is deliberately NO corpus-wide (term, doc_id) aggregation: its group
-    // count ≈ corpus size degenerates hash agg into an external sort; the
-    // per-doc HashMap is O(doc) and the run build's equal-doc_id merge
-    // remains as a no-op safety net.
-    def wavePostingsInput(shards: Seq[Int]) =
-      IndexBuild.docTermFreqs(tokenized.filter($"shard".isin(shards: _*)))
+    val nDocs = comb.collect { case (0, _, n, _) => n }.sum + snap.nDocs
+    val avgdl = (comb.collect { case (0, _, _, sd) => sd }.sum + snap.sumDl)
+      .toDouble / math.max(nDocs, 1L)
 
     // Waves. A wave of shards is ONE shuffle + ONE set of writes; its
     // shards commit together (all-or-nothing), so waveShards trades resume
     // granularity against per-job overhead. Default: all todo in one wave.
     val waveSize = if (p.waveShards > 0) p.waveShards else todo.size
-    var built = 0
-    for (wave <- todo.grouped(waveSize)) {
-      val t0 = System.nanoTime()
-      // The wave's ONE shuffle must be partitioned ∝ data, whatever the
-      // session default: sum_dl upper-bounds the wave's posting count (the
-      // per-doc pre-merge only shrinks it), so size the sort at ~1.5M
-      // postings (~60 MB of task state) per partition.
-      // Measured cliff this guards: 16 partitions × ~14M postings at 2.2M
-      // docs spilled the salted sort into a 47× blowup (1074 s vs a
-      // linear-profile 290 s); small builds keep the session value (we
-      // only ever RAISE it). Restored after the wave — a temporary wave-
-      // scoped setting, the moral equivalent of a per-job shuffle hint.
-      // Scale-adaptive BOTH ways (the session value is a cluster-width
-      // default, not a data-derived one): RAISE above it at ~1.5M postings
-      // per partition (the measured anti-spill bound), and DROP below it
-      // when the wave is so small that the default would mean dozens of
-      // near-empty sort tasks of pure fixed overhead (one partition per
-      // ~50k postings, floor 1). The bench's scaling sizes are unaffected:
-      // at 300k docs the lower bound already exceeds the session default.
-      val wavePostings = todoStats.filter(s => wave.contains(s._1)).map(_._3).sum
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      // ~0.75M postings per reduce partition: the old ~1.5M bound sized the
-      // row-per-posting SORT's task state; the run-merge reduce holds only
-      // one (term, salt) group's decoded arrays at a time, so the floor is
-      // scheduling granularity, not spill — finer partitions smooth the
-      // 2-waves-of-cores tail (measured below 16 → 32 partitions at 24M
-      // postings / local[8]).
-      val rawParts = math.max(math.min(prevShuffle.toLong,
-        (wavePostings + 49999) / 50000L), wavePostings / 750000L)
-      // Straggler-tail guard (a data-derived count like 21 runs as waves
-      // of cores with a fractional last wave — e.g. 21 tasks on 8 cores =
-      // 8+8+5, idling 3/8 of the machine for a third of the sort): when
-      // the count exceeds the session's core count, round it UP to a
-      // multiple of it. Blocks are per-(term,salt) groups — partition
-      // count never changes content.
-      val cores = math.max(1, spark.sparkContext.defaultParallelism)
-      val balanced =
-        if (rawParts > cores) ((rawParts + cores - 1) / cores) * cores
-        else rawParts
-      val wavePartitions = math.max(1L, math.min(20000L, balanced)).toInt
-      // AQE partition coalescing must sit out the wave: the run shuffle's
-      // rows are varbyte-COMPRESSED posting runs, so their byte size
-      // underrepresents reduce work (decode + merge + block encode
-      // of ~125 postings per wire byte) by ~2 orders of magnitude, and the
-      // byte-based advisory target coalesces the data-derived partition
-      // count ~8× below the cores (measured: postings-build 13.2 s
-      // coalesced vs 7.6 s at the derived count, 300k docs / local[8]).
-      // The count above IS the data-derived sizing AQE would be trying to
-      // recover. Restored after the wave like the partition count.
-      val prevCoalesce =
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      if (wavePartitions != prevShuffle)
-        spark.conf.set("spark.sql.shuffle.partitions", wavePartitions.toString)
-
-      // docstats + corpus depend only on the SCRATCH (never on the postings
-      // files), so they are submitted CONCURRENTLY with the postings build:
-      // their small narrow-write tasks back-fill executor slots the
-      // postings job's stage tails leave idle (guide §2.6). Crash safety is
-      // unchanged — the manifest marker below is still written strictly
-      // after every write of the wave has landed, so a mid-wave crash
-      // leaves the wave entirely invisible to readers (Iceberg analog:
-      // REPLACE PARTITIONS + last commit). Both are narrow (no shuffle), so
-      // the wave-scoped shuffle conf above does not affect their plans.
-      val docstatsF = Future(phaseTimed("docstats")(
-        tokenized.filter($"shard".isin(wave: _*))
-          .select($"doc_id", $"url", $"dl".as("doclen"), $"shard")
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard")
-          .parquet(s"$dir/docstats")))
-
-      val corpusF = Future(phaseTimed("corpus-write")(
-        todoStats.toSeq.filter(s => wave.contains(s._1))
-          .map { case (sh, n, sd) => CorpusShard(sh, n, sd, avgdl) }.toDS()
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard")
-          .parquet(s"$dir/corpus")))
-
-      try phaseTimed("postings-build")(
-        IndexBuild.saltedRuns(wavePostingsInput(wave), hotDf, p, avgdl)
-          .withColumn("bucket",
-            pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
-          .repartition(col("shard"), col("bucket"))
-          // the partitioned write requires its input ordered by (shard,
-          // bucket) and adds that sort itself unless the existing ordering
-          // starts with it — a (term, …)-only sort would be replaced and
-          // the files left unsorted by term, defeating min-max pruning
-          .sortWithinPartitions($"shard", $"bucket", $"term", $"salt", $"block_id")
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard", "bucket")
-          .parquet(s"$dir/postings"))
-      finally {
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-        if (wavePartitions != prevShuffle)
-          spark.conf.set("spark.sql.shuffle.partitions", prevShuffle.toString)
-      }
-
-      // stats read the files just written (vectorized scan beats re-running
-      // the build pipeline or caching it). There is deliberately NO separate
-      // termstats table: per-term (df, max_tfsat) is derivable at query time
-      // from posting-block METADATA columns (blocks of a term are doc-range
-      // disjoint, so Σ n_docs = df) with the same bucket-dir + term min-max
-      // pruning the block scan uses — one less corpus-sized table to write,
-      // store, and keep transactionally consistent.
-      val postings = postingsTable(spark, dir)
-        .filter($"shard".isin(wave: _*))
-
-      // exact rows/blocks from a scan of the two small metadata columns
-      // only (shard, n_docs — the agg used to reference length(<binary>)
-      // and so re-read every encoded payload byte just written, the
-      // whole table); `bytes` is the shard's on-disk postings size
-      // (shardBytes).
-      val statsF = Future(phaseTimed("manifest-stats") {
-        postings.groupBy($"shard").agg(
-          sum($"n_docs").as("rows"), count(lit(1)).as("blocks")).collect()
-          .map { r =>
-            val sh = r.getInt(0)
-            (sh, r.getLong(1), r.getLong(2), shardBytes(spark, dir, sh))
-          }
-      })
-
-      Await.result(paramsF, Duration.Inf)
-      Await.result(docstatsF, Duration.Inf)
-      Await.result(corpusF, Duration.Inf)
-      val stats = Await.result(statsF, Duration.Inf)
-
-      // commit markers — written LAST, after every write of the wave landed
-      val waveSec = (System.nanoTime() - t0) / 1e9
-      stats.toSeq.map { case (sh, rows, blocks, bytes) =>
-        ManifestRow(sh, rows, blocks, bytes,
-          committed = true,
-          s"shard=$sh wave=${wave.mkString(",")} params=$p " +
-            s"avgdl=$avgdl hotTerms=${hotDf.size} wave_sec=$waveSec")
-      }.toDS().write.mode(SaveMode.Append).parquet(manifestPath(dir))
-      built += wave.size
-    }
+    Await.result(paramsF, Duration.Inf)
+    for (wave <- todo.grouped(waveSize))
+      phaseTimed(s"wave ${wave.mkString(",")}")(writeShards(spark, dir,
+        tokenized.filter($"shard".isin(wave: _*)), wave, p, hotDf,
+        s"wave=${wave.mkString(",")} params=$p hotTerms=${hotDf.size}")((_, _) => avgdl))
     deleteDir(scratch, spark)
-    built
+    todo.size
+  }
+
+  /** Write `shards` — a build wave, or one streaming segment — from their
+    * tokenized rows (`doc_id`, `url`, `shard`, `dl`, `tokens`; every row in
+    * `shards`), and commit them. The one write sequence of the engine:
+    *   1. docstats (1 job), observed per shard for (n_docs, sum_dl);
+    *   2. `avgdl(n_docs, sum_dl)` of the written shards' totals gives the
+    *      avgdl their blocks are encoded with: a build passes its
+    *      corpus-global avgdl, an append its snapshot's totals plus the
+    *      segment's;
+    *   3. CONCURRENTLY, the corpus rows (1 job) and the postings (3 jobs
+    *      with AQE: the run shuffle and the bucket shuffle as map stages,
+    *      then the result stage that writes), observed per shard for
+    *      (rows, blocks);
+    *   4. the manifest commit rows (1 job), strictly LAST, after every other
+    *      write has landed: a crash anywhere before it leaves the shards
+    *      invisible to readers (which filter by committed shards), and the
+    *      resumed wave or replayed batch rewrites them (Iceberg analog:
+    *      REPLACE PARTITIONS + last commit). `bytes` is [[shardBytes]].
+    * Both observe nodes sit after their write's last exchange, in the
+    * result stage. Observed metrics are accumulators: result-task updates
+    * are applied once per partition, but a retried shuffle-map stage would
+    * apply its tasks' updates again and double-count n_docs / sum_dl —
+    * hence avgdl — or rows / blocks. `tokenized` is read twice (docstats
+    * and postings); a caller whose rows are costly to recompute persists
+    * them. */
+  private[graft] def writeShards(spark: SparkSession, dir: String,
+                                 tokenized: DataFrame, shards: Seq[Int],
+                                 p: BuildParams, hotDf: Map[String, Long],
+                                 lineage: String)(
+                                 avgdlOf: (Long, Long) => Double): Unit = {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val t0 = System.nanoTime()
+
+    val docsObs = Observation("docstats")
+    tokenized.select($"doc_id", $"url", $"dl".as("doclen"), $"shard")
+      .observe(docsObs, perShard(shards, "n_docs" -> lit(1L), "sum_dl" -> $"doclen"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("shard")
+      .parquet(s"$dir/docstats")
+    val docs = observed(docsObs)
+    val sumDl = shards.map(s => docs(s"sum_dl_$s")).sum
+    val avgdl = avgdlOf(shards.map(s => docs(s"n_docs_$s")).sum, sumDl)
+
+    // narrow, so the shuffle conf of the concurrent postings write below
+    // does not affect its plan
+    val corpusF = Future(
+      shards.map(s => CorpusShard(s, docs(s"n_docs_$s"), docs(s"sum_dl_$s"), avgdl))
+        .toDS().write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard")
+        .parquet(s"$dir/corpus"))
+
+    // Per-doc pre-merged (term, tf) postings — one shuffle row per DISTINCT
+    // term per doc, not per token (IndexBuild.docTermFreqs). There is
+    // deliberately NO corpus-wide (term, doc_id) aggregation: its group
+    // count ≈ corpus size degenerates hash agg into an external sort.
+    // sum_dl upper-bounds the posting count (the pre-merge only shrinks it).
+    val postingsObs = Observation("postings")
+    withShufflePartitions(spark, sumDl)(
+      IndexBuild.saltedRuns(IndexBuild.docTermFreqs(tokenized), hotDf, p, avgdl)
+        .withColumn("bucket",
+          pmod(xxhash64($"term"), lit(p.nTermBuckets)).cast("int"))
+        .repartition(col("shard"), col("bucket"))
+        // the partitioned write requires its input ordered by (shard,
+        // bucket) and adds that sort itself unless the existing ordering
+        // starts with it — a (term, …)-only sort would be replaced and
+        // the files left unsorted by term, defeating min-max pruning
+        .sortWithinPartitions($"shard", $"bucket", $"term", $"salt", $"block_id")
+        .observe(postingsObs, perShard(shards, "rows" -> $"n_docs", "blocks" -> lit(1L)))
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard", "bucket")
+        .parquet(s"$dir/postings"))
+    Await.result(corpusF, Duration.Inf)
+    val postings = observed(postingsObs)
+
+    val sec = (System.nanoTime() - t0) / 1e9
+    shards.map { s =>
+      ManifestRow(s, postings(s"rows_$s"), postings(s"blocks_$s"),
+        shardBytes(spark, dir, s), committed = true,
+        s"shard=$s $lineage avgdl=$avgdl write_sec=$sec")
+    }.toDS().write.mode(SaveMode.Append).parquet(manifestPath(dir))
+  }
+
+  /** Per-shard sums observed on a write: metric `<name>_<shard>` is the sum
+    * of `e` over the shard's rows, 0 for a shard without rows (coalesce: an
+    * empty sum is NULL). */
+  private def perShard(shards: Seq[Int], sums: (String, Column)*): Column = {
+    val ms = for (s <- shards; (name, e) <- sums)
+      yield coalesce(sum(when(col("shard") === s, e)), lit(0L)).as(s"${name}_$s")
+    struct(ms: _*).as("per_shard")
+  }
+
+  /** An observation's (Long) metrics. They arrive through the listener bus
+    * once the observed write has finished — normally within milliseconds;
+    * the bound turns a lost event into a failed (uncommitted, resumable)
+    * write instead of a hung one. */
+  private def observed(obs: Observation): Map[String, Long] = {
+    val r = scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(5, "min")).getStruct(0)
+    r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap
+  }
+
+  /** Run `write` with its shuffles sized ∝ data, whatever the session
+    * default: ~0.75M postings per partition at most (`postings` bounds
+    * them from above), rounded to the cores; the conf is restored after —
+    * a write-scoped setting, the moral equivalent of a per-job shuffle
+    * hint.
+    * Measured cliff this guards: 16 partitions × ~14M postings at 2.2M
+    * docs spilled the salted sort into a 47× blowup (1074 s vs a
+    * linear-profile 290 s). Scale-adaptive BOTH ways (the session value is
+    * a cluster-width default, not a data-derived one): RAISE above it, and
+    * DROP below it when the write is so small that the default would mean
+    * dozens of near-empty sort tasks of pure fixed overhead (one partition
+    * per ~50k postings, floor 1) — a small segment is one partition. The
+    * run-merge reduce holds only one (term, salt) group's decoded arrays at
+    * a time, so the 0.75M floor is scheduling granularity, not spill —
+    * finer partitions smooth the 2-waves-of-cores tail (measured below
+    * 16 → 32 partitions at 24M postings / local[8]). */
+  private def withShufflePartitions(spark: SparkSession, postings: Long)(
+      write: => Unit): Unit = {
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val rawParts = math.max(math.min(prevShuffle.toLong,
+      (postings + 49999) / 50000L), postings / 750000L)
+    // Straggler-tail guard (a data-derived count like 21 runs as waves
+    // of cores with a fractional last wave — e.g. 21 tasks on 8 cores =
+    // 8+8+5, idling 3/8 of the machine for a third of the sort): when
+    // the count exceeds the session's core count, round it UP to a
+    // multiple of it. Blocks are per-(term,salt) groups — partition
+    // count never changes content.
+    val cores = math.max(1, spark.sparkContext.defaultParallelism)
+    val balanced =
+      if (rawParts > cores) ((rawParts + cores - 1) / cores) * cores
+      else rawParts
+    val parts = math.max(1L, math.min(20000L, balanced)).toInt
+    // AQE partition coalescing must sit out the write: the run shuffle's
+    // rows are varbyte-COMPRESSED posting runs, so their byte size
+    // underrepresents reduce work (decode + merge + block encode
+    // of ~125 postings per wire byte) by ~2 orders of magnitude, and the
+    // byte-based advisory target coalesces the data-derived partition
+    // count ~8× below the cores (measured: postings-build 13.2 s
+    // coalesced vs 7.6 s at the derived count, 300k docs / local[8]).
+    // The count above IS the data-derived sizing AQE would be trying to
+    // recover.
+    val prevCoalesce =
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try write
+    finally {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle.toString)
+    }
   }
 
   /** Recursive delete via the Hadoop FS API (HDFS/object-store safe). The

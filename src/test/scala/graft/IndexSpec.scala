@@ -8,6 +8,7 @@ import graft.core.TextExtract
 import graft.data.Synth
 import graft.index.{BuildParams, IndexBuild, InvertedIndex, ManifestRow, ParityRefs}
 import graft.query.Bm25
+import graft.streaming.StreamingIndex
 
 /** End-to-end: build → query → oracle rank-identity → WAND identity →
   * resume round-trip → salting identity (SURVEY.md §5 plan). */
@@ -78,6 +79,12 @@ class IndexSpec extends SparkSpec {
     val row = manifest.head()
     assert(row.getAs[Long]("rows") > 0 && row.getAs[Long]("bytes") > 0)
     assert(row.getAs[String]("lineage").contains("shard="))
+    // a shard no doc hashes to commits a zero row, so its rebuild is a
+    // no-op too
+    val sparse = tmpDir("idx-empty-shards")
+    val few = params.copy(numShards = 16)
+    assert(InvertedIndex.build(spark, Synth.pages(spark, 3, Seed, 4), sparse, few) == 16)
+    assert(InvertedIndex.build(spark, Synth.pages(spark, 3, Seed, 4), sparse, few) == 0)
   }
 
   test("planted reference titles are retrieved as top hit") {
@@ -103,14 +110,24 @@ class IndexSpec extends SparkSpec {
   }
 
   test("build postings files are sorted by term") {
-    // a file's rows come back contiguous and in file order: each file is
-    // one split, read front to back
-    val files = spark.read.parquet(s"$indexDir/postings")
-      .select(input_file_name(), $"term").as[(String, String)].collect()
-      .groupBy(_._1)
-    assert(files.size > 1)
-    for ((f, rows) <- files; Array(a, b) <- rows.map(_._2).sliding(2))
-      assert(a <= b, s"$f: '$a' before '$b'")
+    // an appended segment's files come from the same writer and must be
+    // sorted too
+    val segDir = tmpDir("idx-segment")
+    val pages = Synth.pages(spark, 600, Seed, 4).collect()
+    InvertedIndex.build(spark, pages.take(300).toSeq.toDS(), segDir,
+      params.copy(numShards = 1))
+    StreamingIndex.appendSegment(spark, pages.drop(300).toSeq.toDS(), segDir, 0L, params)
+    for (postings <- Seq(s"$indexDir/postings",
+                         s"$segDir/postings/shard=${StreamingIndex.SegmentBase}")) {
+      // a file's rows come back contiguous and in file order: each file is
+      // one split, read front to back
+      val files = spark.read.parquet(postings)
+        .select(input_file_name(), $"term").as[(String, String)].collect()
+        .groupBy(_._1)
+      assert(files.size > 1, postings)
+      for ((f, rows) <- files; Array(a, b) <- rows.map(_._2).sliding(2))
+        assert(a <= b, s"$f: '$a' before '$b'")
+    }
   }
 
   test("driver-side term bucket is bit-identical to the Column form") {

@@ -13,8 +13,8 @@ import graft.query.Bm25
 import graft.streaming.StreamingIndex
 
 /** Spark-job budgets of the small paths, where per-job latency, not data
-  * volume, is the cost: a segment append, an index open, a served query and
-  * a forced block-max query. */
+  * volume, is the cost: a segment append, an index open, a small build, a
+  * served query and a forced block-max query. */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,7 +60,7 @@ class JobCountSpec extends SparkSpec {
     seen.slice(from + 1, to).map(_._2)
   }
 
-  test("a warm segment append runs at most 10 Spark jobs; open infers no schema") {
+  test("a warm segment append runs at most 9 Spark jobs; open infers no schema") {
     val dir = tmpDir("jobs-idx")
     val p = BuildParams(numShards = 2, blockSize = 16)
     val all = Synth.pages(spark, 400, 11L, 4).collect()
@@ -71,7 +71,7 @@ class JobCountSpec extends SparkSpec {
     val batch = all.drop(350).toSeq.toDS()
     val appendJobs = jobsOf(StreamingIndex.appendSegment(spark, batch, dir, 1L, p))
     info(s"append: ${appendJobs.size} jobs — ${appendJobs.mkString("; ")}")
-    assert(appendJobs.size <= 10,
+    assert(appendJobs.size <= 9,
       s"append ran ${appendJobs.size} jobs:\n${appendJobs.mkString("\n")}")
 
     // Bm25.open reads manifest, params and corpus with declared schemas:
@@ -81,6 +81,13 @@ class JobCountSpec extends SparkSpec {
     info(s"open: ${openJobs.size} jobs — ${openJobs.mkString("; ")}")
     assert(!openJobs.exists(_.startsWith("parquet at")) && openJobs.size <= 3,
       s"open ran ${openJobs.size} jobs:\n${openJobs.mkString("\n")}")
+  }
+
+  test("a build runs at most 11 Spark jobs") {
+    val jobs = jobsOf(InvertedIndex.build(spark, Synth.pages(spark, 300, 11L, 4),
+      tmpDir("jobs-build"), BuildParams(numShards = 2, blockSize = 16)))
+    info(s"build: ${jobs.size} jobs — ${jobs.mkString("; ")}")
+    assert(jobs.size <= 11, s"build ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 
   test("a warm served query with URLs runs at most 2 Spark jobs") {

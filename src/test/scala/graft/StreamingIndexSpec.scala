@@ -134,40 +134,87 @@ class StreamingIndexSpec extends SparkSpec {
     dir
   }
 
+  /** A 3-shard build written one shard per wave (three commits). */
+  private lazy val waved: String = {
+    val dir = tmpDir("waves-idx")
+    InvertedIndex.build(spark, Synth.pages(spark, 300, Seed, 4), dir,
+      BuildParams(numShards = 3, blockSize = 16, waveShards = 1))
+    dir
+  }
+
   private def manifestRows(dir: String): Seq[ManifestRow] =
     spark.read.parquet(s"$dir/manifest").as[ManifestRow].collect().toSeq
       .filter(_.committed)
 
   test("append bookkeeping: manifest and corpus rows equal the written tables") {
-    val dir = appended
     val segs = StreamingIndex.SegmentBase + 0 to StreamingIndex.SegmentBase + 2
-    val manifest = manifestRows(dir).map(r => r.partition_id -> r).toMap
-    assert(segs.forall(manifest.contains), s"segments missing: ${manifest.keys}")
-    val postings = spark.read.parquet(s"$dir/postings")
-      .groupBy($"shard").agg(sum($"n_docs"), count(lit(1)))
-      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val docstats = spark.read.parquet(s"$dir/docstats")
-      .groupBy($"shard").agg(count(lit(1)), sum($"doclen"))
-      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val corpus = spark.read.parquet(s"$dir/corpus").as[InvertedIndex.CorpusShard]
-      .collect().map(c => c.shard -> c).toMap
+    // build shards (one wave, or one wave per shard) and segments alike:
+    // the writer observes every total on its own writes
+    for ((dir, built, appends) <- Seq((appended, 0 until 2, segs),
+                                      (waved, 0 until 3, Seq.empty[Int]))) {
+      val shards = built ++ appends
+      val manifest = manifestRows(dir).map(r => r.partition_id -> r).toMap
+      assert(manifest.keySet == shards.toSet, s"$dir: committed ${manifest.keys}")
+      val postings = spark.read.parquet(s"$dir/postings")
+        .groupBy($"shard").agg(sum($"n_docs"), count(lit(1)))
+        .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val docstats = spark.read.parquet(s"$dir/docstats")
+        .groupBy($"shard").agg(count(lit(1)), sum($"doclen"))
+        .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val corpus = spark.read.parquet(s"$dir/corpus").as[InvertedIndex.CorpusShard]
+        .collect().map(c => c.shard -> c).toMap
 
-    // the zero-row segment commits zeros and writes no postings or docs
-    assert(postings.get(segs(1)).isEmpty && docstats.get(segs(1)).isEmpty)
-    for (s <- segs) {
-      val m = manifest(s)
-      assert((m.rows, m.blocks) == postings.getOrElse(s, (0L, 0L)), s"manifest of $s")
-      val c = corpus(s)
-      assert((c.n_docs, c.sum_dl) == docstats.getOrElse(s, (0L, 0L)), s"corpus of $s")
+      for (s <- shards) {
+        val m = manifest(s)
+        assert((m.rows, m.blocks) == postings.getOrElse(s, (0L, 0L)), s"manifest of $s")
+        val c = corpus(s)
+        assert((c.n_docs, c.sum_dl) == docstats.getOrElse(s, (0L, 0L)), s"corpus of $s")
+      }
+      // build shards are non-empty and carry the build's corpus-global avgdl
+      var (n, dl) = (0L, 0L)
+      for (s <- built) {
+        assert(manifest(s).rows > 0 && corpus(s).n_docs > 0, s"shard $s is empty")
+        n += corpus(s).n_docs; dl += corpus(s).sum_dl
+      }
+      for (s <- built)
+        assert(math.abs(corpus(s).avgdl_build - dl.toDouble / n) < 1e-12,
+          s"avgdl_build of $s: ${corpus(s).avgdl_build} vs ${dl.toDouble / n}")
+      // each segment is encoded with the running corpus avgdl: every shard
+      // committed before it plus itself
+      for (s <- appends) {
+        n += corpus(s).n_docs; dl += corpus(s).sum_dl
+        assert(math.abs(corpus(s).avgdl_build - dl.toDouble / n) < 1e-12,
+          s"avgdl_build of $s: ${corpus(s).avgdl_build} vs ${dl.toDouble / n}")
+      }
+      // the zero-row segment commits zeros and writes no postings or docs
+      if (appends.nonEmpty)
+        assert(postings.get(appends(1)).isEmpty && docstats.get(appends(1)).isEmpty)
     }
-    // each segment is encoded with the running corpus avgdl: every shard
-    // committed before it plus itself
-    var (n, dl) = (0L, 0L)
-    for (s <- 0 until 2) { n += corpus(s).n_docs; dl += corpus(s).sum_dl }
-    for (s <- segs) {
-      n += corpus(s).n_docs; dl += corpus(s).sum_dl
-      assert(math.abs(corpus(s).avgdl_build - dl.toDouble / n) < 1e-12,
-        s"avgdl_build of $s: ${corpus(s).avgdl_build} vs ${dl.toDouble / n}")
+  }
+
+  test("a failed append releases its cached batch and commits nothing") {
+    val pages = Synth.pages(spark, 100, Seed, 4).collect()
+    // two failures of the append's first write, the docstats write: at job
+    // set-up, when the batch is registered with the cache manager but its
+    // RDD is not built yet (a regular file where the docstats table goes),
+    // and inside its tasks, after the cached RDD is registered too (a page
+    // without a url fails the tokenizer)
+    val failures = Seq[String => Seq[graft.data.Page]](
+      dir => {
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/docstats"), Array[Byte](1))
+        pages.toSeq
+      },
+      _ => pages.toSeq :+ pages.head.copy(url = null))
+    val cache = spark.sharedState.cacheManager
+    for ((fail, i) <- failures.zipWithIndex) {
+      val dir = tmpDir(s"failed-append-$i")
+      val batch = fail(dir).toDS()
+      val cached = (spark.sparkContext.getPersistentRDDs.keySet, cache.isEmpty)
+      intercept[Exception](StreamingIndex.appendSegment(spark, batch, dir, 0L,
+        BuildParams(numShards = 1)))
+      assert((spark.sparkContext.getPersistentRDDs.keySet, cache.isEmpty) == cached,
+        s"failure $i left the tokenized batch cached")
+      assert(InvertedIndex.committedShards(spark, dir).isEmpty)
     }
   }
 
